@@ -201,8 +201,8 @@ def clips_df(spark, n: int, seed: int = 42, partitions: int = 32,
     from .schema import CLIPS_SCHEMA
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .functions.worker import tune_gc
-        tune_gc()
+        from .functions.worker import init_worker
+        init_worker()
         for b in batches:
             yield gen_rows(b["id"].to_numpy(), seed=seed,
                            max_dur_ms=max_dur_ms, with_audio=with_audio)

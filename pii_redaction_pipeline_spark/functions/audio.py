@@ -51,8 +51,8 @@ def decode_wav_bytes(payload: bytes) -> tuple[np.ndarray, int]:
 
 @pandas_udf(DECODE_STRUCT)
 def decode_verify(payload: pd.Series, codec: pd.Series) -> pd.DataFrame:
-    from .worker import tune_gc
-    tune_gc()
+    from .worker import init_worker
+    init_worker()
     out = {f.name: [] for f in DECODE_STRUCT.fields}
 
     def push(ok, n, sr, rms, peak, err, stage):

@@ -132,8 +132,8 @@ def _langid_row(text: str) -> tuple[str, float]:
 
 @F.pandas_udf(LANGID_STRUCT)
 def langid_udf(text: pd.Series) -> pd.DataFrame:
-    from .worker import tune_gc
-    tune_gc()
+    from .worker import init_worker
+    init_worker()
     model = _fasttext_model()
     if model is not None:
         return _predict_fasttext(model, text)

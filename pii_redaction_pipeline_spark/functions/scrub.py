@@ -45,8 +45,8 @@ def make_detect_and_scrub(with_fuzzy: bool = True,
     tests/test_spark_pipeline.py."""
     @pandas_udf(SCRUB_STRUCT)
     def _detect_and_scrub(transcript: pd.Series) -> pd.DataFrame:
-        from .worker import tune_gc
-        tune_gc()
+        from .worker import init_worker
+        init_worker()
         lookup = (fuzzy_map.value if isinstance(fuzzy_map, Broadcast)
                   else fuzzy_map)
         out = {k.name: [] for k in SCRUB_STRUCT.fields}

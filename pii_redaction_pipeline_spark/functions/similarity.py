@@ -60,8 +60,8 @@ def cosine_pair_udf():
     three interpreted HOF folds per pair."""
     @F.pandas_udf("double")
     def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        from .worker import tune_gc
-        tune_gc()
+        from .worker import init_worker
+        init_worker()
         if len(a) == 0:
             return pd.Series([], dtype="float64")
         A, B = _stack(a), _stack(b)
@@ -91,8 +91,8 @@ def spark_cosine_topk(emb: DataFrame, n_probes: int = 8, k: int = 5) -> DataFram
     q_norm = np.linalg.norm(Q, axis=1)
 
     def gen(batches):
-        from .worker import tune_gc
-        tune_gc()
+        from .worker import init_worker
+        init_worker()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -328,8 +328,8 @@ def _cell_assign_udf(bc: Broadcast | tuple):
     kernel (_rounded_centroid_dists)."""
     @F.pandas_udf("int")
     def cell(embs: pd.Series) -> pd.Series:
-        from .worker import tune_gc
-        tune_gc()
+        from .worker import init_worker
+        init_worker()
         C, c_ids = bc.value if isinstance(bc, Broadcast) else bc
         if len(embs) == 0:
             return pd.Series([], dtype="int32")
@@ -691,8 +691,8 @@ def spark_neardup_pairs(emb: DataFrame,
     ).select("vec_id", "embedding", "tb.t", "tb.b")
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .worker import tune_gc
-        tune_gc()
+        from .worker import init_worker
+        init_worker()
         empty = pd.DataFrame({"id_a": pd.Series([], dtype="int64"),
                               "id_b": pd.Series([], dtype="int64"),
                               "sim": pd.Series([], dtype="float64")})

@@ -173,8 +173,8 @@ def wer_counts_batch(references: list[str],
 
 @pandas_udf(WER_STRUCT)
 def wer_udf(reference: pd.Series, hypothesis: pd.Series) -> pd.DataFrame:
-    from .worker import tune_gc
-    tune_gc()
+    from .worker import init_worker
+    init_worker()
     out = wer_counts_batch(list(reference), list(hypothesis))
     return pd.DataFrame({
         "wer": out["wer"],

@@ -683,8 +683,8 @@ def clips_from_documents(spark, sf_dir, with_audio: bool = True,
 
     @F.pandas_udf(T.BinaryType())
     def gen_audio(doc_id: pd.Series, dur_ms: pd.Series) -> pd.Series:
-        from .functions.worker import tune_gc
-        tune_gc()
+        from .functions.worker import init_worker
+        init_worker()
         return pd.Series(
             [encode_wav(synth_pcm(int(i), int(d), 16000), 16000)
              for i, d in zip(doc_id, dur_ms)])

@@ -286,15 +286,15 @@ def test_worker_gc_tuning_applies_and_is_idempotent(monkeypatch):
     try:
         importlib.reload(w)
         monkeypatch.setenv("PII_SPARK_NO_WORKER_GC_TUNE", "1")
-        w.tune_gc()
+        w.init_worker()
         assert gc.get_threshold() == saved  # opted out
 
         importlib.reload(w)
         monkeypatch.delenv("PII_SPARK_NO_WORKER_GC_TUNE", raising=False)
-        w.tune_gc()
+        w.init_worker()
         assert gc.get_threshold() == (500_000, 100, 100)
         assert gc.get_freeze_count() > 0
-        w.tune_gc()  # idempotent, no error
+        w.init_worker()  # idempotent, no error
     finally:
         gc.set_threshold(*saved)
         gc.unfreeze()
