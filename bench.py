@@ -183,14 +183,10 @@ def main() -> None:
     canary_start = canary_walls(spark, clips_path)
 
     # headline: full filter+scrub pipeline (text hot path), result count
-    # forces full evaluation; noop-agg avoids collect cost skew.
-    # salt_partitions=None since round 3: task balance comes from scan
-    # splits; the full-table exchange measured 2.3x slower here and cost
-    # 0.13 of N->4N scaling efficiency (BENCH/BASELINE.md) -- salting is
-    # the opt-in remedy for non-byte-proportional skew only
+    # forces full evaluation; noop-agg avoids collect cost skew. Task
+    # balance comes from scan splits (BENCH/BASELINE.md)
     def run_pipeline():
-        out = apply_pipeline(clips, PipelineConfig(with_audio_verify=False,
-                                                   salt_partitions=None))
+        out = apply_pipeline(clips, PipelineConfig(with_audio_verify=False))
         out.groupBy("qa_status", "keep").count().collect()
 
     raw["pipeline_full_text"] = bench_runs(run_pipeline)

@@ -45,6 +45,25 @@ AUTO_FUZZY_VOCAB_MIN_BYTES = int(
                                  1 << 30))
 
 
+def fuzzy_vocab_auto(clips) -> tuple[bool, int | None]:
+    """The AUTO rule for the vocabulary-broadcast fuzzy path: on when the
+    plan's size estimate is at least AUTO_FUZZY_VOCAB_MIN_BYTES. Returns
+    (decision, estimated bytes or None when unknown).
+
+    An input without size stats (an RDD-backed DataFrame, a catalog table
+    that was never analyzed) reports spark.sql.defaultSizeInBytes, which
+    is Long.MaxValue unless set. That number says nothing about the
+    input, so any estimate at or above it counts as unknown and keeps the
+    per-row path, the faster one on ordinary inputs."""
+    spark = clips.sparkSession
+    est = int(clips._jdf.queryExecution().optimizedPlan().stats()
+              .sizeInBytes())
+    if est >= int(spark._jsparkSession.sessionState().conf()
+                  .defaultSizeInBytes()):
+        return False, None
+    return est >= AUTO_FUZZY_VOCAB_MIN_BYTES, est
+
+
 def make_zip(out: str = PKG_ZIP) -> str:
     pkg = REPO / "pii_redaction_pipeline_spark"
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
@@ -133,27 +152,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--no-audio-verify", action="store_true")
     ap.add_argument("--no-ppl", action="store_true")
     ap.add_argument(
-        "--salt-partitions", type=int, default=None,
-        help="opt-in salted repartition partition count (use ~8x total "
-             "cores) for corpora whose per-row cost is not "
-             "byte-proportional — hot-language model paths, mixed "
-             "MB-audio/tiny rows. Default off: balance comes from scan "
-             "splits with zero data movement. Validated in "
-             "BENCH/SALT_VALIDATION.md: 2.6-6.6x on a cost-skewed "
-             "fixture, pure overhead on a uniform one.")
-    ap.add_argument(
-        "--advise-salt", action="store_true",
-        help="before running, probe a sample of the input's scan "
-             "partitions (per-row scrub cost vs bytes; "
-             "functions/skew.py) and log whether --salt-partitions is "
-             "warranted. Advice only — the run proceeds either way.")
-    ap.add_argument(
-        "--advise-salt-sample", type=float, default=0.01,
-        help="sample fraction for --advise-salt (default 0.01 — the "
-             "probe runs a per-row scrub-cost UDF, so probing the FULL "
-             "input would roughly double job cost at corpus scale; "
-             "pass 1.0 to probe everything on small inputs)")
-    ap.add_argument(
         "--fuzzy-vocab-broadcast", dest="fuzzy_vocab_broadcast",
         action="store_true", default=None,
         help="precompute the fuzzy layer ONCE over the corpus's "
@@ -169,7 +167,8 @@ def main(argv: list[str] | None = None) -> None:
              f"(default {AUTO_FUZZY_VOCAB_MIN_BYTES} = 1 GiB), i.e. "
              "whenever the corpus is large enough to amortize the one "
              "extra vocabulary scan (SALT_VALIDATION.md runbook: ≈free "
-             "at 8M clips, one ~7 s vocab job at 32M).")
+             "at 8M clips, one ~7 s vocab job at 32M). An input without "
+             "size stats stays on the per-row path.")
     ap.add_argument(
         "--no-fuzzy-vocab-broadcast", dest="fuzzy_vocab_broadcast",
         action="store_false",
@@ -177,12 +176,12 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument(
         "--rewrite-layout", metavar="OUT_PATH", default=None,
         help="ONE-TIME offline layout remedy for cost-skewed inputs "
-             "(functions/skew.cost_balanced_rewrite): uniformly "
+             "(sources/tableio.cost_balanced_rewrite): uniformly "
              "hash-spread rows across many small files so every future "
              "scan split carries the same cost mixture, then exit "
              "(no pipeline run). Point later runs' --input at "
-             "OUT_PATH. Measured over the 0.8 scaling bar shuffle-free "
-             "where runtime salting ceilings at ~0.65 "
+             "OUT_PATH. Measured N->4N efficiency 0.69 -> 0.86 "
+             "shuffle-free with the vocab broadcast "
              "(BENCH/SALT_VALIDATION.md).")
     ap.add_argument(
         "--rewrite-files", type=int, default=None,
@@ -231,7 +230,7 @@ def main(argv: list[str] | None = None) -> None:
         clips = spark.read.table(args.input)  # Iceberg catalog table
 
     if args.rewrite_layout:
-        from pii_redaction_pipeline_spark.functions.skew import (
+        from pii_redaction_pipeline_spark.sources.tableio import (
             cost_balanced_rewrite,
         )
         n_files = cost_balanced_rewrite(clips, args.rewrite_layout,
@@ -241,44 +240,16 @@ def main(argv: list[str] | None = None) -> None:
         spark.stop()
         return
 
-    if args.advise_salt:
-        from pii_redaction_pipeline_spark.functions.skew import advise_salt
-        cores = spark.sparkContext.defaultParallelism
-        advice = advise_salt(clips, cores,
-                             sample_fraction=args.advise_salt_sample)
-        print("salt_advice: " + json.dumps(advice))
-        if advice["salt_recommended"] and not args.salt_partitions:
-            import warnings
-            warnings.warn(
-                f"per-partition cost CV² {advice['cost_cv2']} is "
-                f"{advice['ratio']}× the byte CV² — cost skew that scan "
-                f"splits cannot balance. Remedies, durable first: "
-                f"(1) one-time layout rewrite: job.py --input "
-                f"{args.input} --rewrite-layout OUT_PATH, then point "
-                f"runs at OUT_PATH (shuffle-free, measured ≥0.8 "
-                f"scaling); (2) if the skew is fuzzy-vocabulary cost, "
-                f"--fuzzy-vocab-broadcast removes the class at the "
-                f"root (AUTO-ON for inputs ≥ "
-                f"{AUTO_FUZZY_VOCAB_MIN_BYTES} est. bytes since round "
-                f"7; pass the flag to force it on smaller inputs); "
-                f"(3) per-run salt: --salt-partitions "
-                f"{advice['salt_partitions']} (8×cores — rescues "
-                f"stragglers but the exchange ceilings scaling at "
-                f"~0.65; see BENCH/SALT_VALIDATION.md).", RuntimeWarning)
-
     fuzzy_vocab = args.fuzzy_vocab_broadcast
     if fuzzy_vocab is None:  # AUTO: plan-stats size estimate, no extra job
-        est_bytes = int(clips._jdf.queryExecution().optimizedPlan()
-                        .stats().sizeInBytes())
-        fuzzy_vocab = est_bytes >= AUTO_FUZZY_VOCAB_MIN_BYTES
+        fuzzy_vocab, est_bytes = fuzzy_vocab_auto(clips)
         print(json.dumps({"fuzzy_vocab_broadcast_auto": fuzzy_vocab,
                           "input_est_bytes": est_bytes,
                           "threshold_bytes": AUTO_FUZZY_VOCAB_MIN_BYTES}))
 
     cfg = PipelineConfig(with_audio_verify=not args.no_audio_verify,
                          with_ppl=not args.no_ppl,
-                         fuzzy_vocab_broadcast=fuzzy_vocab,
-                         salt_partitions=args.salt_partitions)
+                         fuzzy_vocab_broadcast=fuzzy_vocab)
 
     def process(df):
         return apply_pipeline(df, cfg).drop("redactions")

@@ -1,27 +1,15 @@
 """Vectorized language-ID UDF (north rule: "fastText langid ... run as
 vectorized pandas/Arrow UDFs").
 
-Two backends behind one UDF:
-  - fastText, when $PII_SPARK_PROD_BACKENDS=1 (explicit opt-in), the
-    library is installed AND $FASTTEXT_LANGID_MODEL points at a model
-    file (e.g. lid.176.bin): loaded ONCE per Python worker
-    (module-global memo — workers are long-lived and reused across
-    tasks), batch-predicted per Arrow batch. This is the production
-    path on a real cluster. The opt-in gate exists so the correctness
-    harness and tests stay deterministic even on hosts that happen to
-    have the model env vars set: oracle rows (langid_confidence,
-    pipeline_grade_cols) mirror the stand-in scorer, and an ambient
-    env var silently swapping backends would make hash checks fail.
-  - the deterministic in-repo stand-in (core.langid's stopword-hit
-    scorer) otherwise — this sandbox has no fastText, and the DuckDB
-    oracle mirrors exactly this scorer.
+The scorer is core.langid's deterministic stopword-hit scorer, which the
+DuckDB oracle mirrors. The project ships no fastText model or library, so
+no model backend is wired in; a deployment with one swaps it in here,
+behind the same UDF and struct.
 
 Catalyst fuses this into the same ArrowEvalPython stage as the scrub and
 perplexity UDFs — zero extra Python round trips (plan-asserted in
 tests/test_plan_shapes.py).
 """
-
-import os
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -33,61 +21,6 @@ LANGID_STRUCT = T.StructType([
     T.StructField("lang", T.StringType()),
     T.StructField("lang_conf", T.DoubleType()),
 ])
-
-_FT_MODEL = None  # per-worker memo: load once, reuse across tasks/batches
-_GATE_WARNED: set[str] = set()  # one warning per env var per process
-
-
-def warn_gated_backend(model_env: str) -> None:
-    """One-time, per-process visibility for the opt-in gate: a deploy that
-    sets a model env var (FASTTEXT_LANGID_MODEL / KENLM_MODEL) but not
-    PII_SPARK_PROD_BACKENDS=1 would otherwise silently fall back to the
-    stand-in scorers — a quality downgrade with no error. Warn instead of
-    auto-enabling: the gate exists so correctness harnesses stay
-    deterministic on hosts with ambient model env vars."""
-    if model_env in _GATE_WARNED:
-        return
-    if (os.environ.get(model_env)
-            and os.environ.get("PII_SPARK_PROD_BACKENDS") != "1"):
-        import warnings
-        warnings.warn(
-            f"${model_env} is set but PII_SPARK_PROD_BACKENDS!=1 — using "
-            f"the deterministic stand-in scorer, NOT the production model. "
-            f"Set PII_SPARK_PROD_BACKENDS=1 (driver AND executors) to "
-            f"enable it.", RuntimeWarning, stacklevel=3)
-        _GATE_WARNED.add(model_env)
-
-
-def _fasttext_model():
-    """fastText model or None (library or model file absent)."""
-    global _FT_MODEL
-    if os.environ.get("PII_SPARK_PROD_BACKENDS") != "1":
-        warn_gated_backend("FASTTEXT_LANGID_MODEL")
-        return None  # explicit opt-in only — see module docstring
-    if _FT_MODEL is not None:
-        return _FT_MODEL if _FT_MODEL != "unavailable" else None
-    path = os.environ.get("FASTTEXT_LANGID_MODEL", "")
-    try:
-        import fasttext  # not in this container; present on prod images
-        if path and os.path.exists(path):
-            _FT_MODEL = fasttext.load_model(path)
-            return _FT_MODEL
-    except ImportError:
-        pass
-    _FT_MODEL = "unavailable"
-    return None
-
-
-def _predict_fasttext(model, texts: pd.Series) -> pd.DataFrame:
-    """One batched predict per Arrow batch (fastText is internally
-    vectorized over the list); labels come back as '__label__xx'."""
-    cleaned = [" ".join((t or "").split()) for t in texts]
-    labels, probs = model.predict(cleaned)
-    return pd.DataFrame({
-        "lang": [ls[0].replace("__label__", "") if ls else "und"
-                 for ls in labels],
-        "lang_conf": [float(ps[0]) if len(ps) else 0.0 for ps in probs],
-    })
 
 
 # Single-pass stand-in kernel (round 7): token → bitmask of the languages
@@ -134,9 +67,6 @@ def _langid_row(text: str) -> tuple[str, float]:
 def langid_udf(text: pd.Series) -> pd.DataFrame:
     from .worker import init_worker
     init_worker()
-    model = _fasttext_model()
-    if model is not None:
-        return _predict_fasttext(model, text)
     out = {"lang": [], "lang_conf": []}
     for t in text:
         lang, conf = _langid_row(t or "")

@@ -1,25 +1,15 @@
 """Char-bigram perplexity as a vectorized pandas UDF (KenLM-style score).
 
-Two backends behind one UDF:
-  - KenLM, when $PII_SPARK_PROD_BACKENDS=1 (explicit opt-in, same gate
-    as functions/langid.py — keeps the correctness harness deterministic
-    on hosts with ambient model env vars), the library is installed AND
-    $KENLM_MODEL points at an .arpa/.bin n-gram model: loaded once per
-    Python worker, scored per row with `model.perplexity` (KenLM's C++
-    scorer — the production path on a real cluster).
-  - the deterministic in-repo char-bigram table otherwise (this sandbox
-    has no KenLM; the table is built once at import from
-    core._build_ppl_table and shipped in the UDF closure). The batch
-    kernel makes one numpy pass per slice of 1024 rows of an Arrow
-    batch: code points → ids → whitespace collapse → bigram gather →
-    per-row sums. The only per-row Python left is str.lower() and len()
-    in one comprehension; the encode and the numpy calls run once per
-    slice.
+The scorer is the deterministic in-repo char-bigram table, built once at
+import from core._build_ppl_table and shipped in the UDF closure; the
+project ships no KenLM model or library. The batch kernel makes one
+numpy pass per slice of 1024 rows of an Arrow batch: code points → ids →
+whitespace collapse → bigram gather → per-row sums. The only per-row
+Python left is str.lower() and len() in one comprehension; the encode
+and the numpy calls run once per slice.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -28,28 +18,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql import types as T
 
 from .. import core
-
-_KENLM_MODEL = None  # per-worker memo
-
-
-def _kenlm_model():
-    global _KENLM_MODEL
-    if os.environ.get("PII_SPARK_PROD_BACKENDS") != "1":
-        from .langid import warn_gated_backend
-        warn_gated_backend("KENLM_MODEL")
-        return None  # explicit opt-in only — see module docstring
-    if _KENLM_MODEL is not None:
-        return _KENLM_MODEL if _KENLM_MODEL != "unavailable" else None
-    path = os.environ.get("KENLM_MODEL", "")
-    try:
-        import kenlm  # not in this container; present on prod images
-        if path and os.path.exists(path):
-            _KENLM_MODEL = kenlm.Model(path)
-            return _KENLM_MODEL
-    except ImportError:
-        pass
-    _KENLM_MODEL = "unavailable"
-    return None
 
 _V = len(core._PPL_VOCAB)  # OOV id
 _W = _V + 1                 # row stride of the flat bigram table
@@ -139,11 +107,6 @@ def _ppl_slice(texts: list) -> np.ndarray:
 def ppl_udf(transcript: pd.Series) -> pd.Series:
     from .worker import init_worker
     init_worker()
-    model = _kenlm_model()
-    if model is not None:
-        return pd.Series([
-            float(model.perplexity(" ".join((t or "").split())))
-            for t in transcript])
     return pd.Series(ppl_batch(transcript))
 
 

@@ -1,24 +1,25 @@
 """Composable DataFrame pipeline: each stage is df -> df (SURVEY §3.2).
 
 Stage order mirrors the reference 5-stage chain re-expressed Spark-first
-(src/pipeline.py:106-204): input table scan → salted repartition →
-quality/langid Column expressions → detect_and_scrub pandas UDF → grade
-CASE → (optional) audio decode-verify → results.
+(src/pipeline.py:106-204): input table scan → quality/langid Column
+expressions → detect_and_scrub pandas UDF → grade CASE → (optional)
+audio decode-verify → results.
 
 Scale notes (100 TB / 1000 executors):
-  - All logic is row-local → no shuffle anywhere in the hot path. The
-    OPTIONAL salted repartition (salt_partitions) is the only possible
-    exchange; default None. Prefer balance at SCAN granularity: with
-    128 MB row groups and spark.sql.files.maxPartitionBytes tuned to
-    ~(table bytes)/(8 × total cores), uniform-byte splits spread
-    heavy-tailed transcript lengths across tasks WITHOUT moving the
-    table through a shuffle — measured N→4N scaling efficiency at 8M
-    clips is 0.83 without the exchange vs 0.74 with it (the shuffle's
-    remote-fetch fraction is 1−1/W, so it taxes the bigger cluster
-    more). Enable salting when per-row cost is NOT byte-proportional
-    (hot-language buckets hitting a slow model path, MB-scale audio
-    rows mixed with tiny ones) — that is the skew the hash-salt fixes
-    and a byte-balanced scan cannot.
+  - All logic is row-local → no shuffle anywhere in the hot path. Balance
+    comes from the SCAN: with 128 MB row groups and
+    spark.sql.files.maxPartitionBytes tuned to ~(table bytes)/(8 × total
+    cores), uniform-byte splits spread heavy-tailed transcript lengths
+    across tasks without moving the table through a shuffle.
+  - Per-row cost that is NOT byte-proportional has two remedies, neither
+    a runtime exchange: the fuzzy vocab broadcast (fuzzy_vocab_broadcast)
+    makes the fuzzy layer a dict hit per token, which removes the
+    hot-vocabulary cost class at its root; for cost clustered in a few
+    input files, the one-time layout rewrite
+    (sources/tableio.cost_balanced_rewrite, `job.py --rewrite-layout`)
+    mixes rows across files once. On the skew fixture the broadcast alone
+    ran 3.1× faster than per-row fuzzy behind a salted exchange
+    (BENCH/SALT_VALIDATION.md).
   - `bytes` is projected into the decode stage only; with
     with_audio_verify=False Catalyst prunes it out of the scan entirely
     (check .explain → ReadSchema excludes bytes).
@@ -55,29 +56,7 @@ class PipelineConfig:
     # the 10^12-scale path, and the root fix for hot-vocabulary skew.
     # Note: makes apply_pipeline EAGER (one small Spark job up front).
     fuzzy_vocab_broadcast: bool = False
-    salt_partitions: int | None = None  # None → leave partitioning to AQE
     text_col: str = "transcript"
-
-
-def salted_repartition(df: DataFrame, n_partitions: int,
-                       key_col: str = "clip_id") -> DataFrame:
-    """Uniform size-balanced repartition: hash-salt on the row key, NOT on
-    content columns, so hot language buckets / long-transcript runs spread
-    evenly across tasks (north-rule skew handling; SURVEY §4.3). The salt
-    is deterministic (no rand()) so retried tasks stay idempotent.
-
-    Size n_partitions at ~8× the core count: the Python scrub stage has
-    heavy-tailed per-row cost, and coarse one-task-per-core partitioning
-    leaves cores idle behind stragglers (measured 2× at local[32] on 1M
-    clips: 43k → 85k clips/s going 1× → 8×).
-
-    Repartition directly on the key column (Spark hash-partitions its
-    value): every ROW lands independently, giving uniform byte balance
-    (plan-asserted in tests/test_plan_shapes.py). Do NOT pre-bucket with
-    pmod(hash(key), n) — repartition hashes the expression AGAIN, so n
-    pre-buckets collide into fewer partitions (measured: 16 salt values
-    → only 10 non-empty partitions, 6 idle tasks)."""
-    return df.repartition(n_partitions, F.col(key_col))
 
 
 def apply_pipeline(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -89,8 +68,6 @@ def apply_pipeline(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFram
     audio_on = cfg.with_audio_verify and "bytes" in df.columns
     set_arrow_batch(df.sparkSession,
                     ARROW_BATCH_AUDIO if audio_on else ARROW_BATCH_TEXT)
-    if cfg.salt_partitions:
-        df = salted_repartition(df, cfg.salt_partitions)
     df = with_quality(df, cfg.text_col)   # pure Column exprs (codegen)
     df = with_langid(df, cfg.text_col)    # pure Column exprs (codegen)
     df = drop_helper_cols(df)

@@ -748,7 +748,7 @@ def q_pipeline_full_vocab(spark, sf_dir):
 
 def q_pipeline_grade_cols(spark, sf_dir):
     """The FLAGSHIP pipeline's SQL-expressible grading columns, hash-
-    checked by the driver: runs the real apply_pipeline (salting, fused
+    checked against the DuckDB oracle: runs the real apply_pipeline (fused
     ArrowEvalPython stage, langid UDF) over the derived clips table and
     exposes quality + langid outputs. qa_status/keep carry word-path +
     fuzzy semantics (not SQL-expressible) and stay under the pytest

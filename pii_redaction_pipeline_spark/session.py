@@ -3,7 +3,8 @@
 Scale rationale (targets a 1000-executor cluster; tested on local[N]):
   - AQE on: runtime partition coalescing + skew-split for the heavy-tailed
     transcript-length distribution (north rule requires explicit skew
-    handling; AQE is the Catalyst half, salted repartition the job half).
+    handling; AQE is the Catalyst half, the fuzzy vocab broadcast and the
+    one-time layout rewrite the job half).
   - Arrow enabled + small maxRecordsPerBatch: clips rows can carry MB-scale
     audio ``bytes``; 10k-row default batches would OOM the Python workers
     (SURVEY §4.3). 256 rows/batch keeps worker RSS bounded while amortizing

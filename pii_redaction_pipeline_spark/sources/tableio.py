@@ -96,6 +96,37 @@ def with_bucket(df: DataFrame, n_buckets: int, key: str = "clip_id") -> DataFram
         BUCKET_COL, F.pmod(F.hash(F.col(key)), F.lit(n_buckets)).cast("int"))
 
 
+def cost_balanced_rewrite(clips: DataFrame, out_path: str,
+                          n_files: int | None = None,
+                          cores: int | None = None,
+                          files_per_core: int = 16) -> int:
+    """One-time offline layout rewrite for inputs whose per-row cost is
+    clustered in a few files (`job.py --rewrite-layout`): hash-spread the
+    rows uniformly across many small files, so every later scan split
+    carries the same cost mixture and the job stays shuffle-free
+    (BENCH/SALT_VALIDATION.md measured N→4N efficiency 0.69 → 0.86).
+
+    After a uniform shuffle on the row key every output file holds an
+    unbiased sample of the corpus: rows that sat in a few contiguous
+    files become ~n_hot / n_files rows in every file (test-pinned:
+    every file holds 0.5×-2× its even share of the hot rows).
+
+    `n_files` defaults to files_per_core × cores, fine enough that a
+    cluster 4× bigger still gets ≥4 waves of splits. Repartition is on
+    the key COLUMN (hash(col) once inside the exchange); repartitioning
+    on a precomputed pmod(hash(key), n) re-hashes the n bucket values
+    and collides them into fewer partitions (measured: 16 values → 10
+    non-empty partitions). Returns the file count written."""
+    if n_files is None:
+        if cores is None:
+            cores = clips.sparkSession.sparkContext.defaultParallelism
+        n_files = files_per_core * max(cores, 1)
+    key = "clip_id" if "clip_id" in clips.columns else clips.columns[0]
+    (clips.repartition(n_files, F.col(key))
+     .write.mode("overwrite").parquet(out_path))
+    return n_files
+
+
 class ResumableRun:
     """Checkpoint-resumable pipeline execution over bucketed input."""
 

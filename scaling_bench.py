@@ -42,18 +42,12 @@ ROUNDS = int(os.environ.get("SCALE_ROUNDS", "3"))
 # visible fraction of a ~10 s wall); at 8M+ clips one warm-up suffices —
 # the spawn/JIT seconds are ≪ the 100 s+ job wall
 WARMUPS = int(os.environ.get("SCALE_WARMUPS", "2"))
-# SCALE_SALT=1 re-adds the salted full-table repartition before the
-# Python stage. Default off: on this corpus (uniform ~600 B rows) task
-# balance comes from uniform-byte scan splits (many small files here;
-# 128 MB row groups + maxPartitionBytes at production scale), and the
-# shuffle is pure overhead that penalizes the BIGGER cluster — the
-# remote-fetch fraction is 1−1/W (7/8 at 8 executors vs 1/2 at 2), so
-# the exchange costs more exactly where the efficiency ratio divides.
-# Measured at 8M clips, 4N level: 53.2 s salted vs 45.6 s without; N
-# level 157.1 vs 150.4 → min-wall efficiency 0.74 salted, 0.83 without.
-# Salting stays for genuinely heavy-tailed corpora (MB-scale audio rows,
-# hot-language buckets) where per-task cost is not byte-proportional.
-SALT = os.environ.get("SCALE_SALT", "0") == "1"
+# No wide exchange before the Python stage: task balance comes from
+# uniform-byte scan splits (many small files here; 128 MB row groups +
+# maxPartitionBytes at production scale). A full-table exchange
+# penalizes the BIGGER cluster (remote-fetch fraction 1−1/W): a salted
+# repartition measured min-wall efficiency 0.74 vs 0.83 without at 8M
+# clips.
 # SCALE_INPUT overrides the materialized clips path (e.g. a finer-grained
 # file layout emulating production row-group granularity)
 INPUT = os.environ.get("SCALE_INPUT", "")
@@ -68,8 +62,8 @@ WARMUP_INPUT = os.environ.get("SCALE_WARMUP_INPUT", "")
 # SCALE_MAX_PARTITION_BYTES pins spark.sql.files.maxPartitionBytes —
 # production tunes it to ~(table bytes)/(8 × total cores) (pipeline.py);
 # the skew-fixture experiment (skew_fixture.py) pins it to the hot-file
-# size so every file is its own scan split and the salt-vs-scan-balance
-# comparison is not confounded by file packing
+# size so every file is its own scan split and the comparison is not
+# confounded by file packing
 MAX_PARTITION_BYTES = os.environ.get("SCALE_MAX_PARTITION_BYTES", "")
 # SCALE_FUZZY_BROADCAST=1 runs the pipeline in vocabulary-broadcast
 # fuzzy mode (PipelineConfig.fuzzy_vocab_broadcast): the fuzzy layer is
@@ -79,7 +73,7 @@ MAX_PARTITION_BYTES = os.environ.get("SCALE_MAX_PARTITION_BYTES", "")
 # This removes the one corpus-content-dependent per-row cost, so the
 # hot-vocabulary skew class measured in BENCH/SALT_VALIDATION.md cannot
 # arise: per-row cost is byte-proportional and plain byte-balanced scan
-# splits track it — no salt, no layout rewrite needed. The vocab job's
+# splits track it — no layout rewrite needed. The vocab job's
 # wall is INSIDE the timed run (it is part of the job).
 FUZZY_BROADCAST = os.environ.get("SCALE_FUZZY_BROADCAST", "0") == "1"
 
@@ -117,15 +111,13 @@ def run_once(workers: int, clips_path: str) -> float:
     what a real cluster job pays anyway."""
     from pii_redaction_pipeline_spark.pipeline import PipelineConfig, apply_pipeline
 
-    cores = workers * CORES_PER_WORKER
     spark = _cluster_session(workers)
 
     def job(path=clips_path):
         clips = spark.read.parquet(path)  # fresh plan per run
         out = apply_pipeline(clips, PipelineConfig(
             with_audio_verify=False,
-            fuzzy_vocab_broadcast=FUZZY_BROADCAST,
-            salt_partitions=cores * 8 if SALT else None))
+            fuzzy_vocab_broadcast=FUZZY_BROADCAST))
         out.groupBy("qa_status", "keep").count().collect()
 
     for _ in range(WARMUPS):
@@ -204,8 +196,7 @@ def main() -> None:
     bench_dir.mkdir(exist_ok=True)
     stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
     fstamp = datetime.now(timezone.utc).strftime("%Y%m%d-%H%M%S")
-    _job_head = ("salted repartition (8× total cores) → " if SALT
-                 else "scan-split-balanced input (no wide exchange) → ")
+    _job_head = "scan-split-balanced input (no wide exchange) → "
     if FUZZY_BROADCAST:
         _job_head = ("vocabulary-broadcast fuzzy (one JVM vocab job, "
                      "per-row fuzzy = broadcast dict hit) → " + _job_head)
@@ -251,9 +242,9 @@ Raw: `{json.dumps(results)}`
   Arrow IPC and Python workers all scale WITH the executor count, as
   they do on a real cluster — nothing is shared except the driver
   (which only schedules) and the box's memory bus.
-- The plan has no serial coordination: row-local pipeline, one explicit
-  salted exchange (8× tasks per core against heavy-tailed row cost),
-  one final tiny aggregation; AQE handles residual skew.
+- The plan has no serial coordination: row-local pipeline over
+  scan-split-balanced input, one final tiny aggregation; AQE handles
+  residual skew.
 - Residual sub-1.0 efficiency on this box is memory-bandwidth sharing:
   all {hi['cores']} cores sit on one physical socket pair, whereas 4N
   real machines would bring 4× the DRAM bandwidth. The pure-Python
@@ -266,7 +257,7 @@ python scaling_bench.py`.
     # one timestamped file pair per run — BENCH/BASELINE.md is curated
     # (hand-pooled min-walls across run sets) and must survive re-runs
     out = {"stamp": stamp, "sf": SF_DIR, "replicate": REPLICATE,
-           "salt": SALT, "fuzzy_broadcast": FUZZY_BROADCAST,
+           "fuzzy_broadcast": FUZZY_BROADCAST,
            "input": INPUT or "materialized",
            "warmup_input": WARMUP_INPUT or None,
            "levels": results, "pairs": pairs}

@@ -1,7 +1,7 @@
-"""Heavy-tailed (non-byte-proportional) skew fixture for the
-`salt_partitions` validation experiment (SCALE.md's claim: scan-split
-byte balance handles byte-proportional load; the salted repartition is
-the remedy when per-row COST is decoupled from row BYTES).
+"""Heavy-tailed (non-byte-proportional) skew fixture: a corpus whose
+per-row COST is decoupled from row BYTES, for comparing the skew
+remedies the job keeps (the fuzzy vocab broadcast and the one-time
+layout rewrite) against byte-balanced scan splits alone.
 
 Models the production scenario the reference's own QA data shows
 (heavy-tailed per-file processing times in
@@ -9,25 +9,25 @@ Models the production scenario the reference's own QA data shows
 corpus sorted by content class where a few files carry rows that are
 ~1800× more expensive per byte than the rest — here, "hot" rows whose
 transcripts are 100 globally-unique ≥12-char pseudo-words each, which
-drives the fuzzy detector's per-word Levenshtein sweep with zero memo
-reuse (measured 85 ms/row vs 0.05 ms/row for soup rows). That emulates
-a hot-language bucket hitting a slow model path: cost lives in content,
-not bytes, so uniform-byte scan splits CANNOT balance it — the 4 hot
-files become 4 straggler tasks at any cluster size, while
-salted_repartition spreads the hot rows row-by-row.
+drives the per-row fuzzy detector's Levenshtein sweep with zero memo
+reuse (measured 85 ms/row vs 0.05 ms/row for soup rows). Cost lives in
+content, not bytes, so uniform-byte scan splits cannot balance it on
+the per-row fuzzy path: the 4 hot files become 4 straggler tasks at any
+cluster size. The vocab broadcast makes hot rows cost what their bytes
+cost; `job.py --rewrite-layout` spreads them over every file.
 
 The unique-vocabulary trick exists because the in-repo fuzzy kernel
-memoizes per Python worker (a production fastText/KenLM slow path has no
-such memo): run the experiment with SCALE_WARMUPS=0, or a warm-up visit
-populates the memo and flattens the very skew being measured.
+memoizes per Python worker: run the experiment with SCALE_WARMUPS=0, or
+a warm-up visit populates the memo and flattens the very skew being
+measured.
 
 Usage:
     python skew_fixture.py [out_dir]          # writes the fixture
     # then, pinning each file to its own scan split (hot file ≈ 2 MB):
     SCALE_INPUT=<out>/clips SCALE_MAX_PARTITION_BYTES=8388608 \
-    SCALE_WARMUPS=0 SCALE_SALT=0 python scaling_bench.py
+    SCALE_WARMUPS=0 python scaling_bench.py                  # per-row
     SCALE_INPUT=<out>/clips SCALE_MAX_PARTITION_BYTES=8388608 \
-    SCALE_WARMUPS=0 SCALE_SALT=1 python scaling_bench.py
+    SCALE_WARMUPS=0 SCALE_FUZZY_BROADCAST=1 python scaling_bench.py
 """
 
 from __future__ import annotations

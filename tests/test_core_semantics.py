@@ -306,49 +306,6 @@ class TestWER:
         assert core.wer("", "word")["wer"] == float("inf")
 
 
-def test_model_swap_points_fall_back(monkeypatch, tmp_path):
-    """fastText/KenLM backends activate only on explicit opt-in
-    ($PII_SPARK_PROD_BACKENDS=1) AND when both the library and the model
-    file exist; in this container (no libs) the loaders must return None
-    even with the opt-in + env vars set, falling back to the in-repo
-    deterministic scorers the oracles mirror."""
-    from pii_redaction_pipeline_spark.functions import langid, perplexity
-
-    fake = tmp_path / "fake.bin"
-    fake.write_bytes(b"not a model")
-    monkeypatch.setenv("FASTTEXT_LANGID_MODEL", str(fake))
-    monkeypatch.setenv("KENLM_MODEL", str(fake))
-    monkeypatch.setenv("PII_SPARK_PROD_BACKENDS", "1")
-    langid._FT_MODEL = None
-    perplexity._KENLM_MODEL = None
-    try:
-        assert langid._fasttext_model() is None
-        assert perplexity._kenlm_model() is None
-    finally:
-        langid._FT_MODEL = None
-        perplexity._KENLM_MODEL = None
-
-
-def test_prod_backends_require_explicit_opt_in(monkeypatch):
-    """Without $PII_SPARK_PROD_BACKENDS=1 the loaders return None without
-    even consulting the model env vars — ambient env vars on a dev host
-    must not silently change what the oracle-checked queries compute."""
-    from pii_redaction_pipeline_spark.functions import langid, perplexity
-
-    monkeypatch.delenv("PII_SPARK_PROD_BACKENDS", raising=False)
-    monkeypatch.setenv("FASTTEXT_LANGID_MODEL", "/nonexistent")
-    monkeypatch.setenv("KENLM_MODEL", "/nonexistent")
-    # poison the memos: the gate must short-circuit BEFORE the memo check
-    langid._FT_MODEL = object()
-    perplexity._KENLM_MODEL = object()
-    try:
-        assert langid._fasttext_model() is None
-        assert perplexity._kenlm_model() is None
-    finally:
-        langid._FT_MODEL = None
-        perplexity._KENLM_MODEL = None
-
-
 def test_scrub_row_fuzzy_toggle():
     """with_fuzzy=False runs the exact layer only (the SQL-mirrorable
     subset behind the pipeline_exact_only oracle row): typos that the

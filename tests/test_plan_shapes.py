@@ -2,7 +2,6 @@
 the plan, not just hoped for (SURVEY §4.2)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from pii_redaction_pipeline_spark.queries import (
     q_pricing_summary,
@@ -114,38 +113,6 @@ def test_scrub_pipeline_python_stages_fused(spark, tmp_path):
     # WholeStageCodegen renders as "*(n)" stage prefixes in plan strings
     assert "*(" in plan
     assert plan.count("ArrowEvalPython") == 1  # scrub + ppl fused
-
-
-def test_salted_repartition_balances_heavy_tail(spark):
-    """North-rule skew handling, measured deterministically: 2% of clips
-    are 50x longer and clustered together in the input (a hot shard).
-    After the salted repartition every partition must carry a near-equal
-    share of total text BYTES (the Python stage's cost driver), so no
-    task becomes the straggler."""
-    import pandas as pd
-
-    from pii_redaction_pipeline_spark.pipeline import salted_repartition
-
-    rows = []
-    for i in range(4000):
-        body = "hot " * 500 if i < 400 else "cold text"  # clustered heavy head
-        rows.append((f"clip_{i:06d}", body))
-    pdf = pd.DataFrame(rows, columns=["clip_id", "transcript"])
-    clips = spark.createDataFrame(pdf).repartitionByRange(16, "clip_id")
-
-    # the hot shard concentrates bytes without salting...
-    before = (clips.groupBy(F.spark_partition_id().alias("p"))
-              .agg(F.sum(F.length("transcript")).alias("b")).collect())
-    b_sizes = [r["b"] for r in before]
-    assert max(b_sizes) / (sum(b_sizes) / len(b_sizes)) > 3.0
-
-    # ...and spreads evenly after
-    salted = salted_repartition(clips, 16)
-    after = (salted.groupBy(F.spark_partition_id().alias("p"))
-             .agg(F.sum(F.length("transcript")).alias("b")).collect())
-    a_sizes = [r["b"] for r in after]
-    assert len(a_sizes) == 16
-    assert max(a_sizes) / (sum(a_sizes) / len(a_sizes)) < 1.6
 
 
 def test_fuzzy_vocab_join_is_hash_not_nested_loop(spark):

@@ -1,8 +1,8 @@
-"""Salt-advice automation (functions/skew.py): the SCALE.md runbook rule
-— salt when per-partition COST variance far exceeds per-partition BYTE
-variance — exercised on a miniature of skew_fixture.py's workload (hot
-rows whose unique vocabulary defeats the fuzzy memo: cost lives in
-content, not bytes, so byte-balanced scan splits cannot see it)."""
+"""The skew remedies job.py keeps: the one-time layout rewrite
+(sources/tableio.cost_balanced_rewrite, `--rewrite-layout`) on a
+miniature of skew_fixture.py's workload (hot rows whose unique
+vocabulary defeats the fuzzy memo, clustered in one input file), and the
+vocabulary-broadcast fuzzy path with its AUTO rule."""
 
 import json
 import subprocess
@@ -12,21 +12,19 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from pii_redaction_pipeline_spark.functions.skew import (
-    SALT_CORE_MULTIPLE,
-    advise_salt,
-    partition_cost_profile,
-    salt_advice,
-)
+import job
 
 REPO = Path(__file__).resolve().parents[1]
 
 # miniature skew_fixture: hot rows carry unique 12-char pseudo-words
-# (fresh Levenshtein sweep per word, no memo reuse); soup rows repeat a
-# tiny cheap vocabulary
-HOT_WORDS_PER_ROW = 64  # ~55 ms/row: wide margin over per-worker init cost
-N_HOT = 24
+# (fresh Levenshtein sweep per word, no memo reuse) and all sit in one
+# file; soup rows repeat a tiny cheap vocabulary
+HOT_WORDS_PER_ROW = 4
 N_NORMAL = 240
+# enough hot rows that hash placement alone stays inside the rewrite
+# tests' band: the even share is 40 per file over 12 files, and 0.5×-2×
+# of it is more than 3 standard deviations away on either side
+N_HOT = 480
 
 
 def _clip_cols():
@@ -36,190 +34,61 @@ def _clip_cols():
             F.lit("wav").alias("codec"), F.lit(None).cast("binary").alias("bytes")]
 
 
-def _skewed_corpus(spark, tmp_path, n_hot=N_HOT, hot_words=HOT_WORDS_PER_ROW,
-                   tag="zq"):
+def _skewed_corpus(spark, tmp_path):
     out = tmp_path / "clips"
-    # normal rows: cheap REPEATED vocabulary padded to roughly hot-row
-    # byte size — the decoupling under test is cost-vs-bytes (unique
-    # vocab defeats the fuzzy memo at ~matched bytes, like the
-    # production fixture's "1,874× the per-row cost at ~2× the bytes")
     soup = " ".join(["the quick brown fox jumps over the lazy dog again "
                      "and again with spark rows and tables"] * 4)
     normal = spark.range(N_NORMAL).select(
         F.format_string("clip_%06d", F.col("id")).alias("clip_id"),
         F.lit(soup).alias("transcript"), *_clip_cols())
     normal.repartition(4).write.mode("overwrite").parquet(str(out))
-    hot = spark.range(n_hot).select(
+    hot = spark.range(N_HOT).select(
         F.format_string("hotclip_%06d", F.col("id")).alias("clip_id"),
         F.expr(
-            f"concat_ws(' ', transform(sequence(0, {hot_words - 1}), "
-            f"j -> concat('{tag}', lpad(cast(id as string), 6, '0'), 'x', "
-            f"lpad(cast(j as string), 3, '0'))))").alias("transcript"),
+            f"concat_ws(' ', transform(sequence(0, {HOT_WORDS_PER_ROW - 1}), "
+            "j -> concat('zq', lpad(cast(id as string), 6, '0'), 'x', "
+            "lpad(cast(j as string), 3, '0'))))").alias("transcript"),
         *_clip_cols())
     hot.repartition(1).write.mode("append").parquet(str(out))
     return spark.read.parquet(str(out))
 
 
-def test_salt_advice_rule_arithmetic(spark):
-    """Pure variance rule on synthetic per-bucket rows: cost skew at
-    uniform bytes → recommend 8×cores; byte-proportional cost (even when
-    both vary a lot) → no salt (scan splits already balance it)."""
-    uniform_bytes = [(b, 1000 if b else 100000, 50000) for b in range(8)]
-    df = spark.createDataFrame(
-        uniform_bytes, "bucket int, elapsed_ms long, n_bytes long")
-    advice = salt_advice(df, cores=16)
-    assert advice["salt_recommended"]
-    assert advice["salt_partitions"] == SALT_CORE_MULTIPLE * 16
-    assert advice["cost_cv2"] > 0.25 and advice["ratio"] > 4
-
-    proportional = [(b, 1000 * (b + 1), 50000 * (b + 1)) for b in range(8)]
-    df2 = spark.createDataFrame(
-        proportional, "bucket int, elapsed_ms long, n_bytes long")
-    advice2 = salt_advice(df2, cores=16)
-    assert not advice2["salt_recommended"]
-    assert advice2["salt_partitions"] is None
-    # same-shaped distributions → CV² ratio ≈ 1, far under the threshold
-    assert advice2["ratio"] < 1.5
-
-    # degenerate: one bucket → no signal, no crash
-    one = spark.createDataFrame([(0, 5, 5)],
-                                "bucket int, elapsed_ms long, n_bytes long")
-    assert not salt_advice(one, cores=16)["salt_recommended"]
+def _hot_rows_per_file(df):
+    """{input file: hot rows in it} (hot rows are the `hotclip_` ids)."""
+    hot = F.col("clip_id").startswith("hotclip_").cast("int")
+    return {r["f"]: r["hot"] for r in
+            df.groupBy(F.input_file_name().alias("f"))
+            .agg(F.sum(hot).alias("hot")).collect()}
 
 
-def test_salt_advice_on_lineage_shape(spark):
-    """ResumableRun.lineage() has no byte column — n_rows is the balance
-    proxy (documented in skew.py). Equal-row buckets with one hot bucket
-    → salt; nothing else about the schema is assumed."""
-    rows = [("r1", b, 100, 90, 0, 80000 if b == 3 else 900, "DONE")
-            for b in range(8)]
-    lineage = spark.createDataFrame(
-        rows, "run_id string, _bucket int, n_rows long, n_kept long, "
-              "n_errors long, elapsed_ms long, status string")
-    advice = salt_advice(lineage, cores=4, bytes_col="n_rows")
-    assert advice["salt_recommended"]
-    assert advice["salt_partitions"] == SALT_CORE_MULTIPLE * 4
-
-
-def test_partition_profile_detects_content_skew(spark, tmp_path):
-    """End-to-end probe on the miniature fixture: the hot file's scan
-    partition dominates elapsed_ms while its bytes stay comparable →
-    advise salt; a uniform corpus of the same shape → don't."""
-    clips = _skewed_corpus(spark, tmp_path)
-    # warm with a DIFFERENT corpus: amortizes worker spawn + core module
-    # init (lexicon/regex compile lands in some partition's first row)
-    # WITHOUT populating the fuzzy memo with the hot vocabulary — a
-    # same-corpus warm-up would flatten the very skew being measured
-    # (the skew_fixture SCALE_WARMUPS=0 trap)
-    warm = spark.range(64).select(
-        F.format_string("warm_%04d", F.col("id")).alias("clip_id"),
-        F.lit("warm worker text rows").alias("transcript")).repartition(8)
-    partition_cost_profile(warm).collect()
-    profile = partition_cost_profile(clips).collect()
-    assert len(profile) >= 3  # hot file + normal files, own partitions
-    by_cost = sorted(profile, key=lambda r: r["elapsed_ms"], reverse=True)
-    hot, rest = by_cost[0], by_cost[1:]
-    # cost concentration: the hot partition is >5× any normal one
-    assert all(hot["elapsed_ms"] > 5 * max(r["elapsed_ms"], 1) for r in rest)
-    # ...at byte parity within ~1 order of magnitude (cost ≠ bytes)
-    assert hot["n_bytes"] < 10 * max(r["n_bytes"] for r in rest)
-
-    advice = advise_salt(clips, cores=4)
-    assert advice["salt_recommended"], advice
-    assert advice["salt_partitions"] == SALT_CORE_MULTIPLE * 4
-
-    uniform = spark.range(N_NORMAL).select(
-        F.format_string("clip_%06d", F.col("id")).alias("clip_id"),
-        F.lit("plain cheap text row for every partition alike")
-        .alias("transcript")).repartition(5)
-    advice_u = advise_salt(uniform, cores=4)
-    assert not advice_u["salt_recommended"], advice_u
+def _assert_hot_rows_even(df, n_files):
+    """The rewrite's promise: every output file holds an unbiased sample,
+    so each file's hot rows lie within 0.5×-2× of the even share."""
+    per_file = _hot_rows_per_file(df)
+    assert len(per_file) == n_files, per_file
+    share = sum(per_file.values()) / n_files
+    assert all(0.5 * share <= h <= 2 * share
+               for h in per_file.values()), per_file
 
 
 def test_cost_balanced_rewrite_removes_skew(spark, tmp_path):
-    """The layout remedy (one-time uniform hash rewrite → every file
-    holds the same cost mixture): after rewriting the skewed corpus,
-    the per-partition cost profile must flatten enough that the advisor
-    no longer recommends salting — future runs are shuffle-free on the
-    ≥0.8 path (measured at scale in BENCH/SALT_VALIDATION.md).
-
-    Two honesty guards: (a) enough hot rows that the mixture argument
-    (≈ n_hot / n_files per file) is out of small-sample Poisson noise
-    — 120 hot rows over 12 files is λ=10, CV² ≈ 0.1; (b) the BEFORE
-    and AFTER measurements use TWIN corpora with disjoint hot
-    vocabularies ('ra' vs 'rb' tags), so the post-rewrite profile sees
-    never-probed words and cannot be flattened by fuzzy-memo hits from
-    the pre-rewrite probe (a production model slow path has no memo —
-    the skew_fixture SCALE_WARMUPS=0 trap, applied to test design)."""
-    from pii_redaction_pipeline_spark.functions.skew import (
+    """The layout remedy (one-time uniform hash rewrite): the skewed
+    corpus keeps every hot row in one file; after the rewrite every file
+    holds its even share of them, which is what makes every later scan
+    split carry the same cost mixture."""
+    from pii_redaction_pipeline_spark.sources.tableio import (
         cost_balanced_rewrite,
     )
 
-    (tmp_path / "a").mkdir()
-    (tmp_path / "b").mkdir()
-    clips_a = _skewed_corpus(spark, tmp_path / "a", n_hot=120,
-                             hot_words=24, tag="ra")
-    assert advise_salt(clips_a, cores=4)["salt_recommended"]  # before
+    clips = _skewed_corpus(spark, tmp_path)
+    assert max(_hot_rows_per_file(clips).values()) == N_HOT
 
-    clips_b = _skewed_corpus(spark, tmp_path / "b", n_hot=120,
-                             hot_words=24, tag="rb")
     out = tmp_path / "rewritten"
-    n_files = cost_balanced_rewrite(clips_b, str(out), n_files=12)
+    n_files = cost_balanced_rewrite(clips, str(out), n_files=12)
     assert n_files == 12
     rewritten = spark.read.parquet(str(out))
-    assert rewritten.count() == clips_b.count()
-
-    advice = advise_salt(rewritten, cores=4)
-    assert not advice["salt_recommended"], advice
-    # and the cost spread itself collapsed: max/median partition cost
-    # bounded (the skewed layout was >5× on one partition)
-    prof = partition_cost_profile(rewritten).collect()
-    costs = sorted(r["elapsed_ms"] for r in prof)
-    med = costs[len(costs) // 2]
-    assert costs[-1] <= 3 * max(med, 1), costs
-
-
-@pytest.mark.slow
-def test_job_advise_salt_cli(spark, tmp_path):
-    """job.py --advise-salt end-to-end (subprocess): prints the
-    salt_advice JSON line and the 8×cores warning, then completes the
-    run regardless (advice, not a gate)."""
-    corpus = tmp_path / "corpus"
-    clips = _skewed_corpus(spark, corpus)
-    n = clips.count()
-    out = tmp_path / "out"
-    env = {"PYTHONPATH": str(REPO)}
-    import os
-    env.update({k: os.environ[k] for k in
-                ("PATH", "JAVA_HOME", "HOME") if k in os.environ})
-    def run_job(out_dir):
-        return subprocess.run(
-            [sys.executable, str(REPO / "job.py"),
-             "--input", str(corpus / "clips"), "--output", str(out_dir),
-             "--buckets", "4", "--no-audio-verify", "--no-ppl",
-             # probe everything: the 0.01 production default would see
-             # ~3 of this miniature corpus's 264 rows
-             "--advise-salt", "--advise-salt-sample", "1.0"],
-            capture_output=True, text=True, timeout=420, cwd=str(REPO),
-            env=env)
-
-    r = run_job(out)
-    if r.returncode != 0:
-        # one retry for transient environment failures (JVM spawn under
-        # a loaded suite epoch); semantic assertions below stay hard
-        out = out.parent / "out2"
-        r = run_job(out)
-    assert r.returncode == 0, r.stderr[-2000:]
-    advice_lines = [ln for ln in r.stdout.splitlines()
-                    if ln.startswith("salt_advice: ")]
-    assert advice_lines, r.stdout[-2000:]
-    advice = json.loads(advice_lines[0].split("salt_advice: ", 1)[1])
-    assert advice["salt_recommended"]
-    assert "--salt-partitions" in r.stderr  # the RuntimeWarning remedy
-    info = json.loads(r.stdout.strip().splitlines()[-1])
-    assert info["processed_buckets"] == 4
-    results = spark.read.parquet(str(out / "results"))
-    assert results.count() == n
+    assert rewritten.count() == clips.count()
+    _assert_hot_rows_even(rewritten, 12)
 
 
 def _job_env():
@@ -253,7 +122,7 @@ def test_job_rewrite_layout_cli(spark, tmp_path):
     — rewrites the skewed corpus into n cost-mixed files, prints the
     JSON receipt, and exits WITHOUT running the pipeline."""
     corpus = tmp_path / "corpus"
-    clips = _skewed_corpus(spark, corpus, n_hot=120, hot_words=24, tag="rl")
+    clips = _skewed_corpus(spark, corpus)
     n = clips.count()
     out = tmp_path / "rewritten"
     r = _run_job(["--input", str(corpus / "clips"),
@@ -266,8 +135,8 @@ def test_job_rewrite_layout_cli(spark, tmp_path):
     assert len(list(out.glob("part-*.parquet"))) == 12
     # no pipeline artifacts: the flag is the offline remedy, not a run
     assert not (tmp_path / "out").exists()
-    # and the rewritten layout satisfies the advisor (cost mixed away)
-    assert not advise_salt(rewritten, cores=4)["salt_recommended"]
+    # and every file got its even share of the hot rows
+    _assert_hot_rows_even(rewritten, 12)
 
 
 @pytest.mark.slow
@@ -369,3 +238,23 @@ def test_job_fuzzy_vocab_broadcast_auto_default(spark, tmp_path):
                   extra_env={"PII_SPARK_FUZZY_VOCAB_AUTO_MIN_BYTES": "1"})
     assert r2.returncode == 0, r2.stderr[-2000:]
     assert "fuzzy_vocab_broadcast_auto" not in r2.stdout
+
+
+def test_fuzzy_vocab_auto_treats_missing_stats_as_unknown(spark, tmp_path,
+                                                          monkeypatch):
+    """An input without size stats reports spark.sql.defaultSizeInBytes
+    (Long.MaxValue) as its estimate. The AUTO rule must read that as
+    unknown and keep the per-row path, even at a 1-byte threshold; an
+    input with real stats is still decided by the threshold."""
+    monkeypatch.setattr(job, "AUTO_FUZZY_VOCAB_MIN_BYTES", 1)
+    rdd_backed = spark.createDataFrame(
+        spark.sparkContext.parallelize([("clip_000000", "we flew home")]),
+        "clip_id string, transcript string")
+    assert job.fuzzy_vocab_auto(rdd_backed) == (False, None)
+
+    rdd_backed.write.parquet(str(tmp_path / "clips"))
+    clips = spark.read.parquet(str(tmp_path / "clips"))
+    on, est = job.fuzzy_vocab_auto(clips)
+    assert on and 0 < est < 1 << 20
+    monkeypatch.setattr(job, "AUTO_FUZZY_VOCAB_MIN_BYTES", est + 1)
+    assert job.fuzzy_vocab_auto(clips) == (False, est)

@@ -28,7 +28,7 @@ N = 400
 @pytest.fixture(scope="module")
 def results(spark):
     clips = datagen.clips_df(spark, N, seed=42, partitions=8)
-    out = apply_pipeline(clips, PipelineConfig(salt_partitions=8))
+    out = apply_pipeline(clips, PipelineConfig())
     rows = {r["clip_id"]: r for r in out.collect()}
     assert len(rows) == N
     return rows
@@ -128,8 +128,7 @@ def test_audio_integrity_fuses_into_grade(spark):
         "clip_id string, bytes binary, sr_hz int, dur_ms int, "
         "codec string, transcript string")
     out = {r["clip_id"]: r
-           for r in apply_pipeline(df, PipelineConfig(with_ppl=False,
-                                                      salt_partitions=2)).collect()}
+           for r in apply_pipeline(df, PipelineConfig(with_ppl=False)).collect()}
     assert out["good"]["qa_status"] == "PASS" and out["good"]["keep"]
     for cid in ("corrupt", "nullbytes"):
         assert not out[cid]["decode_ok"], cid

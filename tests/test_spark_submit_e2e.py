@@ -59,10 +59,8 @@ def test_spark_submit_pyfiles_resume(spark, tmp_path):
     info1 = _submit(zip_path, clips_path, out, ["--max-buckets", "3"])
     assert info1["processed_buckets"] == 3
 
-    # second invocation resumes and finishes — with the opt-in salted
-    # repartition enabled via the CLI knob (plan change must not affect
-    # results or resume bookkeeping)
-    info2 = _submit(zip_path, clips_path, out, ["--salt-partitions", "16"])
+    # second invocation resumes and finishes
+    info2 = _submit(zip_path, clips_path, out, [])
     assert info2["skipped_buckets"] == 3
     assert info2["processed_buckets"] == 5
 
