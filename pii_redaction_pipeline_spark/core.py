@@ -576,19 +576,10 @@ def perplexity(text: str) -> float:
 # Full row pipeline (the oracle the Spark job must agree with)
 # --------------------------------------------------------------------------
 
-def scrub_row(text: str | None, with_fuzzy: bool = True,
-              fuzzy_lookup: dict | None = None) -> dict:
-    """UDF kernel: detect → redact → regex-scrub → verification rescan for
-    one transcript. This exact function runs inside the pandas UDF
-    (functions/scrub.py); everything else (quality, langid, grading CASE)
-    is Column expressions."""
-    if text is None:
-        text = ""
-    tokens, matches = detect_words(text, with_fuzzy, fuzzy_lookup)
-    scrubbed = redact_tokens(tokens, matches)
-    scrubbed, ext_counts = regex_scrub(scrubbed)
-    vt, _vh = verify_counts(scrubbed)
-    redactions = [
+def redaction_records(matches: list[Match]) -> list[dict]:
+    """One record per word-path match (reference text_redactor to_dict,
+    src/text_redactor.py:36-67)."""
+    return [
         {
             "original": m.text,
             "replacement": lx.CATEGORY_LABELS.get(m.category, f"[{m.category.upper()}]"),
@@ -598,9 +589,24 @@ def scrub_row(text: str | None, with_fuzzy: bool = True,
         }
         for m in matches
     ]
+
+
+def scrub_row(text: str | None, with_fuzzy: bool = True,
+              fuzzy_lookup: dict | None = None) -> dict:
+    """Row kernel: detect → redact → regex-scrub → verification rescan for
+    one transcript. The per-row oracle of the scrub UDFs: their batch
+    kernel (functions/scrub.scrub_batch) must equal it on every field,
+    and the redactions UDF on `redactions`; everything else (quality,
+    langid, grading CASE) is Column expressions."""
+    if text is None:
+        text = ""
+    tokens, matches = detect_words(text, with_fuzzy, fuzzy_lookup)
+    scrubbed = redact_tokens(tokens, matches)
+    scrubbed, ext_counts = regex_scrub(scrubbed)
+    vt, _vh = verify_counts(scrubbed)
     return {
         "scrubbed_text": scrubbed,
-        "redactions": redactions,
+        "redactions": redaction_records(matches),
         "n_exact": sum(1 for m in matches if not m.is_fuzzy),
         "n_fuzzy": sum(1 for m in matches if m.is_fuzzy),
         "ext_counts": ext_counts,

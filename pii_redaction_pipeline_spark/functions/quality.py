@@ -6,54 +6,46 @@ expressions" and "verification grade — CASE WHEN on thresholds, no UDF".
 Everything here stays inside whole-stage codegen (JVM, no Python).
 
 Semantics must match core.quality_metrics / core.langid / core.grade
-exactly — the pytest oracle enforces it. Tokenization is Java
-split('\\s+') with empties filtered, which equals Python str.split()
-on ASCII whitespace (datagen emits no exotic unicode whitespace).
+exactly — the pytest oracle enforces it. Tokenization is ONE Java
+split(lower(text), '\\s+') with empties filtered, which equals Python
+str.split() on ASCII whitespace (datagen emits no exotic unicode
+whitespace). Case mapping never creates or removes a Java `\\s` char
+([ \\t\\n\\x0B\\f\\r]), so the lowered tokens count the same words
+as the original text's. The symbol count deletes exactly those chars
+plus [A-Za-z0-9] with `translate`, no regex.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .. import lexicon as lx
 
-_TOKENS = "_q_tokens"
-
-
-def _tokens(text: Column) -> Column:
-    # array_remove == filter(x -> x != '') but stays in codegen (no
-    # interpreted lambdafunction on the per-row hot path)
-    return F.array_remove(F.split(F.coalesce(text, F.lit("")), r"\s+"), "")
+# the chars Java's [A-Za-z0-9\s] matches: translate() deletes each one
+_WORD_CHARS = ("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
+               "0123456789 \t\n\x0b\f\r")
 
 
 def with_quality(df, text_col: str = "transcript"):
     """word_cnt, distinct_ratio, symbol_density, quality_ok columns.
 
-    distinct_cnt lowercases the TEXT and re-splits instead of
-    transform(tokens, lower): `transform` with a lambda is an interpreted
-    HigherOrderFunction evaluated per token outside codegen (measured
-    ~2 s of the 1M-clip quality stage, round 7), while lower-then-split
-    is pure codegen. Equivalent because case mapping never creates or
-    consumes whitespace, so split(lower(text)) is elementwise
-    lower(split(text)) — and the distinct SET of lowered tokens is what
-    the metric needs (same Java lower as the lambda used)."""
+    Both counts come from one lower-then-split: `transform(tokens,
+    lower)` would be an interpreted HigherOrderFunction evaluated per
+    token outside codegen (measured ~2 s of the 1M-clip quality stage,
+    round 7), and word_cnt needs no original-case tokens. array_remove
+    == filter(x -> x != '') but stays in codegen too."""
     text = F.coalesce(F.col(text_col), F.lit(""))
-    df = df.withColumn(_TOKENS, _tokens(F.col(text_col)))
-    word_cnt = F.size(F.col(_TOKENS))
-    distinct_cnt = F.size(F.array_distinct(
-        F.array_remove(F.split(F.lower(text), r"\s+"), "")))
-    distinct_ratio = F.when(word_cnt > 0,
-                            distinct_cnt.cast("double") / word_cnt).otherwise(F.lit(0.0))
+    tokens = F.array_remove(F.split(F.lower(text), r"\s+"), "")
+    word_cnt = F.size(tokens)
+    distinct_ratio = F.when(
+        word_cnt > 0, F.size(F.array_distinct(tokens)).cast("double") / word_cnt
+    ).otherwise(F.lit(0.0))
     n_chars = F.length(text)
-    symbol_cnt = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
+    symbol_cnt = F.length(F.translate(text, _WORD_CHARS, ""))
     symbol_density = F.when(n_chars > 0,
                             symbol_cnt.cast("double") / n_chars).otherwise(F.lit(0.0))
-    df = (
-        df.withColumn("word_cnt", word_cnt)
-        .withColumn("distinct_ratio", distinct_ratio)
-        .withColumn("symbol_density", symbol_density)
-    )
+    df = df.withColumns({"word_cnt": word_cnt, "distinct_ratio": distinct_ratio,
+                         "symbol_density": symbol_density})
     return df.withColumn(
         "quality_ok",
         (F.col("word_cnt") >= lx.QUALITY_MIN_WORDS)
@@ -78,9 +70,8 @@ def with_langid(df, text_col: str = "transcript"):
     from .langid import langid_udf
 
     df = df.withColumn("_lid", langid_udf(F.col(text_col)))
-    return (df.withColumn("lang", F.col("_lid.lang"))
-            .withColumn("lang_conf", F.col("_lid.lang_conf"))
-            .drop("_lid"))
+    return df.withColumns({"lang": F.col("_lid.lang"),
+                           "lang_conf": F.col("_lid.lang_conf")}).drop("_lid")
 
 
 def with_grade(df):
@@ -116,14 +107,9 @@ def with_grade(df):
             .otherwise(text_status))
     else:
         status = text_status
-    df = df.withColumn("qa_status", status)
-    return df.withColumn(
-        "keep",
-        F.col("quality_ok")
-        & (F.col("lang_conf") >= lx.LANGID_MIN_CONFIDENCE)
-        & (F.col("qa_status") == "PASS"),
-    )
-
-
-def drop_helper_cols(df):
-    return df.drop(_TOKENS)
+    return df.withColumns({
+        "qa_status": status,
+        "keep": (F.col("quality_ok")
+                 & (F.col("lang_conf") >= lx.LANGID_MIN_CONFIDENCE)
+                 & (status == "PASS")),
+    })

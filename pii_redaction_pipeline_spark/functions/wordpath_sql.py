@@ -63,8 +63,8 @@ def assert_single_byte_tokens(texts, source: str = "corpus") -> None:
     while core/Spark count CODEPOINTS. A future corpus change that
     introduces non-ASCII tokens must fail here with the remedy, not
     silently diverge oracle hashes. Cheap: one C-level isascii() per
-    text. tests/test_queries_oracle.py runs it over every driver SF and
-    pins that a non-ASCII token trips it."""
+    text. register_oracle_tables runs it on every corpus it loads;
+    tests/test_queries_oracle.py pins that a non-ASCII token trips it."""
     for t in texts:
         if t and not t.isascii():
             bad = next((w for w in t.split() if not w.isascii()), t[:40])
@@ -75,6 +75,17 @@ def assert_single_byte_tokens(texts, source: str = "corpus") -> None:
                 f"keep the corpus ASCII or encode both levenshtein "
                 f"sides to one codepoint per word first, as "
                 f"_sql_wer_scrub_effect does.")
+
+
+def register_oracle_tables(con, sf_dir: str, tables) -> None:
+    """The oracle SQL's table loader: one DuckDB view per
+    `{sf_dir}/{table}.parquet`. The documents text feeds the wordpath and
+    wer oracles, so it must pass assert_single_byte_tokens first."""
+    for t in tables:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    if "documents" in tables:
+        texts = [r[0] for r in con.execute("SELECT text FROM documents").fetchall()]
+        assert_single_byte_tokens(texts, source=f"{sf_dir}/documents.parquet")
 
 _DUCK_TOKS_E = ("list_filter(string_split_regex(etext, '\\s+'), "
                 "x -> x <> '')")

@@ -23,8 +23,10 @@ Scale notes (100 TB / 1000 executors):
   - `bytes` is projected into the decode stage only; with
     with_audio_verify=False Catalyst prunes it out of the scan entirely
     (check .explain → ReadSchema excludes bytes).
-  - Arrow batches are capped (session.ARROW_BATCH_ROWS) so MB-scale audio
-    rows can't OOM Python workers.
+  - Arrow batches are sized per run (session.set_arrow_batch):
+    ARROW_BATCH_TEXT rows on the text path, where big batches amortize
+    the UDFs' per-batch work; ARROW_BATCH_AUDIO when audio bytes flow,
+    so MB-scale rows can't OOM Python workers.
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ from pyspark.sql import functions as F
 
 from .functions.audio import with_decode_verify
 from .functions.perplexity import with_ppl
-from .functions.quality import drop_helper_cols, with_grade, with_langid, with_quality
+from .functions.quality import with_grade, with_langid, with_quality
 from .functions.scrub import with_scrub
 
 
@@ -69,8 +71,7 @@ def apply_pipeline(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFram
     set_arrow_batch(df.sparkSession,
                     ARROW_BATCH_AUDIO if audio_on else ARROW_BATCH_TEXT)
     df = with_quality(df, cfg.text_col)   # pure Column exprs (codegen)
-    df = with_langid(df, cfg.text_col)    # pure Column exprs (codegen)
-    df = drop_helper_cols(df)
+    df = with_langid(df, cfg.text_col)    # pandas UDF, fused with scrub/ppl
     fmap = None
     if cfg.with_fuzzy and cfg.fuzzy_vocab_broadcast:
         from .functions.fuzzy_sql import collect_fuzzy_vocab_map

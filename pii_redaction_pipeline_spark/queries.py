@@ -907,7 +907,7 @@ def q_pipeline_exact_sql(spark, sf_dir):
     killer from round-1 lore): a whitespace-or-edge-anchored
     alternation matches exactly the COMPLETE \\s+-split tokens that
     equal a stopword, so the count equals the filter-lambda's hit count
-    token-for-token, and the ratio divides by the same size(_q_tokens)
+    token-for-token, and the ratio divides by the same token-count
     denominator (word_cnt). This gives a third execution engine for the
     exact layer: pandas-UDF kernel (pipeline_exact_only), DuckDB
     (shared oracle SQL), and pure Spark SQL — all three hash-compared
@@ -931,7 +931,7 @@ def q_pipeline_exact_sql(spark, sf_dir):
           .withColumn("verify_pii_count",
                       tx.rescan_count_col(F.col("scrubbed_text"))
                       .cast("bigint")))
-    df = with_quality(df, "etext")  # word_cnt == size(_q_tokens)
+    df = with_quality(df, "etext")  # word_cnt: the \s+-split token count
     scores = []
     for lang in lx.LANG_PRIORITY:
         # complete-token equality as a regex: start-or-whitespace, the

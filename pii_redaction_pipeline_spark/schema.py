@@ -26,10 +26,11 @@ REDACTION_SCHEMA = T.StructType([
     T.StructField("is_fuzzy", T.BooleanType(), True),
 ])
 
-# Return struct of the detect_and_scrub pandas UDF (core.scrub_row).
+# Return struct of the detect_and_scrub pandas UDF: core.scrub_row's
+# fields, ext_counts flattened, without `redactions` (a UDF of its own,
+# functions/scrub.make_scrub_redactions, that runs only when read).
 SCRUB_STRUCT = T.StructType([
     T.StructField("scrubbed_text", T.StringType(), True),
-    T.StructField("redactions", T.ArrayType(REDACTION_SCHEMA), True),
     T.StructField("n_exact", T.IntegerType(), True),
     T.StructField("n_fuzzy", T.IntegerType(), True),
     T.StructField("n_email", T.IntegerType(), True),

@@ -1,6 +1,8 @@
 """Physical-plan assertions: the shapes that matter at 100 TB must be in
 the plan, not just hoped for (SURVEY §4.2)."""
 
+import re
+
 import pytest
 
 from pii_redaction_pipeline_spark.queries import (
@@ -97,22 +99,54 @@ def test_dedup_similarity_no_interpreted_lambdas_or_cartesian(spark):
     assert "CartesianProduct" not in plan_of(q_jaccard_pairs(spark, SF))
 
 
-def test_scrub_pipeline_python_stages_fused(spark, tmp_path):
-    """Quality/langid/grade stay JVM-side (WholeStageCodegen over the
-    parquet scan); Catalyst fuses the scrub and ppl pandas UDFs into a
-    single ArrowEvalPython stage — one Python round trip total."""
+def _clips_parquet(spark, tmp_path):
     from pii_redaction_pipeline_spark import datagen
-    from pii_redaction_pipeline_spark.pipeline import PipelineConfig, apply_pipeline
 
     src = str(tmp_path / "clips")
     datagen.clips_df(spark, 10, seed=1, partitions=1,
                      with_audio=False).write.parquet(src)
-    clips = spark.read.parquet(src)
-    out = apply_pipeline(clips, PipelineConfig(with_audio_verify=False))
+    return spark.read.parquet(src)
+
+
+def _python_udfs(plan: str) -> list[str]:
+    """Names of the UDFs each ArrowEvalPython node evaluates."""
+    return [re.findall(r"(\w+)\(", line.split("ArrowEvalPython [", 1)[1]
+                       .split("]", 1)[0])
+            for line in plan.splitlines() if "ArrowEvalPython [" in line]
+
+
+def test_scrub_pipeline_python_stages_fused(spark, tmp_path):
+    """Quality and grade stay JVM-side (WholeStageCodegen over the
+    parquet scan); Catalyst fuses the langid, scrub and ppl pandas UDFs
+    (and the redactions UDF, when `redactions` is kept) into a single
+    ArrowEvalPython stage — one Python round trip total."""
+    from pii_redaction_pipeline_spark.pipeline import PipelineConfig, apply_pipeline
+
+    out = apply_pipeline(_clips_parquet(spark, tmp_path),
+                         PipelineConfig(with_audio_verify=False))
     plan = plan_of(out)
     # WholeStageCodegen renders as "*(n)" stage prefixes in plan strings
     assert "*(" in plan
-    assert plan.count("ArrowEvalPython") == 1  # scrub + ppl fused
+    assert plan.count("ArrowEvalPython") == 1
+
+
+def test_dropped_redactions_never_run(spark, tmp_path):
+    """`redactions` is its own UDF column: once the caller drops it (job.py,
+    streaming, the benchmark), Catalyst prunes the UDF and the one Python
+    stage runs exactly langid, scrub and ppl; deid_json_df keeps it."""
+    from pii_redaction_pipeline_spark.pipeline import (
+        PipelineConfig,
+        apply_pipeline,
+        deid_json_df,
+    )
+
+    out = apply_pipeline(_clips_parquet(spark, tmp_path),
+                         PipelineConfig(with_audio_verify=False))
+    assert _python_udfs(plan_of(out.drop("redactions"))) == [
+        ["langid_udf", "_detect_and_scrub", "ppl_udf"]]
+    deid = [u for node in _python_udfs(plan_of(deid_json_df(out)))
+            for u in node]
+    assert "_scrub_redactions" in deid
 
 
 def test_fuzzy_vocab_join_is_hash_not_nested_loop(spark):

@@ -17,10 +17,12 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 @pytest.fixture(scope="module")
 def duck():
+    from pii_redaction_pipeline_spark.functions.wordpath_sql import (
+        register_oracle_tables,
+    )
+
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    register_oracle_tables(con, SF_DIR, TABLES)
     return con
 
 
@@ -110,22 +112,33 @@ def test_testdata_tokens_are_single_byte():
     oracles assume ASCII-only tokens (byte-based vs codepoint-based
     levenshtein). Every driver SF's documents text must pass the guard,
     and a non-ASCII token must trip it with the remedy in the message."""
-    import duckdb
-    import pytest as _pytest
-
     from pii_redaction_pipeline_spark.functions.wordpath_sql import (
         assert_single_byte_tokens,
+        register_oracle_tables,
     )
 
     for sf in ("sf0.001", "sf0.01", "sf0.1"):
         con = duckdb.connect()
-        texts = [r[0] for r in con.sql(
-            "SELECT coalesce(text,'') FROM "
-            f"read_parquet('/root/testdata/{sf}/documents.parquet')"
-        ).fetchall()]
+        register_oracle_tables(con, os.path.join(os.path.dirname(SF_DIR), sf),
+                               ["documents"])
         con.close()
-        assert_single_byte_tokens(texts, source=sf)
 
-    with _pytest.raises(AssertionError, match="non-ASCII token 'café'"):
+    with pytest.raises(AssertionError, match="non-ASCII token 'café'"):
         assert_single_byte_tokens(["plain ok", "un café noir"],
                                   source="synthetic")
+
+
+def test_oracle_loader_rejects_non_ascii_tokens(tmp_path):
+    """The oracle's table loader checks the corpus it loads, whatever the
+    SF: a documents table with one non-ASCII token must not load."""
+    from pii_redaction_pipeline_spark.functions.wordpath_sql import (
+        register_oracle_tables,
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT * FROM (VALUES (1, 'plain ok'), (2, NULL), "
+        "(3, 'un café noir')) v(doc_id, text)) "
+        f"TO '{tmp_path}/documents.parquet' (FORMAT parquet)")
+    with pytest.raises(AssertionError, match="non-ASCII token 'café'"):
+        register_oracle_tables(con, str(tmp_path), ["documents"])

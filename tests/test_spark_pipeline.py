@@ -161,6 +161,67 @@ def test_manifest_and_report(spark):
     assert 0 < rep["n_kept"] < 100
 
 
+def test_deid_json_redactions_match_core(spark):
+    """`redactions` comes from its own UDF, run only when a consumer reads
+    it: deid_json_df's records and processing_report's category chart
+    must still be core.scrub_row's, fuzzy matches and NULLs included."""
+    import json
+
+    from pii_redaction_pipeline_spark.pipeline import deid_json_df
+    from pii_redaction_pipeline_spark.report import processing_report
+
+    clips = datagen.clips_df(spark, 60, seed=7, partitions=2,
+                             with_audio=False)
+    extra = spark.createDataFrame(
+        [("x1", None), ("x2", "huston and febuary in New York City")],
+        "clip_id string, transcript string")
+    clips = clips.select("clip_id", "transcript").unionByName(extra)
+    res = apply_pipeline(clips, PipelineConfig(with_audio_verify=False,
+                                               with_ppl=False))
+    texts = {r["clip_id"]: r["transcript"] for r in clips.collect()}
+    n_red = 0
+    for r in deid_json_df(res).collect():
+        want = core.scrub_row(texts[r["clip_id"]])["redactions"]
+        assert json.loads(r["deid_json"])["redactions"] == want, r["clip_id"]
+        n_red += len(want)
+    assert n_red > 0
+    assert "PII BY CATEGORY" in processing_report(res)
+
+
+def test_quality_columns_equal_the_two_split_forms(spark):
+    """with_quality splits each text once (lower, then split) and counts
+    symbols with translate(); the forms it replaced split twice and ran
+    regexp_replace. All three metrics must agree on Java-\\s and
+    non-Java whitespace, case mappings that lengthen (İ), astral code
+    points and NULL."""
+    from pyspark.sql import functions as F
+
+    from pii_redaction_pipeline_spark.functions.quality import with_quality
+
+    texts = [None, "", " ", "a\x0bb\fc\rd\te\nf", "A a\u00a0a \u2028 B b",
+             "\u0130stanbul \u0130STANBUL istanbul", "\u3000x\u3000 x",
+             "\U0001F600 \U0001F600 ok!", "$$ %% 12 ab_cd", "K k \u212a",
+             "x\x1cy\x85z"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "id int, text string")
+    text = F.coalesce(F.col("text"), F.lit(""))
+    toks = F.array_remove(F.split(text, r"\s+"), "")
+    word_cnt = F.size(toks)
+    distinct = F.size(F.array_distinct(
+        F.array_remove(F.split(F.lower(text), r"\s+"), "")))
+    n_chars = F.length(text)
+    symbols = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
+    old = df.select(
+        "id", word_cnt.alias("word_cnt"),
+        F.when(word_cnt > 0, distinct.cast("double") / word_cnt)
+        .otherwise(F.lit(0.0)).alias("distinct_ratio"),
+        F.when(n_chars > 0, symbols.cast("double") / n_chars)
+        .otherwise(F.lit(0.0)).alias("symbol_density"))
+    cols = ["id", "word_cnt", "distinct_ratio", "symbol_density"]
+    new = with_quality(df, "text").select(cols)
+    assert sorted(new.collect()) == sorted(old.collect())
+
+
 def test_null_transcript_rows(spark):
     """NULL transcripts flow through like the reference's continue-on-error
     rows: scrub yields empty text, quality drops them, nothing throws."""
@@ -240,6 +301,7 @@ def test_fuzzy_map_and_centroids_ship_via_broadcast(spark):
 
     from pii_redaction_pipeline_spark.functions.scrub import (
         make_detect_and_scrub,
+        make_scrub_redactions,
         with_scrub,
     )
     from pii_redaction_pipeline_spark.functions.similarity import (
@@ -250,18 +312,20 @@ def test_fuzzy_map_and_centroids_ship_via_broadcast(spark):
     # adversarially large map: every token fuzzy-matches something
     big_map = {f"tok{i:06d}": ("houston", "city", 1) for i in range(50_000)}
     bc = spark.sparkContext.broadcast(big_map)
-    sz_bc = len(dumps(make_detect_and_scrub(True, bc).func))
-    sz_dict = len(dumps(make_detect_and_scrub(True, big_map).func))
-    assert sz_dict > 500_000        # the closure-pickle trap, for scale
-    assert sz_bc < 50_000, sz_bc    # broadcast handle: O(1) closure
+    for make in (make_detect_and_scrub, make_scrub_redactions):
+        sz_bc = len(dumps(make(True, bc).func))
+        sz_dict = len(dumps(make(True, big_map).func))
+        assert sz_dict > 500_000        # the closure-pickle trap, for scale
+        assert sz_bc < 50_000, sz_bc    # broadcast handle: O(1) closure
 
     # with_scrub wraps a plain dict transparently (callers don't change)
     df = spark.createDataFrame([("a", "we met in huston",)],
                                "clip_id string, transcript string")
     out = with_scrub(df, fuzzy_map=dict(big_map, **{
         "huston": ("houston", "city", 1)}))
-    row = out.select("scrubbed_text", "n_fuzzy").collect()[0]
+    row = out.select("scrubbed_text", "n_fuzzy", "redactions").collect()[0]
     assert row["n_fuzzy"] == 1 and "[CITY]" in row["scrubbed_text"]
+    assert [r["original"] for r in row["redactions"]] == ["huston"]
 
     # IVF centroid matrix: production-scale K x D must not ride per-task
     C = np.zeros((4096, 64), dtype=np.float64)
