@@ -218,7 +218,6 @@ def main(argv: list[str] | None = None) -> None:
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.adaptive.skewJoin.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
              .getOrCreate())
 
     # the archives spark-submit actually shipped (if any) must match source

@@ -10,7 +10,11 @@ Scale notes (100 TB / 1000 executors):
     comes from the SCAN: with 128 MB row groups and
     spark.sql.files.maxPartitionBytes tuned to ~(table bytes)/(8 × total
     cores), uniform-byte splits spread heavy-tailed transcript lengths
-    across tasks without moving the table through a shuffle.
+    across tasks without moving the table through a shuffle. The one
+    exchange is at the sink, after all pipeline work:
+    tableio.write_partitioned rebalances result rows by bucket so the
+    partitioned write makes one file per bucket, not one per scan split
+    per bucket.
   - Per-row cost that is NOT byte-proportional has two remedies, neither
     a runtime exchange: the fuzzy vocab broadcast (fuzzy_vocab_broadcast)
     makes the fuzzy layer a dict hit per token, which removes the

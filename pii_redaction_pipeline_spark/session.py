@@ -52,7 +52,6 @@ def get_spark(app: str = "pii_scrub", master: str | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -13,6 +13,12 @@ Design (Iceberg-first, parquet fallback — SURVEY §7.3.4):
     `writeTo(...).overwritePartitions()` (atomic snapshot per run); on the
     parquet fallback it is dynamic partition overwrite — a re-processed
     bucket replaces its own files only.
+  - The parquet sink is the job's one exchange: a REBALANCE on `bucket`
+    after all Python work, so each bucket reaches one writer. Without it
+    every scan task opens a file in every bucket it holds rows of —
+    (scan splits × buckets) files, and on a local filesystem without
+    Hadoop's native library each created file forks a process. The
+    pipeline before the sink stays row-local.
   - After the results job commits, one lineage row per completed bucket is
     appended (run_id, bucket, n_rows, n_kept, n_errors, elapsed_ms, DONE).
   - Resume = anti-join: buckets with a DONE lineage row are skipped; only
@@ -28,7 +34,6 @@ from __future__ import annotations
 
 import time
 import uuid
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,14 +61,38 @@ def write_partitioned(df: DataFrame, target: str, spark: SparkSession) -> None:
     """Partition-overwrite write seam: Iceberg `overwritePartitions()`
     (atomic snapshot per run) when a catalog is configured and `target`
     is a table name; parquet dynamic partition overwrite otherwise —
-    same contract: a re-processed bucket replaces only its own rows."""
+    same contract: a re-processed bucket replaces only its own rows.
+
+    The parquet branch first rebalances the rows by bucket. One hash
+    exchange after all Python work sends each bucket's rows to one task,
+    and AQE coalesces small partitions and splits oversized ones to
+    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, so a run writes
+    about one file per bucket instead of one per scan split per bucket
+    (audio_job, 1000 clips in 4 splits × 64 buckets: 250 → 64 files).
+    On Iceberg the table's `write.distribution-mode` does this."""
     if "/" not in target and iceberg_available(spark):
         df.writeTo(target).overwritePartitions()
     else:
-        (df.write.mode("overwrite")
+        (df.hint("rebalance", BUCKET_COL)
+         .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(BUCKET_COL)
          .parquet(target))
+
+
+def child_path(root: str, name: str) -> str:
+    """`root`/`name` for a local path or a URI. pathlib would turn
+    `file:///x` into `file:/x` and `s3a://b/x` into `s3a:/b/x`."""
+    return f"{root.rstrip('/')}/{name}"
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence through the session's Hadoop FileSystem, so a URI
+    (`file://`, `s3a://`, `hdfs://`) is checked where Spark writes it."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
 
 
 def append_metrics(metrics: DataFrame, out_dir: str, source: str,
@@ -74,9 +103,7 @@ def append_metrics(metrics: DataFrame, out_dir: str, source: str,
     keeps the metrics table schema stable as new monitors are added —
     production runbooks (SCALE.md: "monitor candidate volume and raise
     N_IVF_BITS / widen hash slices") read this table."""
-    import uuid as _uuid
-
-    run_id = run_id or _uuid.uuid4().hex[:12]
+    run_id = run_id or uuid.uuid4().hex[:12]
     ts_ms = int(time.time() * 1000)
     wide = metrics.collect()  # one row by contract — metadata-scale
     rows = [(run_id, source, c, float(r[c]), ts_ms)
@@ -84,11 +111,11 @@ def append_metrics(metrics: DataFrame, out_dir: str, source: str,
     (metrics.sparkSession.createDataFrame(
         rows, "run_id string, source string, metric string, "
               "value double, ts_ms long")
-     .write.mode("append").parquet(str(Path(out_dir) / "metrics")))
+     .write.mode("append").parquet(child_path(out_dir, "metrics")))
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(str(Path(out_dir) / "metrics"))
+    return spark.read.parquet(child_path(out_dir, "metrics"))
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "clip_id") -> DataFrame:
@@ -132,15 +159,14 @@ class ResumableRun:
 
     def __init__(self, spark: SparkSession, out_dir: str, n_buckets: int = 64):
         self.spark = spark
-        self.out = Path(out_dir)
         self.n_buckets = n_buckets
-        self.results_path = str(self.out / "results")
-        self.lineage_path = str(self.out / "lineage")
+        self.results_path = child_path(out_dir, "results")
+        self.lineage_path = child_path(out_dir, "lineage")
 
     # -- lineage ------------------------------------------------------------
 
     def done_buckets(self) -> set[int]:
-        if not Path(self.lineage_path).exists():
+        if not path_exists(self.spark, self.lineage_path):
             return set()
         rows = (self.spark.read.parquet(self.lineage_path)
                 .where(F.col("status") == "DONE")

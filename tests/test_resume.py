@@ -101,13 +101,60 @@ def test_half_written_bucket_overwritten(spark, clips, tmp_path):
     assert rr.results().select("clip_id").distinct().count() == N
 
 
+def test_rerun_is_noop_on_uri_output(spark, clips, tmp_path):
+    """A `file://` output root resumes like a plain path: the lineage is
+    found through Spark's filesystem, so a rerun processes nothing."""
+    rr = ResumableRun(spark, (tmp_path / "o").as_uri(), n_buckets=BUCKETS)
+    rr.run(clips, process)
+    assert len(rr.done_buckets()) == BUCKETS
+    r = rr.run(clips, process)
+    assert r["processed_buckets"] == 0
+    assert rr.results().count() == N
+    assert rr.results().select("clip_id").distinct().count() == N
+
+
+def test_one_file_per_bucket_and_exact_lineage(spark, tmp_path):
+    """Audio clips generated in 4 partitions write one parquet file per
+    bucket (not one per input partition per bucket), and each bucket's
+    lineage counts equal the results table's, decode failures included."""
+    clips = datagen.clips_df(spark, N, seed=11, partitions=4,
+                             with_audio=True)
+
+    def process_audio(df):
+        cfg = PipelineConfig(with_audio_verify=True, with_ppl=False)
+        return apply_pipeline(df, cfg).drop("redactions")
+
+    out = tmp_path / "o"
+    rr = ResumableRun(spark, str(out), n_buckets=BUCKETS)
+    rr.run(clips, process_audio)
+
+    for d in (out / "results").glob("bucket=*"):
+        assert len(list(d.glob("*.parquet"))) == 1, d.name
+
+    lineage = {r["bucket"]: (r["n_rows"], r["n_kept"], r["n_errors"])
+               for r in rr.lineage().collect()}
+    expected = {b: (0, 0, 0) for b in range(BUCKETS)}
+    for r in (rr.results().groupBy("bucket")
+              .agg(F.count(F.lit(1)).alias("n"),
+                   F.count_if("keep").alias("kept"),
+                   F.count("error").alias("errors"))
+              .collect()):
+        expected[r["bucket"]] = (r["n"], r["kept"], r["errors"])
+    assert lineage == expected
+    undecodable = clips.where(F.col("codec") != "wav").count()
+    assert undecodable > 0
+    assert sum(e for _, _, e in lineage.values()) == undecodable
+
+
 def test_write_partitioned_dispatch_iceberg_and_parquet():
     """The Iceberg branch can't execute in-sandbox (no Iceberg jars —
     SURVEY §7.4), but its DISPATCH can be pinned: a configured Iceberg
     catalog + a table-name target must route through
     writeTo().overwritePartitions() (snapshot-atomic per-partition
-    overwrite), and a path target must route through the parquet
-    dynamic-partition-overwrite chain. Fake objects capture the calls."""
+    overwrite, no hint: the table's distribution mode clusters it), and
+    a path target must route through a rebalance on the bucket and the
+    parquet dynamic-partition-overwrite chain. Fake objects capture the
+    calls."""
     from pii_redaction_pipeline_spark.sources import tableio
 
     calls = []
@@ -135,6 +182,10 @@ def test_write_partitioned_dispatch_iceberg_and_parquet():
     class FakeDF:
         write = FakeWriter()
 
+        def hint(self, name, *params):
+            calls.append(("hint", name, *params))
+            return self
+
         def writeTo(self, target):
             calls.append(("writeTo", target))
             return FakeWriteTo()
@@ -158,7 +209,8 @@ def test_write_partitioned_dispatch_iceberg_and_parquet():
 
     calls.clear()
     tableio.write_partitioned(FakeDF(), "/warehouse/out/results", iceberg)
-    assert calls == [("mode", "overwrite"),
+    assert calls == [("hint", "rebalance", tableio.BUCKET_COL),
+                     ("mode", "overwrite"),
                      ("option", "partitionOverwriteMode", "dynamic"),
                      ("partitionBy", tableio.BUCKET_COL),
                      ("parquet", "/warehouse/out/results")]
