@@ -1,7 +1,15 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on).
+Prints ONE JSON line:
 {"metric": ..., "value": sec, "unit": "sec", "queries": {...},
  "raw": {...}, "canary": {...}, "sf": ...}
+
+Usage:
+  python bench.py                                  # everything
+  python bench.py --queries simhash64,jaccard_pairs --plans plans/r08
+`--queries` times only the named registry queries / xxhash64 modes (the
+two headline pipelines always run); `--plans DIR` also writes each timed
+query's explain("formatted") to DIR/<name>.txt.
 
 Headline metric = wall seconds of the full filter+scrub pipeline over the
 clips table (clips/sec reported alongside — the north-star throughput
@@ -41,6 +49,9 @@ delta vs the oracle-checkable md5 modes is part of the record.
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import io
 import json
 import os
 import sys
@@ -50,8 +61,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
+from pii_redaction_pipeline_spark.session import HOST_CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", HOST_CPUS))
 AUDIO_ROWS = int(os.environ.get("BENCH_AUDIO_ROWS", "4000"))
 # replicate documents so the pipeline measurement is sustained throughput,
 # not fixed Spark overhead (5k docs × 20 = 100k clips by default)
@@ -70,6 +83,41 @@ def query_names() -> list[str]:
     from pii_redaction_pipeline_spark.queries import QUERIES
 
     return sorted(QUERIES)
+
+
+def minhash_signatures_xxh(spark, sf_dir):
+    from pii_redaction_pipeline_spark.functions.dedup import (
+        spark_minhash_signatures,
+    )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return spark_minhash_signatures(docs, hash_impl="xxhash64")
+
+
+def simhash64_pairs_xxh(spark, sf_dir):
+    from pii_redaction_pipeline_spark.functions.dedup import (
+        spark_simhash64_pairs,
+    )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return spark_simhash64_pairs(docs, hash_impl="xxhash64",
+                                 warn_quadratic=False)
+
+
+# the xxhash64 production-hash modes timed after the registry
+XXH_MODES = {f.__name__: f for f in (minhash_signatures_xxh,
+                                     simhash64_pairs_xxh)}
+
+
+def selected(spec: str) -> list[str]:
+    """The names `--queries` picks, in run order ('all' = registry plus
+    XXH_MODES); an unknown name exits before any Spark work."""
+    names = query_names() + list(XXH_MODES)
+    if spec == "all":
+        return names
+    picked = [q.strip() for q in spec.split(",")]
+    unknown = sorted(set(picked) - set(names))
+    if unknown:
+        raise SystemExit(f"bench.py: unknown --queries {unknown}")
+    return picked
 
 
 def materialize_clips(spark, sf_dir: str, cache_dir: Path) -> str:
@@ -161,7 +209,18 @@ def canary_walls(spark, clips_path: str) -> dict:
     return {"jvm_sum": timed(jvm_sum), "parquet_scan": timed(scan)}
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--queries", default="all",
+                    help="comma-separated names to time (default: all)")
+    ap.add_argument("--plans", metavar="DIR",
+                    help="write explain('formatted') per query to DIR")
+    args = ap.parse_args(argv)
+    names = selected(args.queries)
+    plans = Path(args.plans) if args.plans else None
+    if plans:
+        plans.mkdir(parents=True, exist_ok=True)
+
     from pii_redaction_pipeline_spark.functions.blocks import release
     from pii_redaction_pipeline_spark.pipeline import PipelineConfig, apply_pipeline
     from pii_redaction_pipeline_spark.queries import QUERIES
@@ -203,8 +262,8 @@ def main() -> None:
     raw["pipeline_with_audio"] = bench_runs(run_audio)
     timings["pipeline_with_audio"] = min(raw["pipeline_with_audio"])
 
-    # every registry query (incl. the audio-bearing flagship) + the
-    # xxhash64 minhash mode; fresh plan per call (AQE caches shuffle
+    # every selected registry query (incl. the audio-bearing flagship)
+    # and xxhash64 mode; fresh plan per call (AQE caches shuffle
     # stages per DataFrame instance), blocks released per run so the
     # 30-query session holds a flat persistent-RDD count
     def registry_run(fn):
@@ -214,27 +273,15 @@ def main() -> None:
             release(df)
         return run
 
-    def minhash_xxh(spark_, sf_dir):
-        from pyspark.sql import functions as F  # noqa: F401
-
-        from pii_redaction_pipeline_spark.functions.dedup import (
-            spark_minhash_signatures,
-        )
-        docs = spark_.read.parquet(f"{sf_dir}/documents.parquet")
-        return spark_minhash_signatures(docs, hash_impl="xxhash64")
-
-    def simhash64_pairs_xxh(spark_, sf_dir):
-        from pii_redaction_pipeline_spark.functions.dedup import (
-            spark_simhash64_pairs,
-        )
-        docs = spark_.read.parquet(f"{sf_dir}/documents.parquet")
-        return spark_simhash64_pairs(docs, hash_impl="xxhash64",
-                                     warn_quadratic=False)
-
-    to_time = [(name, QUERIES[name][0]) for name in query_names()]
-    to_time.append(("minhash_signatures_xxh", minhash_xxh))
-    to_time.append(("simhash64_pairs_xxh", simhash64_pairs_xxh))
-    for name, fn in to_time:
+    for name in names:
+        fn = XXH_MODES.get(name) or QUERIES[name][0]
+        if plans:
+            df = fn(spark, SF_DIR)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            (plans / f"{name}.txt").write_text(buf.getvalue())
+            release(df)
         raw[name] = bench_runs(registry_run(fn))
         timings[name] = min(raw[name])
 

@@ -43,17 +43,16 @@ SHINGLE_WORDS = 3
 
 def _spread_input(docs: DataFrame) -> DataFrame:
     """Redistribute an under-split scan to full width before the token/
-    shingle fan-out (round 7; same gate as queries._read — a one-row-
-    group parquet file scans as ONE task, and the hash/vote work fused
-    onto it then runs on 1 of N cores). No-op when the input already has
-    enough partitions (e.g. it came through queries._read, or a
-    well-laid-out production table)."""
-    try:
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < par:
-            return docs.repartition(par)
-    except Exception:
-        pass  # streaming/exotic plans: keep the input as-is
+    shingle fan-out (round 7) — a one-row-group parquet file scans as
+    ONE task, and the hash/vote work fused onto it then runs on 1 of N
+    cores. No-op when the input already has enough partitions (e.g. a
+    well-laid-out production table) or is a stream, which has no static
+    partition count; any other planning error propagates."""
+    if docs.isStreaming:
+        return docs
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() < par:
+        return docs.repartition(par)
     return docs
 
 
@@ -488,84 +487,6 @@ def spark_simhash(docs: DataFrame) -> DataFrame:
     return summed.select("doc_id", sim.cast("bigint").alias("simhash"))
 
 
-SIMHASH_BITS = 16
-SIMHASH_BANDS = 4          # 4 disjoint 4-bit blocks
-SIMHASH_MAX_HAMMING = 3    # pigeonhole: ≤3 flipped bits over 4 blocks
-                           # ⟹ ≥1 block intact ⟹ banding recall = 1.0
-
-
-def spark_simhash_pairs(docs: DataFrame,
-                        max_hamming: int = SIMHASH_MAX_HAMMING,
-                        warn_quadratic: bool = True) -> DataFrame:
-    """SimHash near-dup pairs — the APPLICATION of the signature (the
-    classic Charikar/web-dedup pipeline): candidates = pairs sharing at
-    least one of the 4 disjoint 4-bit signature blocks (a bucketed
-    equi-join on (block_idx, block_value) — the same O(n²)-killer shape
-    as minhash LSH), verified with the exact Hamming distance
-    bit_count(sig_a XOR sig_b) ≤ max_hamming. For max_hamming ≤
-    SIMHASH_BANDS−1 the pigeonhole principle makes candidate recall
-    EXACTLY 1.0: k flipped bits can touch at most k < 4 blocks, so one
-    block is always intact (test-pinned against brute-force Hamming).
-    Signature table is persisted for the self-join + verify joins;
-    caller releases via blocks.release().
-
-    Scale note: 16 signature bits are the SQL-oracle-able variant (both
-    engines derive them from the same md5 nibbles), and its 4-bit
-    blocks are a QUADRATIC candidate generator at corpus scale (random
-    pair collides on ≥1 block w.p. ≈23%) — use spark_simhash64_pairs
-    (the production 4×16-bit variant below, same pigeonhole structure,
-    ~6e-5 random collision) beyond test/oracle corpora. A runtime
-    tripwire (`warn_quadratic`, default on) measures the banded
-    candidate volume via bucket_stats and warns when it reaches ~n²."""
-    sig = spark_simhash(docs).persist()
-    melted = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("blk"),
-                     F.expr(f"(simhash div {16 ** b}) % 16").alias("v"))
-            for b in range(SIMHASH_BANDS)])).alias("bv")
-    ).select("doc_id", "bv.blk", "bv.v")
-    if warn_quadratic:
-        _warn_if_quadratic(melted, sig.count(), "spark_simhash_pairs")
-    a, b = melted.alias("a"), melted.alias("b")
-    cand = (a.join(b, ["blk", "v"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    j = (cand
-         .join(sig.select(F.col("doc_id").alias("doc_a"),
-                          F.col("simhash").alias("sig_a")), "doc_a")
-         .join(sig.select(F.col("doc_id").alias("doc_b"),
-                          F.col("simhash").alias("sig_b")), "doc_b"))
-    hamming = F.expr("bit_count(sig_a ^ sig_b)")
-    out = (j.select("doc_a", "doc_b",
-                    hamming.cast("bigint").alias("hamming"))
-           .where(F.col("hamming") <= max_hamming))
-    return own(out, "persist", sig)
-
-
-def duck_simhash_pairs_sql(max_hamming: int = SIMHASH_MAX_HAMMING) -> str:
-    blocks = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS blk, (simhash // {16 ** b}) % 16 AS v "
-        f"FROM sig" for b in range(SIMHASH_BANDS))
-    return f"""
-WITH sig AS ({duck_simhash_sql()}),
-melted AS ({blocks}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM melted a JOIN melted b USING (blk, v)
-  WHERE a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b,
-       CAST(bit_count(xor(sa.simhash, sb.simhash)) AS BIGINT) AS hamming
-FROM cand
-JOIN sig sa ON cand.doc_a = sa.doc_id
-JOIN sig sb ON cand.doc_b = sb.doc_id
-WHERE bit_count(xor(sa.simhash, sb.simhash)) <= {max_hamming}
-"""
-
-
 def duck_simhash_sql() -> str:
     # DuckDB has no conv(); parse the 4 hex digits positionally — still
     # one md5 per token, projected once in the CTE.
@@ -593,15 +514,12 @@ SELECT doc_id, CAST({sim} AS BIGINT) AS simhash FROM summed
 # ---------------------------------------------------------------------------
 # SimHash-64 — the PRODUCTION signature width (round-5 verdict item 2).
 #
-# The 16-bit variant above is the SQL-oracle-able teaching/verification
-# size, and its default banding (4 blocks × 4 bits) is a QUADRATIC
-# candidate generator at corpus scale: a random pair collides on ≥1 of
-# the 4-bit blocks w.p. 1 − (1 − 2⁻⁴)⁴ ≈ 23%, so candidates ≈ 0.23·n²/2
-# — a thinly disguised cross join. 64 bits with 4 blocks × 16 bits keeps
-# the identical pigeonhole guarantee (Hamming ≤ 3 ⟹ ≥1 intact block ⟹
-# banding recall exactly 1.0) while a random pair collides w.p.
-# 1 − (1 − 2⁻¹⁶)⁴ ≈ 6.1e-5 — 3,700× fewer false candidates, and the
-# per-band bucket space is 2¹⁶ per block index instead of 2⁴.
+# The 16-bit signature above is too narrow to band: 4 blocks × 4 bits
+# would collide a random pair on ≥1 block w.p. 1 − (1 − 2⁻⁴)⁴ ≈ 23%, a
+# QUADRATIC candidate generator at corpus scale. 64 bits with 4 blocks
+# × 16 bits gives the pigeonhole
+# guarantee (Hamming ≤ 3 ⟹ ≥1 intact block ⟹ banding recall exactly
+# 1.0) while a random pair collides w.p. 1 − (1 − 2⁻¹⁶)⁴ ≈ 6.1e-5.
 #
 # hash_impl mirrors the minhash pattern (HASH_IMPLS):
 #   - "xxhash64" (default — the production primitive): one native JVM
@@ -723,8 +641,7 @@ def _warn_if_quadratic(melted: DataFrame, n_docs: int, label: str,
             f"{stats['candidate_pairs']:,} is "
             f"{stats['candidate_pairs'] / possible:.0%} of all "
             f"{int(possible):,} pairs — the bucket join degenerates to "
-            f"~n² at corpus scale. Use spark_simhash64_pairs (4×16-bit "
-            f"blocks, ~6e-5 random collision) or widen the signature.",
+            f"~n² at corpus scale. Widen the signature.",
             RuntimeWarning)
 
 
@@ -732,11 +649,11 @@ def spark_simhash64_pairs(docs: DataFrame,
                           max_hamming: int = SIMHASH64_BANDS - 1,
                           hash_impl: str = "xxhash64",
                           warn_quadratic: bool = True) -> DataFrame:
-    """64-bit simhash near-dup pairs — the production-scale variant of
-    spark_simhash_pairs: candidates share ≥1 of 4 disjoint 16-bit
-    blocks (bucketed equi-join on (blk, v)), verified with the exact
-    Hamming distance bit_count(sig_a ^ sig_b) ≤ max_hamming. For
-    max_hamming ≤ 3 the pigeonhole principle again makes candidate
+    """64-bit simhash near-dup pairs (the classic Charikar/web-dedup
+    pipeline): candidates share ≥1 of 4 disjoint 16-bit blocks
+    (bucketed equi-join on (blk, v)), verified with the exact Hamming
+    distance bit_count(sig_a ^ sig_b) ≤ max_hamming. For
+    max_hamming ≤ 3 the pigeonhole principle makes candidate
     recall exactly 1.0 (≤3 flipped bits leave ≥1 of 4 blocks intact;
     test-pinned against brute force). Signature table persisted for the
     self-join + verify joins; caller releases via blocks.release()."""

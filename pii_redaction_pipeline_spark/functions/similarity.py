@@ -35,21 +35,6 @@ from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
-        "CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)")
-_NORM = ("sqrt(aggregate({a}, 0D, (acc, v) -> acc + CAST(v AS DOUBLE) * "
-         "CAST(v AS DOUBLE)))")
-
-
-def cosine_expr(a: str, b: str) -> F.Column:
-    """Pure-SQL cosine (interpreted HOFs — test/oracle use only; the hot
-    paths below use the vectorized numpy kernels)."""
-    dot = _DOT.format(a=a, b=b)
-    na = _NORM.format(a=a)
-    nb = _NORM.format(a=b)
-    return F.expr(f"({dot}) / (({na}) * ({nb}))")
-
-
 def _stack(series: pd.Series) -> np.ndarray:
     """Arrow list column → (batch, dim) float64 matrix."""
     return np.stack(series.to_numpy()).astype(np.float64)

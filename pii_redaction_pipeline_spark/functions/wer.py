@@ -29,7 +29,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql import types as T
 
 from .. import core
 from ..schema import WER_STRUCT
@@ -184,13 +183,6 @@ def wer_udf(reference: pd.Series, hypothesis: pd.Series) -> pd.DataFrame:
         "reference_words": out["reference_words"].astype("int32"),
         "hypothesis_words": out["hypothesis_words"].astype("int32"),
     })
-
-
-def clean_human_udf():
-    @pandas_udf(T.StringType())
-    def _clean(text: pd.Series) -> pd.Series:
-        return text.fillna("").map(clean_human_transcript)
-    return _clean
 
 
 def batch_wer(results_df, golden_df, hyp_col: str = "transcript",

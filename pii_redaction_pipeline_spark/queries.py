@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from . import lexicon as lx
 from .functions import text as tx
+from .functions.dedup import _spread_input
 from .functions.quality import with_langid, with_quality
 
 # deterministic per-row enrichment — valid in Spark SQL and DuckDB SQL
@@ -63,20 +64,17 @@ def _read(spark: SparkSession, sf_dir: str, table: str,
     fused onto that scan (regex chains, token explodes, pandas UDFs)
     then runs on 1 of N cores (measured at sf1.0: the whole scrub-chain
     family was 1-2-task-bound, 16× under-parallel at local[32]). The
-    gate keeps well-laid-out inputs untouched: redistribution only fires
-    when the scan yields fewer splits than defaultParallelism, so a
-    production table with many 128 MB-row-group files never pays the
-    exchange, and the exchange it does pay on small inputs moves the
+    gate (`dedup._spread_input`) keeps well-laid-out inputs untouched:
+    redistribution only fires when the scan yields fewer splits than
+    defaultParallelism, so a production table with many 128 MB-row-group
+    files never pays the exchange, and the exchange it does pay on small
+    inputs moves the
     narrow base rows once, BEFORE they fan out into tokens/shingles/
     UDF work (the same job the round-2..6 shingle window's exchange did
     by accident). `spread=False` for broadcast-side dimension tables —
     collecting them to a broadcast needs no width."""
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    if spread:
-        par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
-    return df
+    return _spread_input(df) if spread else df
 
 
 def _docs_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,8 +351,7 @@ LIMIT 10
 
 
 def q_events_minutely(spark, sf_dir):
-    """Tumbling-window aggregation over the events stream table (batch twin
-    of the Structured Streaming pipeline in streaming/)."""
+    """Tumbling-window aggregation over the events table."""
     # spread=False: one cheap partial-aggregating pass; the extra
     # exchange costs more than the scan-width it buys (measured r7)
     ev = _read(spark, sf_dir, "events", spread=False)
@@ -518,12 +515,9 @@ def q_simhash(spark, sf_dir):
     return spark_simhash(_read(spark, sf_dir, "documents"))
 
 
-# The 16-bit simhash_pairs registry row was RETIRED in round 6: its
-# 4-bit banding collides ~23% of random pairs — a Θ(n²) candidate
-# generator at corpus scale (round-5 verdict item 1). The operator
-# itself stays (functions/dedup.spark_simhash_pairs) as the teaching
-# size, oracle-checked directly in tests/test_queries_oracle.py; the
-# production row below is the 64-bit variant (~6e-5 collision).
+# The 16-bit simhash_pairs operator is gone: its 4-bit banding collides
+# ~23% of random pairs — a Θ(n²) candidate generator at corpus scale.
+# The pairs row below is the 64-bit variant (~6e-5 collision).
 
 
 def q_simhash64(spark, sf_dir):

@@ -26,6 +26,10 @@ ARROW_BATCH_ROWS = 1024
 ARROW_BATCH_TEXT = 16384  # r7: 2 batches per 31k-row task beat 4 (−6% headline)
 ARROW_BATCH_AUDIO = 256
 
+# CPUs this process may run on: the local[N] width wherever
+# SPARK_GRAFT_CPUS is unset (get_spark, bench.py and the harness scripts)
+HOST_CPUS = len(os.sched_getaffinity(0))
+
 
 def set_arrow_batch(spark, rows: int) -> None:
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(rows))
@@ -37,7 +41,7 @@ def get_spark(app: str = "pii_scrub", master: str | None = None,
     """`extra_conf` merges last (used by scaling_bench for local-cluster
     executor memory / PYTHONPATH; on a real cluster spark-submit owns
     these)."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", HOST_CPUS))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (

@@ -5,15 +5,11 @@ upgrade path: the same stage functions (all stateless row-local
 transformations) compose unchanged over readStream. Checkpointing is
 Spark's own WAL — complementary to the batch bucket-lineage resume in
 sources/tableio.py.
-
-Also provides the watermarked tumbling-window aggregation over an events
-stream (late-data tolerant metrics feed).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..pipeline import PipelineConfig, apply_pipeline
 from ..schema import CLIPS_SCHEMA
@@ -35,83 +31,3 @@ def scrub_stream(spark: SparkSession, source_dir: str, out_dir: str,
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start())
-
-
-SESSION_GAP_S = 1800  # 30-min inactivity gap (same as queries.q_user_sessions)
-
-_SESS_OUT_SCHEMA = "user_id long, n_sessions long, n_events long"
-_SESS_STATE_SCHEMA = "last_ts double, n_sessions long, n_events long"
-
-
-def sessionize_stream(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState: the
-    streaming twin of the batch sessionization window (queries.
-    q_user_sessions). State per user_id carries (last event time, session
-    count, event count); a new session opens when the gap to the previous
-    event exceeds `gap_s`. Emits the running per-user totals each
-    micro-batch (update mode), so the LAST row per user equals the batch
-    answer once the backlog drains — tests/test_streaming_multimodal.py
-    pins that equality across multi-batch triggers.
-
-    Scale shape: state is one tiny tuple per user key, hash-partitioned
-    by user_id across executors; Spark's state store checkpoints it per
-    micro-batch (exactly-once across restarts)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdfs, state):
-        if state.exists:
-            last_ts, n_sessions, n_events = state.get
-        else:
-            last_ts, n_sessions, n_events = None, 0, 0
-        ts = pd.concat([pdf["ts"] for pdf in pdfs]).sort_values()
-        for t in ts:
-            tv = t.timestamp()
-            if last_ts is None or tv - last_ts > gap_s:
-                n_sessions += 1
-            last_ts = tv
-            n_events += 1
-        state.update((last_ts, n_sessions, n_events))
-        yield pd.DataFrame({"user_id": [key[0]],
-                            "n_sessions": [n_sessions],
-                            "n_events": [n_events]})
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn, _SESS_OUT_SCHEMA, _SESS_STATE_SCHEMA,
-        "update", GroupStateTimeout.NoTimeout)
-
-
-def dedup_stream(clips: DataFrame, watermark: str = "10 minutes",
-                 id_col: str = "clip_id",
-                 ts_col: str = "ingest_ts") -> DataFrame:
-    """Streaming exact-dedup: keep the first occurrence of each `id_col`
-    within the watermark horizon (`dropDuplicatesWithinWatermark` —
-    Spark evicts a key's dedup state once its event time falls behind
-    the watermark, so state is bounded by the horizon's key cardinality,
-    not the stream's). The streaming twin of the batch `dedup_exact`
-    canonicalization: a re-delivered or double-ingested clip inside the
-    horizon is dropped; duplicates farther apart than the horizon are
-    the batch job's responsibility (run `q_dedup_exact` over the landed
-    table — the standard lambda split for dedup state that cannot be
-    unbounded at 10^12-clip scale).
-
-    Works on any clips-shaped stream that carries an ingest timestamp;
-    tests pin multi-batch behavior (duplicate in a LATER micro-batch
-    still dropped while inside the horizon) against the batch distinct
-    answer."""
-    return (clips
-            .withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark([id_col]))
-
-
-def events_windowed_stream(events: DataFrame, watermark: str = "2 minutes",
-                           window: str = "1 minute") -> DataFrame:
-    """Watermarked tumbling-window counts per event_type (streaming agg
-    with bounded state; late rows beyond the watermark are dropped)."""
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum("value").alias("sum_value"))
-            .select(F.col("w.start").alias("window_start"), "event_type",
-                    "n_events", "sum_value"))

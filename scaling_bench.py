@@ -154,7 +154,7 @@ def main() -> None:
 
     cache = REPO / ".bench_cache"
     cache.mkdir(exist_ok=True)
-    prep = get_spark(app="prep", master="local[32]")
+    prep = get_spark(app="prep")
     bench_mod.REPLICATE = REPLICATE
     if INPUT:
         clips_path = INPUT

@@ -56,7 +56,7 @@ def main() -> None:
     out_dir = Path(sys.argv[1] if len(sys.argv) > 1
                    else REPO / ".bench_cache" / "skew_fixture")
     clips_out = out_dir / "clips"
-    spark = get_spark(app="skew_fixture", master="local[32]")
+    spark = get_spark(app="skew_fixture")
 
     cache = REPO / ".bench_cache"
     cache.mkdir(exist_ok=True)

@@ -387,33 +387,6 @@ def test_train_ivf_centroids_descends_and_improves_recall(planted):
     assert hits(C) >= hits(None) >= 0.9 * N_DUPS
 
 
-def test_simhash_pairs_banding_recall_is_exact(spark):
-    """Pigeonhole guarantee: block-banded candidate generation must find
-    EVERY pair with Hamming ≤ 3 (≤ SIMHASH_BANDS−1) — compared against
-    brute-force Hamming over all collected signatures."""
-    from itertools import combinations
-
-    from pii_redaction_pipeline_spark.functions import blocks as bl
-    from pii_redaction_pipeline_spark.functions.dedup import (
-        SIMHASH_MAX_HAMMING,
-        spark_simhash,
-        spark_simhash_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .limit(120)
-    sigs = {r["doc_id"]: r["simhash"]
-            for r in spark_simhash(docs).collect()}
-    brute = {(a, b) for a, b in combinations(sorted(sigs), 2)
-             if bin(sigs[a] ^ sigs[b]).count("1") <= SIMHASH_MAX_HAMMING}
-    out = spark_simhash_pairs(docs)
-    got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in out.collect()}
-    bl.release(out)
-    assert set(got) == brute                      # recall 1.0, precision 1.0
-    for (a, b), h in got.items():
-        assert h == bin(sigs[a] ^ sigs[b]).count("1")
-
-
 def test_simhash64_pairs_banding_recall_is_exact(spark):
     """Production-width pigeonhole guarantee (xxhash64 mode): 4×16-bit
     block banding must find EVERY pair with 64-bit Hamming ≤ 3, vs
@@ -478,35 +451,64 @@ def test_simhash64_mode_parity(spark):
 
 
 def test_simhash_quadratic_candidate_warning(spark):
-    """The 16-bit variant's 4-bit blocks collide for ~23% of random
-    pairs — the runtime tripwire must warn that the bucket join is
-    degenerating; the 64-bit variant on the same corpus stays silent
-    (collision ~6e-5)."""
+    """The runtime tripwire must warn when the banded candidate volume
+    reaches ~n² — here every doc shares one (blk, v) bucket, so the
+    bucket join is a full cross join; the 64-bit variant on a real
+    corpus stays silent (collision ~6e-5)."""
     import warnings as W
 
     from pii_redaction_pipeline_spark.functions import blocks as bl
     from pii_redaction_pipeline_spark.functions.dedup import (
+        _warn_if_quadratic,
         spark_simhash64_pairs,
-        spark_simhash_pairs,
     )
+
+    n = 50
+    melted = spark.createDataFrame([(i, 0, 7) for i in range(n)],
+                                   "doc_id long, blk int, v long")
+    with W.catch_warnings(record=True) as rec:
+        W.simplefilter("always")
+        _warn_if_quadratic(melted, n, "one_bucket")
+    msgs = [x.message for x in rec if isinstance(x.message, RuntimeWarning)]
+    assert any("candidate volume" in str(m) and "100%" in str(m)
+               and "Widen the signature" in str(m) for m in msgs), \
+        [str(m)[:60] for m in msgs]
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
         .limit(200)
-    with W.catch_warnings(record=True) as rec:
-        W.simplefilter("always")
-        out16 = spark_simhash_pairs(docs)
-        out16.count()
-    bl.release(out16)
-    assert any("candidate volume" in str(x.message)
-               and isinstance(x.message, RuntimeWarning) for x in rec), \
-        [str(x.message)[:60] for x in rec]
-
     with W.catch_warnings(record=True) as rec:
         W.simplefilter("always")
         out64 = spark_simhash64_pairs(docs)
         out64.count()
     bl.release(out64)
     assert not any("candidate volume" in str(x.message) for x in rec)
+
+
+def test_spread_input_surfaces_planning_errors():
+    """The spread gate only skips streams: a real planning error while
+    reading the split count must reach the caller, not be swallowed."""
+    from types import SimpleNamespace
+
+    from pii_redaction_pipeline_spark.functions.dedup import _spread_input
+
+    class BrokenPlan:
+        isStreaming = False
+        sparkSession = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=4))
+
+        @property
+        def rdd(self):
+            raise RuntimeError("planning failed")
+
+    with pytest.raises(RuntimeError, match="planning failed"):
+        _spread_input(BrokenPlan())
+
+
+def test_spread_input_returns_stream_unchanged(spark):
+    from pii_redaction_pipeline_spark.functions.dedup import _spread_input
+
+    stream = spark.readStream.format("rate").load()
+    assert _spread_input(stream) is stream
 
 
 def test_centroid_dist_kernel_matmul_parity_and_bounded_memory():

@@ -181,3 +181,106 @@ def test_bench_compact_summary_fits_driver_tail():
     assert set(parsed["queries"]) == set(names)
     assert parsed["raw_record"].startswith("BENCH/bench-")
     assert parsed["canary"]["nominal_idle"] == bench.CANARY_NOMINAL
+
+
+PKG = "pii_redaction_pipeline_spark"
+# package modules no entry point imports, kept on purpose (module: reason)
+UNREACHED_KEEP = {
+    f"{PKG}.sources.audio_dir": "reference S1: reads an audio directory",
+}
+
+
+def _module_file(repo: Path, dotted: str) -> Path | None:
+    base = repo.joinpath(*dotted.split("."))
+    for p in (base.with_suffix(".py"), base / "__init__.py"):
+        if p.is_file():
+            return p
+    return None
+
+
+def _package_imports(repo: Path, path: Path) -> set[str]:
+    """Dotted package modules one file imports, lazy imports included."""
+    import ast
+
+    rel = path.relative_to(repo).with_suffix("")
+    parts = list(rel.parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    here = parts[:-1] if path.name != "__init__.py" else parts
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = (here[:len(here) - node.level + 1] if node.level
+                    else [])
+            mod = ".".join(base + ([node.module] if node.module else []))
+            names = [mod] + [f"{mod}.{a.name}" for a in node.names]
+        else:
+            continue
+        for name in names:
+            if name.split(".")[0] == PKG and _module_file(repo, name):
+                found.add(name)
+    return found
+
+
+def _entry_point_closure(repo: Path) -> set[str]:
+    scripts = [repo / "job.py", repo / "bench.py", repo / "scaling_bench.py",
+               *sorted((repo / "perfbench").glob("*.py"))]
+    todo = [f"{PKG}.queries", f"{PKG}.streaming.pipeline"]
+    todo += [imp for s in scripts for imp in _package_imports(repo, s)]
+    seen: set[str] = set()
+    while todo:
+        mod = todo.pop()
+        parts = mod.split(".")
+        for i in range(1, len(parts) + 1):  # importing a.b.c runs a, a.b
+            name = ".".join(parts[:i])
+            if name not in seen:
+                seen.add(name)
+                todo.extend(_package_imports(repo, _module_file(repo, name)))
+    return seen
+
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    """Every package module must be imported (transitively) by an entry
+    point — job.py, bench.py, scaling_bench.py, perfbench/, the query
+    registry or the scrub stream — or sit on UNREACHED_KEEP with a
+    reason. Code only tests call is dead weight for the job."""
+    repo = Path(job.REPO)
+    reached = _entry_point_closure(repo)
+    modules = {".".join(p.relative_to(repo).with_suffix("").parts)
+               .removesuffix(".__init__")
+               for p in (repo / PKG).rglob("*.py")}
+    unreached = modules - reached - set(UNREACHED_KEEP)
+    assert not unreached, f"no entry point imports {sorted(unreached)}"
+    assert not set(UNREACHED_KEEP) & reached, "keep-list entry is reached"
+
+
+def test_cpu_default_follows_host(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, bench sizes local[N] from the CPUs
+    this process may run on, not a fixed 32."""
+    import importlib
+    import os
+
+    import bench
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    try:
+        assert importlib.reload(bench).CPUS == len(os.sched_getaffinity(0))
+    finally:
+        monkeypatch.undo()
+        importlib.reload(bench)
+
+
+def test_bench_query_filter():
+    """`--queries` picks registry names or xxhash64 modes; 'all' is the
+    registry plus those modes, and an unknown name exits early."""
+    import pytest
+
+    import bench
+
+    assert bench.selected("all") == bench.query_names() + list(bench.XXH_MODES)
+    assert bench.selected("simhash64,simhash64_pairs_xxh") == [
+        "simhash64", "simhash64_pairs_xxh"]
+    with pytest.raises(SystemExit, match="nope"):
+        bench.selected("simhash64,nope")

@@ -72,23 +72,6 @@ def test_query_matches_oracle(name, spark, duck):
     _compare(name, fn, sql, spark, duck)
 
 
-def test_simhash_pairs_16bit_matches_oracle(spark, duck):
-    """The 16-bit simhash pairs operator was retired from the production
-    registry in round 6 (Θ(n²) banding at corpus scale) but stays as the
-    teaching/oracle size — this test preserves the DuckDB hash check it
-    had as a registry row."""
-    from pii_redaction_pipeline_spark.functions.dedup import (
-        duck_simhash_pairs_sql,
-        spark_simhash_pairs,
-    )
-
-    def fn(spark_, sf_dir):
-        docs = spark_.read.parquet(f"{sf_dir}/documents.parquet")
-        return spark_simhash_pairs(docs, warn_quadratic=False)
-
-    _compare("simhash_pairs_16bit", fn, duck_simhash_pairs_sql(), spark, duck)
-
-
 def test_pipeline_exact_sql_equals_udf_path(spark):
     """Three-engine agreement, engine pair 1-2: the pure-Spark-SQL exact
     pipeline (pipeline_exact_sql, zero Python) must produce EXACTLY the

@@ -1,21 +1,8 @@
-"""Streaming pipeline (availableNow) + multimodal feature operators."""
-
-import math
-
-import numpy as np
-import pytest
+"""Streaming pipeline (availableNow): the scrub stream matches the batch
+oracle and restarts from its checkpoint without duplicating output."""
 
 from pii_redaction_pipeline_spark import core, datagen
-from pii_redaction_pipeline_spark.functions.multimodal import (
-    audio_features,
-    decode_image,
-    image_features,
-)
-from pii_redaction_pipeline_spark.streaming.pipeline import (
-    events_windowed_stream,
-    scrub_stream,
-    sessionize_stream,
-)
+from pii_redaction_pipeline_spark.streaming.pipeline import scrub_stream
 
 N = 120
 
@@ -42,226 +29,3 @@ def test_scrub_stream_availablenow(spark, tmp_path):
     q2 = scrub_stream(spark, src, out, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == N
-
-
-def test_events_windowed_stream_plan(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # the aggregation builds and runs in batch mode too (same plan shape)
-    out = events_windowed_stream(ev).collect()
-    assert len(out) > 0
-    total = sum(r["n_events"] for r in out)
-    assert total == ev.count()
-
-
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): per-user
-    sessionization over a MULTI-batch stream must equal the batch window
-    formulation (queries.q_user_sessions) once the backlog drains —
-    i.e. state carries last_ts/counters correctly across micro-batches."""
-    import os
-    import time as time_mod
-
-    from pyspark.sql import functions as F
-
-    from pii_redaction_pipeline_spark.queries import q_user_sessions
-
-    sf = "/root/testdata/sf0.001"
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    src = tmp_path / "ev_src"
-    src.mkdir()
-    # 4 chronological chunk files with increasing mtimes: the file source
-    # orders by timestamp, so micro-batches arrive in event-time order
-    # (the operator's correctness precondition, like any sessionizer fed
-    # by an ordered log)
-    import glob
-    import shutil
-
-    rows = ev.orderBy("ts", "event_id").collect()
-    chunk = (len(rows) + 3) // 4
-    for i in range(4):
-        part = rows[i * chunk:(i + 1) * chunk]
-        if not part:
-            continue
-        tmp = str(tmp_path / f"_stage{i}")
-        spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(tmp)
-        target = str(src / f"chunk_{i:02d}.parquet")
-        shutil.move(glob.glob(tmp + "/part-*.parquet")[0], target)
-        shutil.rmtree(tmp)
-        t = time_mod.time() - 40 + i * 10
-        os.utime(target, (t, t))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(src)))
-    q = (sessionize_stream(stream)
-         .writeStream.format("memory").queryName("sess")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    # update mode emits running totals; the max per user is the final one
-    got = {r["user_id"]: (r["ns"], r["ne"])
-           for r in spark.table("sess")
-           .groupBy("user_id")
-           .agg(F.max("n_sessions").alias("ns"), F.max("n_events").alias("ne"))
-           .collect()}
-    want = {r["user_id"]: (r["n_sessions"], r["n_events"])
-            for r in q_user_sessions(spark, sf).collect()}
-    assert got == want
-
-
-def test_audio_features(spark):
-    clips = datagen.clips_df(spark, 60, seed=3, partitions=4)
-    feats = {r["clip_id"]: r for r in audio_features(clips).collect()}
-    pdf = datagen.clips_pandas(60, seed=3, with_audio=False)
-    for row in pdf.itertuples():
-        f = feats[row.clip_id]
-        if row.codec == "wav":
-            assert f["decode_ok"]
-            assert f["n_samples"] == int(row.sr_hz * row.dur_ms / 1000)
-            assert math.isclose(f["duration_ms"], row.dur_ms, rel_tol=0.01)
-            # 0.3·sin + 0.05·noise → rms ≈ sqrt(0.045+0.0025) ≈ 0.218
-            assert 0.15 < f["rms"] < 0.3
-            assert len(f["frame_energies"]) <= 20
-            if f["frame_energies"]:
-                assert all(e > 0 for e in f["frame_energies"])
-        else:
-            assert not f["decode_ok"] and "codec" in f["error"]
-
-
-def test_image_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"abc")
-
-
-def test_image_features_fake_deterministic(spark):
-    clips = datagen.clips_df(spark, 20, seed=3, partitions=2)
-    a = {r["clip_id"]: (r["width"], r["height"], r["mean_luma"])
-         for r in image_features(clips).collect()}
-    b = {r["clip_id"]: (r["width"], r["height"], r["mean_luma"])
-         for r in image_features(clips).collect()}
-    assert a == b
-    assert all(16 <= w < 80 for w, _, _ in a.values())
-
-
-def test_video_frame_sample_stub(spark):
-    from pii_redaction_pipeline_spark.functions.multimodal import (
-        sample_video_frames,
-        video_frame_features,
-    )
-
-    with pytest.raises(NotImplementedError):
-        sample_video_frames(b"abc", 2)
-    clips = datagen.clips_df(spark, 12, seed=9, partitions=2)
-    rows = video_frame_features(clips, n_frames=4).collect()
-    assert len(rows) == 12 * 4                       # 1→N fan-out per payload
-    a = {(r["clip_id"], r["frame_idx"]): (r["width"], r["height"], r["mean_luma"])
-         for r in rows}
-    b = {(r["clip_id"], r["frame_idx"]): (r["width"], r["height"], r["mean_luma"])
-         for r in video_frame_features(clips, n_frames=4).collect()}
-    assert a == b                                    # deterministic fake
-    assert all(r["ts_ms"] == r["frame_idx"] * 1000.0 for r in rows)
-
-
-def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path):
-    """Streaming exact-dedup (dropDuplicatesWithinWatermark): duplicates
-    re-delivered in a LATER micro-batch (inside the watermark horizon)
-    must be dropped, and the surviving set must equal the batch distinct
-    answer. Two chunk files → two micro-batches (maxFilesPerTrigger=1);
-    chunk 2 repeats half of chunk 1's clip_ids."""
-    import glob
-    import os
-    import shutil
-    import time as time_mod
-
-    from datetime import datetime, timedelta
-
-    from pii_redaction_pipeline_spark.streaming.pipeline import dedup_stream
-
-    base = datetime(2026, 1, 1, 0, 0, 0)
-    rows1 = [(f"c{i:03d}", base + timedelta(seconds=i), f"t{i}")
-             for i in range(40)]
-    rows2 = ([(f"c{i:03d}", base + timedelta(seconds=100 + i), f"dup{i}")
-              for i in range(20)]            # duplicates of chunk 1
-             + [(f"c{i:03d}", base + timedelta(seconds=100 + i), f"t{i}")
-                for i in range(40, 60)])     # fresh ids
-    schema = "clip_id string, ingest_ts timestamp, transcript string"
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, rows in enumerate([rows1, rows2]):
-        tmp = str(tmp_path / f"_stage{i}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
-        target = str(src / f"chunk_{i}.parquet")
-        shutil.move(glob.glob(tmp + "/part-*.parquet")[0], target)
-        shutil.rmtree(tmp)
-        t = time_mod.time() - 30 + i * 10
-        os.utime(target, (t, t))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    q = (dedup_stream(stream, watermark="10 minutes")
-         .writeStream.format("memory").queryName("dedup_out")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    got = spark.table("dedup_out")
-    ids = [r["clip_id"] for r in got.select("clip_id").collect()]
-    assert len(ids) == 60                      # 40 + 20 fresh, 20 dropped
-    assert len(set(ids)) == 60                 # no clip_id twice
-    # survivors are the FIRST occurrences: chunk-1 transcripts win
-    t_by_id = {r["clip_id"]: r["transcript"]
-               for r in got.select("clip_id", "transcript").collect()}
-    assert t_by_id["c005"] == "t5" and t_by_id["c045"] == "t45"
-
-
-def test_dedup_stream_state_survives_restart(spark, tmp_path):
-    """Exactly-once across restarts: stop the dedup stream after batch 1,
-    deliver a second file containing duplicates of batch 1, restart from
-    the same checkpoint — the state store must remember batch-1 keys and
-    still drop the late duplicates."""
-    import glob
-    import shutil
-    from datetime import datetime, timedelta
-
-    from pii_redaction_pipeline_spark.streaming.pipeline import dedup_stream
-
-    base = datetime(2026, 1, 1)
-    schema = "clip_id string, ingest_ts timestamp, transcript string"
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def land(name, rows):
-        tmp = str(tmp_path / f"_stage_{name}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
-        shutil.move(glob.glob(tmp + "/part-*.parquet")[0],
-                    str(src / f"{name}.parquet"))
-        shutil.rmtree(tmp)
-
-    def run():
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).parquet(str(src)))
-        q = (dedup_stream(stream, watermark="10 minutes")
-             .writeStream.format("parquet")
-             .option("path", str(tmp_path / "out"))
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-    land("b1", [(f"c{i}", base + timedelta(seconds=i), "v1")
-                for i in range(20)])
-    run()  # first invocation: 20 rows pass, state checkpointed, stream stops
-
-    land("b2", [(f"c{i}", base + timedelta(seconds=60 + i), "v2")
-                for i in range(10)]          # dups of run 1 — must drop
-         + [(f"d{i}", base + timedelta(seconds=60 + i), "v1")
-            for i in range(5)])              # fresh
-    run()  # restart from the same checkpoint
-
-    out = spark.read.parquet(str(tmp_path / "out"))
-    assert out.count() == 25
-    assert out.select("clip_id").distinct().count() == 25
-    assert out.where("transcript = 'v2'").count() == 0  # late dups dropped
