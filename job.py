@@ -210,6 +210,7 @@ def main(argv: list[str] | None = None) -> None:
         manifest_df,
         qa_report_df,
     )
+    from pii_redaction_pipeline_spark.session import FAULTHANDLER_CONF
     from pii_redaction_pipeline_spark.sources.tableio import ResumableRun
 
     # on a cluster, master/memory come from spark-submit; builder only adds
@@ -218,6 +219,7 @@ def main(argv: list[str] | None = None) -> None:
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.adaptive.skewJoin.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+             .config(FAULTHANDLER_CONF, "true")
              .getOrCreate())
 
     # the archives spark-submit actually shipped (if any) must match source

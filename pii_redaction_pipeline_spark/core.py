@@ -209,6 +209,20 @@ def _fuzzy_lookup(word: str) -> tuple[str, str, int] | None:
 _FUZZY_CACHE: dict[str, tuple[str, str, int] | None] = {}
 
 
+def fuzzy_best(word: str,
+               lookup: dict | None = None) -> tuple[str, str, int] | None:
+    """_fuzzy_lookup(word) from the precomputed `lookup` table when one is
+    given (see fuzzy_match), else through the per-process memo."""
+    if lookup is not None:
+        return lookup.get(word)
+    if word in _FUZZY_CACHE:
+        return _FUZZY_CACHE[word]
+    best = _fuzzy_lookup(word)
+    if len(_FUZZY_CACHE) < 1_000_000:
+        _FUZZY_CACHE[word] = best
+    return best
+
+
 def fuzzy_match(tokens: list[str], norm: list[str], matched: set[int],
                 lookup: dict | None = None) -> list[Match]:
     """Fuzzy layer over words the exact layer left unmatched
@@ -230,14 +244,7 @@ def fuzzy_match(tokens: list[str], norm: list[str], matched: set[int],
         if i in matched:
             continue
         word = norm[i]
-        if lookup is not None:
-            best = lookup.get(word)
-        elif word in _FUZZY_CACHE:
-            best = _FUZZY_CACHE[word]
-        else:
-            best = _fuzzy_lookup(word)
-            if len(_FUZZY_CACHE) < 1_000_000:
-                _FUZZY_CACHE[word] = best
+        best = fuzzy_best(word, lookup)
         if best is None:
             continue
         term, category, distance = best

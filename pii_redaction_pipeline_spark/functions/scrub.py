@@ -1,12 +1,15 @@
 """detect_and_scrub — the hot-path pandas UDF — and the redactions UDF.
 
 scrub_batch is core.scrub_row over one Arrow batch, field for field,
-minus `redactions`. The word path (core.detect_words + redact_tokens)
-runs per row in Python: it is a greedy token scan with per-worker memos
-(normalized tokens, fuzzy lookups), so repeated vocabulary across rows
-costs one Levenshtein sweep total. Then one pyarrow string array of the
-redacted texts gives two row masks, each a superset of the rows its
-Python pass can change:
+minus `redactions`. The word path (core.detect_words + redact_tokens,
+see word_path) tokenizes the batch once (tokens.split_batch) and does
+its Python work once per distinct token: normalization, the phrase-trie
+start and the fuzzy result, through the per-worker memos, so repeated
+vocabulary across rows costs one Levenshtein sweep total. The greedy
+scan runs in Python only from the tokens that start a longer phrase (2-3
+a row); numpy and Arrow place the one-token matches and rebuild the
+redacted texts. That pyarrow string array then gives two row masks, each
+a superset of the rows its Python pass can change:
   - regex mask: '@' (email), an ASCII digit (ssn, phone) or a toxicity
     word as a substring of the ASCII-lowered text;
   - rescan mask: a single-word term, or one non-label word of each
@@ -33,6 +36,7 @@ from __future__ import annotations
 import logging
 import re
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -44,6 +48,7 @@ from pyspark.sql.functions import pandas_udf
 from .. import core
 from .. import lexicon as lx
 from ..schema import REDACTION_SCHEMA, SCRUB_STRUCT
+from .tokens import Tokens, split_batch
 
 logger = logging.getLogger(__name__)
 
@@ -68,31 +73,156 @@ def _rows(mask) -> list[int]:
     return pc.indices_nonzero(mask).to_pylist()
 
 
+def _label(category: str) -> str:
+    return lx.CATEGORY_LABELS.get(category, f"[{category.upper()}]")
+
+
+def _may_month(tok: Tokens, start: int, end: int, pos: int) -> bool:
+    """core.exact_match's context test for a lone "may" at token `pos` of
+    the row whose tokens are [start, end)."""
+    words = [tok.vocab[v] for v in tok.ids[start:end].tolist()]
+    word_pos = sum(len(w) + 1 for w in words[:pos - start])
+    return core.is_may_month(" ".join(words), word_pos, word_pos + 3)
+
+
+# what a distinct token does in the word path
+_PLAIN = 0   # nothing: it matches no term and has no fuzzy result
+_TERM = 1    # a one-word term that starts no longer phrase (not "may")
+_FUZZY = 2   # starts no phrase, has a fuzzy result
+_WALK = 3    # starts a longer phrase, or is "may": the scan decides
+
+
+def word_path(tok: Tokens, with_fuzzy: bool = True,
+              lookup: dict | None = None):
+    """core.detect_words + core.redact_tokens on every row of a tokenized
+    batch: (redacted texts as a pa.Array, n_exact, n_fuzzy).
+
+    Each distinct token is normalized, looked up in the phrase trie and
+    in the fuzzy memo (or the broadcast map) once per batch. A token is a
+    candidate if its normalized form starts a trie phrase or has a fuzzy
+    result. In core's greedy scan only a multi-word match consumes tokens
+    past its start, and those start at _WALK candidates, so the scan runs
+    in Python from them alone, in position order. Its trie walk reads
+    every token after the start, candidate or not, and a _WALK candidate
+    that is not consumed and completes no term takes its fuzzy result.
+    A match consumes no token before its start, so this one pass makes
+    the matches of core's exact pass and then its fuzzy pass. Every other
+    candidate is a one-token match unless a multi-word match covers it,
+    which numpy settles for all of them at once. The texts are then
+    rebuilt in Arrow: match starts take their label's id, continuation
+    words are dropped, and each row's tokens are joined with one space."""
+    vocab, ids, offsets = tok.vocab, tok.ids, tok.offsets
+    n = len(offsets) - 1
+    key = core._TRIE_CAT
+    norm = [core._normalize_cached(t) for t in vocab]
+    nodes = [core._PHRASE_TRIE.get(w) for w in norm]
+    fuzzy = [core.fuzzy_best(w, lookup) if with_fuzzy else None for w in norm]
+    labels: list[str] = []  # token ids len(vocab), len(vocab) + 1, ...
+    label_ids: dict[str, int] = {}  # category -> its label's token id
+
+    def label_id(category: str) -> int:
+        lid = label_ids.get(category)
+        if lid is None:
+            lid = label_ids[category] = len(vocab) + len(labels)
+            labels.append(_label(category))
+        return lid
+
+    kind = np.zeros(len(vocab), dtype=np.uint8)
+    label = np.zeros(len(vocab), dtype=ids.dtype)
+    for v, (w, node, f) in enumerate(zip(norm, nodes, fuzzy)):
+        if node is None:
+            if f is not None:
+                kind[v], label[v] = _FUZZY, label_id(f[1])
+        elif len(node) == 1 and key in node and w != "may":
+            kind[v], label[v] = _TERM, label_id(node[key])
+        else:
+            kind[v] = _WALK
+
+    kinds = kind[ids]
+    walk = np.flatnonzero(kinds == _WALK)
+    walk_rows = np.searchsorted(offsets, walk, side="right") - 1
+    at, at_label, exact_rows, fuzzy_rows = [], [], [], []
+    cont: list[int] = []  # continuation words of multi-word matches
+    upto = 0  # tokens before it are consumed by a multi-word match
+    for p, r, v in zip(walk.tolist(), walk_rows.tolist(), ids[walk].tolist()):
+        if p < upto:
+            continue
+        node = nodes[v]
+        end = int(offsets[r + 1])
+        terminals = [(1, node[key])] if key in node else []
+        j = p + 1
+        while j < end:
+            node = node.get(norm[ids[j]])
+            if node is None:
+                break
+            if key in node:
+                terminals.append((j - p + 1, node[key]))
+            j += 1
+        for plen, category in reversed(terminals):  # longest first
+            if plen == 1 and norm[v] == "may" and not _may_month(
+                    tok, int(offsets[r]), end, p):
+                continue
+            at.append(p)
+            at_label.append(label_id(category))
+            exact_rows.append(r)
+            if plen > 1:
+                upto = p + plen
+                cont.extend(range(p + 1, upto))
+            break
+        else:
+            if fuzzy[v] is not None:
+                at.append(p)
+                at_label.append(label_id(fuzzy[v][1]))
+                fuzzy_rows.append(r)
+
+    one = np.flatnonzero((kinds == _TERM) | (kinds == _FUZZY))
+    drop = None
+    if cont:
+        drop = np.array(cont)
+        consumed = np.zeros(len(ids), dtype=bool)
+        consumed[drop] = True
+        one = one[~consumed[one]]
+    one_rows = np.searchsorted(offsets, one, side="right") - 1
+    one_term = kinds[one] == _TERM
+    n_exact = (np.bincount(one_rows[one_term], minlength=n)
+               + np.bincount(exact_rows, minlength=n))
+    n_fuzzy = (np.bincount(one_rows[~one_term], minlength=n)
+               + np.bincount(fuzzy_rows, minlength=n))
+
+    out = ids.copy()
+    out[one] = label[ids[one]]
+    out[at] = at_label
+    if drop is not None:
+        dropped = np.bincount(np.searchsorted(offsets, drop, side="right") - 1,
+                              minlength=n)
+        offsets = np.concatenate(([0], np.cumsum(np.diff(offsets) - dropped)))
+        out = np.delete(out, drop)
+    words = pa.concat_arrays([tok.dictionary,
+                              pa.array(labels, tok.dictionary.type)])
+    rows = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                    words.take(pa.array(out)))
+    return pc.binary_join(rows, " "), n_exact, n_fuzzy
+
+
 def scrub_batch(texts, with_fuzzy: bool = True,
-                lookup: dict | None = None) -> dict[str, list]:
-    """core.scrub_row on every row of `texts` (None scrubs like ""), as
-    one list per SCRUB_STRUCT field."""
-    scrubbed, n_exact, n_fuzzy = [], [], []
-    for text in texts:
-        tokens, matches = core.detect_words(
-            "" if text is None else text, with_fuzzy, lookup)
-        scrubbed.append(core.redact_tokens(tokens, matches))
-        nf = sum(m.is_fuzzy for m in matches) if matches else 0
-        n_exact.append(len(matches) - nf)
-        n_fuzzy.append(nf)
-    n = len(scrubbed)
-    arr = pa.array(scrubbed, pa.string())
+                lookup: dict | None = None) -> dict[str, np.ndarray]:
+    """core.scrub_row on every row of `texts` (a pa.Array, a pandas
+    Series or a list; None scrubs like ""), as one array per
+    SCRUB_STRUCT field."""
+    arr, n_exact, n_fuzzy = word_path(split_batch(texts), with_fuzzy, lookup)
+    n = len(arr)
     low = pc.ascii_lower(arr)
     other = pc.invert(pc.string_is_ascii(arr))
     regex_rows = _rows(pc.or_(other, pc.match_substring_regex(low, _REGEX_GATE)))
     rescan_rows = _rows(pc.or_(other, pc.match_substring_regex(low, _RESCAN_GATE)))
 
-    ext = {cat: [0] * n for cat in _EXT}
+    scrubbed = arr.to_numpy(zero_copy_only=False)
+    ext = {cat: np.zeros(n, dtype=np.int64) for cat in _EXT}
     for i in regex_rows:
         scrubbed[i], counts = core.regex_scrub(scrubbed[i])
         for cat, k in counts.items():
             ext[cat][i] = k
-    verify = [0] * n
+    verify = np.zeros(n, dtype=np.int64)
     for i in rescan_rows:
         verify[i] = core.verify_counts(scrubbed[i])[0]
     return {"scrubbed_text": scrubbed, "n_exact": n_exact, "n_fuzzy": n_fuzzy,

@@ -1,9 +1,12 @@
 """Composable DataFrame pipeline: each stage is df -> df (SURVEY §3.2).
 
 Stage order mirrors the reference 5-stage chain re-expressed Spark-first
-(src/pipeline.py:106-204): input table scan → quality/langid Column
-expressions → detect_and_scrub pandas UDF → grade CASE → (optional)
-audio decode-verify → results.
+(src/pipeline.py:106-204): input table scan → quality Column expressions
+→ langid and detect_and_scrub pandas UDFs → grade CASE → (optional)
+audio decode-verify → results. Catalyst fuses the langid, scrub and ppl
+UDFs into one ArrowEvalPython stage. The langid and scrub kernels each
+tokenize an Arrow batch once (functions/tokens.split_batch) and do their
+Python work once per distinct token of the batch, not once per token.
 
 Scale notes (100 TB / 1000 executors):
   - All logic is row-local → no shuffle anywhere in the hot path. Balance

@@ -165,7 +165,12 @@ def q_langid_confidence(spark, sf_dir):
                      F.round("lang_conf", 6).alias("lang_conf"))
 
 
-def _sql_langid() -> str:
+def _duck_langid_scores() -> tuple[str, str, str]:
+    """DuckDB twin of core.langid over a `toks` list column: the
+    s_<lang> stopword-hit ratio columns (one per LANG_PRIORITY language,
+    comma-joined), their greatest() and the CASE that picks the language
+    (first of the tied best in LANG_PRIORITY order, 'und' below
+    LANGID_MIN_CONFIDENCE)."""
     score_cols = []
     for lang in lx.LANG_PRIORITY:
         lits = ", ".join("'" + w + "'" for w in lx.LANG_STOPWORDS[lang])
@@ -178,9 +183,14 @@ def _sql_langid() -> str:
     for lang in lx.LANG_PRIORITY:
         pick += f"WHEN s_{lang} = {best} THEN '{lang}' "
     pick += "END"
+    return ", ".join(score_cols), best, pick
+
+
+def _sql_langid() -> str:
+    score_cols, best, pick = _duck_langid_scores()
     return f"""
 WITH t AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
-s AS (SELECT doc_id, {", ".join(score_cols)} FROM t)
+s AS (SELECT doc_id, {score_cols} FROM t)
 SELECT doc_id, {pick} AS lang_pred, round({best}, 6) AS lang_conf FROM s
 """
 
@@ -208,14 +218,7 @@ def q_keep_drop_grade(spark, sf_dir):
 def _sql_keep_drop() -> str:
     scrub = tx.duck_scrub_sql("etext")
     toks = _DUCK_TOKS.replace("coalesce(text,'')", "etext")
-    score_cols = []
-    for lang in lx.LANG_PRIORITY:
-        lits = ", ".join("'" + w + "'" for w in lx.LANG_STOPWORDS[lang])
-        score_cols.append(
-            f"CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, "
-            f"x -> list_contains([{lits}], lower(x)))) AS DOUBLE) / len(toks) "
-            f"ELSE 0.0 END AS s_{lang}")
-    best = "greatest(" + ", ".join(f"s_{l}" for l in lx.LANG_PRIORITY) + ")"
+    score_cols, best, _ = _duck_langid_scores()
     return f"""
 WITH e AS (SELECT doc_id, {ENRICH_SQL} AS etext FROM documents),
 t AS (SELECT doc_id, etext, {toks} AS toks,
@@ -228,7 +231,7 @@ m AS (SELECT doc_id, residual_pii,
         CASE WHEN len(etext) > 0 THEN
           CAST(len(regexp_replace(etext, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
             / len(etext) ELSE 0.0 END AS symbol_density,
-        {", ".join(score_cols)}
+        {score_cols}
       FROM t),
 g AS (SELECT doc_id, residual_pii,
         CASE WHEN residual_pii = 0 THEN 'PASS'
@@ -764,18 +767,7 @@ def q_pipeline_grade_cols(spark, sf_dir):
 
 def _sql_pipeline_grade_cols() -> str:
     toks = _DUCK_TOKS.replace("coalesce(text,'')", "etext")
-    score_cols = []
-    for lang in lx.LANG_PRIORITY:
-        lits = ", ".join("'" + w + "'" for w in lx.LANG_STOPWORDS[lang])
-        score_cols.append(
-            f"CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, "
-            f"x -> list_contains([{lits}], lower(x)))) AS DOUBLE) / len(toks) "
-            f"ELSE 0.0 END AS s_{lang}")
-    best = "greatest(" + ", ".join(f"s_{l}" for l in lx.LANG_PRIORITY) + ")"
-    pick = f"CASE WHEN {best} < {lx.LANGID_MIN_CONFIDENCE} THEN 'und' "
-    for lang in lx.LANG_PRIORITY:
-        pick += f"WHEN s_{lang} = {best} THEN '{lang}' "
-    pick += "END"
+    score_cols, best, pick = _duck_langid_scores()
     return f"""
 WITH e AS (SELECT printf('clip_%08d', doc_id) AS clip_id, {ENRICH_SQL} AS etext
            FROM documents),
@@ -788,7 +780,7 @@ m AS (SELECT clip_id,
         CASE WHEN len(etext) > 0 THEN
           CAST(len(regexp_replace(etext, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
             / len(etext) ELSE 0.0 END AS symbol_density,
-        {", ".join(score_cols)}
+        {score_cols}
       FROM t)
 SELECT clip_id, word_cnt,
        round(distinct_ratio, 6) AS distinct_ratio,
@@ -842,14 +834,7 @@ def _sql_pipeline_exact_only() -> str:
     n_ext = " + ".join(counts[c] for c in ["email", "ssn", "phone", "toxic"])
     scrub = tx.duck_scrub_sql("etext")
     toks = _DUCK_TOKS.replace("coalesce(text,'')", "etext")
-    score_cols = []
-    for lang in lx.LANG_PRIORITY:
-        lits = ", ".join("'" + w + "'" for w in lx.LANG_STOPWORDS[lang])
-        score_cols.append(
-            f"CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, "
-            f"x -> list_contains([{lits}], lower(x)))) AS DOUBLE) / len(toks) "
-            f"ELSE 0.0 END AS s_{lang}")
-    best = "greatest(" + ", ".join(f"s_{l}" for l in lx.LANG_PRIORITY) + ")"
+    score_cols, best, _ = _duck_langid_scores()
     return f"""
 WITH e AS (SELECT printf('clip_%08d', doc_id) AS clip_id,
                   {EXACT_ENRICH_SQL} AS etext FROM documents),
@@ -867,7 +852,7 @@ m AS (SELECT clip_id, etext, scrubbed_text, n_exact, pii_count,
         CASE WHEN len(etext) > 0 THEN
           CAST(len(regexp_replace(etext, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
             / len(etext) ELSE 0.0 END AS symbol_density,
-        {", ".join(score_cols)}
+        {score_cols}
       FROM t),
 g AS (SELECT clip_id, scrubbed_text, n_exact, pii_count, verify_pii_count,
         CASE WHEN verify_pii_count = 0 THEN 'PASS'

@@ -26,6 +26,10 @@ ARROW_BATCH_ROWS = 1024
 ARROW_BATCH_TEXT = 16384  # r7: 2 batches per 31k-row task beat 4 (−6% headline)
 ARROW_BATCH_AUDIO = 256
 
+# a Python worker that crashes or hangs writes its Python traceback into
+# the task's error (pyspark's faulthandler support)
+FAULTHANDLER_CONF = "spark.sql.execution.pyspark.udf.faulthandler.enabled"
+
 # CPUs this process may run on: the local[N] width wherever
 # SPARK_GRAFT_CPUS is unset (get_spark, bench.py and the harness scripts)
 HOST_CPUS = len(os.sched_getaffinity(0))
@@ -53,6 +57,7 @@ def get_spark(app: str = "pii_scrub", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
+        .config(FAULTHANDLER_CONF, "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))

@@ -1,6 +1,8 @@
-"""functions/scrub.scrub_batch (word path per row, then regex and rescan
-passes only on the rows two pyarrow masks select) against the per-row
-oracle core.scrub_row, field by field (hypothesis, no Spark).
+"""functions/scrub.scrub_batch (one tokenization per batch, the word
+path's scan from candidate tokens only, then regex and rescan passes only
+on the rows two pyarrow masks select) against the per-row oracle
+core.scrub_row, field by field (hypothesis, no Spark). The batch goes in
+as a list and as the pa.Array the UDF passes.
 
 The rows mix what each mask has to keep: lexicon terms next to
 punctuation (the rescan finds those), labels, email / SSN / phone shapes
@@ -9,6 +11,7 @@ code points whose Python semantics RE2 does not share: `ſ` and Kelvin
 `K` (IGNORECASE folds them to s and k), `İ` (lower() lengthens it) and
 Unicode whitespace."""
 
+import pyarrow as pa
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
@@ -61,12 +64,23 @@ def _oracle(text, with_fuzzy, lookup):
 @example(rows=["the Houston-Texas corridor", "new york-bound",
                "[CITY]/boston and salt lake-city"])
 @example(rows=[None, "", "huston flew febuary", "a@b.cc DaMn 555.123.4567"])
+# a phrase that ends the row
+@example(rows=["we flew to new york", "salt lake city", "  st petersburg\u3000"])
+# a trie start with no completion
+@example(rows=["salt lake", "st", "we met st", "new", "kansas city st"])
+# "may" as the first and the last token
+@example(rows=["may we go", "May 5 is in may", "we may", "in May"])
+# a fuzzy-candidate word ("beach") inside an exact phrase
+@example(rows=["virginia beach", "west virginia beach", "long beach beach"])
+# every token a candidate
+@example(rows=["houston boston texas monday blue", "new york city new york"])
 def test_scrub_batch_matches_scrub_row(with_fuzzy, lookup, rows):
-    got = scrub.scrub_batch(rows, with_fuzzy, lookup)
-    assert list(got) == list(_FIELDS)
-    for k, text in enumerate(rows):
-        want = _oracle(text, with_fuzzy, lookup)
-        assert tuple(got[f][k] for f in _FIELDS) == want, (k, text)
+    for batch in (rows, pa.array(rows, pa.string())):
+        got = scrub.scrub_batch(batch, with_fuzzy, lookup)
+        assert list(got) == list(_FIELDS)
+        for k, text in enumerate(rows):
+            want = _oracle(text, with_fuzzy, lookup)
+            assert tuple(got[f][k] for f in _FIELDS) == want, (k, text)
 
 
 def test_masks_cover_the_lexicon():

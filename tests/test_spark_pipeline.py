@@ -361,3 +361,12 @@ def test_worker_gc_tuning_applies_and_is_idempotent(monkeypatch):
     finally:
         gc.set_threshold(*saved)
         gc.unfreeze()
+
+
+def test_udf_faulthandler_is_on(spark):
+    """A Python worker that crashes or hangs puts its Python traceback in
+    the task error: the session factory turns pyspark's UDF faulthandler
+    on (job.py's builder sets the same key)."""
+    from pii_redaction_pipeline_spark.session import FAULTHANDLER_CONF
+
+    assert spark.conf.get(FAULTHANDLER_CONF) == "true"
