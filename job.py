@@ -210,17 +210,13 @@ def main(argv: list[str] | None = None) -> None:
         manifest_df,
         qa_report_df,
     )
-    from pii_redaction_pipeline_spark.session import FAULTHANDLER_CONF
+    from pii_redaction_pipeline_spark.session import PIPELINE_CONF
     from pii_redaction_pipeline_spark.sources.tableio import ResumableRun
 
     # on a cluster, master/memory come from spark-submit; builder only adds
     # the configs the pipeline depends on
     spark = (SparkSession.builder.appName("pii_scrub_job")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config(FAULTHANDLER_CONF, "true")
-             .getOrCreate())
+             .config(map=PIPELINE_CONF).getOrCreate())
 
     # the archives spark-submit actually shipped (if any) must match source
     ensure_fresh_py_files(spark.conf.get("spark.submit.pyFiles", ""))

@@ -30,10 +30,8 @@ Scale notes (100 TB / 1000 executors):
   - `bytes` is projected into the decode stage only; with
     with_audio_verify=False Catalyst prunes it out of the scan entirely
     (check .explain → ReadSchema excludes bytes).
-  - Arrow batches are sized per run (session.set_arrow_batch):
-    ARROW_BATCH_TEXT rows on the text path, where big batches amortize
-    the UDFs' per-batch work; ARROW_BATCH_AUDIO when audio bytes flow,
-    so MB-scale rows can't OOM Python workers.
+  - Building the plan writes no session conf: the Arrow batch bounds
+    (rows and bytes) are static in session.PIPELINE_CONF.
 """
 
 from __future__ import annotations
@@ -70,13 +68,7 @@ class PipelineConfig:
 
 def apply_pipeline(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     cfg = cfg or PipelineConfig()
-    # Arrow batch sizing: big batches amortize UDF overhead on the text
-    # path; small batches bound per-batch bytes when MB-scale audio rows
-    # flow through the decode UDF (SURVEY §4.3).
-    from .session import ARROW_BATCH_AUDIO, ARROW_BATCH_TEXT, set_arrow_batch
     audio_on = cfg.with_audio_verify and "bytes" in df.columns
-    set_arrow_batch(df.sparkSession,
-                    ARROW_BATCH_AUDIO if audio_on else ARROW_BATCH_TEXT)
     df = with_quality(df, cfg.text_col)   # pure Column exprs (codegen)
     df = with_langid(df, cfg.text_col)    # pandas UDF, fused with scrub/ppl
     fmap = None

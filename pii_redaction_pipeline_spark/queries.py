@@ -133,27 +133,19 @@ def q_quality_flags(spark, sf_dir):
 _DUCK_TOKS = ("list_filter(string_split_regex(coalesce(text,''), '\\s+'), "
               "x -> x <> '')")
 
-SQL_QUALITY_FLAGS = f"""
+
+def _sql_quality_flags() -> str:
+    metrics, quality_ok = _duck_quality("text")
+    return f"""
 WITH t AS (
   SELECT doc_id, coalesce(text,'') AS text, {_DUCK_TOKS} AS toks FROM documents
 ), m AS (
-  SELECT doc_id,
-         CAST(len(toks) AS BIGINT) AS word_cnt,
-         CASE WHEN len(toks) > 0 THEN
-           CAST(len(list_distinct(list_transform(toks, x -> lower(x)))) AS DOUBLE)
-             / len(toks) ELSE 0.0 END AS distinct_ratio,
-         CASE WHEN len(text) > 0 THEN
-           CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-             / len(text) ELSE 0.0 END AS symbol_density
+  SELECT doc_id, {metrics}
   FROM t
 )
 SELECT doc_id, word_cnt, round(distinct_ratio, 6) AS distinct_ratio,
        round(symbol_density, 6) AS symbol_density,
-       (word_cnt >= {lx.QUALITY_MIN_WORDS}
-        AND word_cnt <= {lx.QUALITY_MAX_WORDS}
-        AND (word_cnt < {lx.QUALITY_DISTINCT_RATIO_MIN_WORDS}
-             OR distinct_ratio >= {lx.QUALITY_MIN_DISTINCT_RATIO})
-        AND symbol_density <= {lx.QUALITY_MAX_SYMBOL_DENSITY}) AS quality_ok
+       {quality_ok} AS quality_ok
 FROM m
 """
 
@@ -163,6 +155,28 @@ def q_langid_confidence(spark, sf_dir):
     df = with_langid(df, "text")
     return df.select("doc_id", F.col("lang").alias("lang_pred"),
                      F.round("lang_conf", 6).alias("lang_conf"))
+
+
+def _duck_quality(text: str) -> tuple[str, str]:
+    """DuckDB twin of functions/quality.with_quality over a `toks` list
+    column and the text column `text` it was split from: the word_cnt,
+    distinct_ratio and symbol_density select items (comma-joined) and
+    the quality_ok predicate over them."""
+    metrics = (
+        "CAST(len(toks) AS BIGINT) AS word_cnt, "
+        "CASE WHEN len(toks) > 0 THEN CAST(len(list_distinct("
+        "list_transform(toks, x -> lower(x)))) AS DOUBLE) / len(toks) "
+        "ELSE 0.0 END AS distinct_ratio, "
+        f"CASE WHEN len({text}) > 0 THEN CAST(len(regexp_replace({text}, "
+        f"'[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE) / len({text}) "
+        "ELSE 0.0 END AS symbol_density")
+    quality_ok = (
+        f"(word_cnt >= {lx.QUALITY_MIN_WORDS} "
+        f"AND word_cnt <= {lx.QUALITY_MAX_WORDS} "
+        f"AND (word_cnt < {lx.QUALITY_DISTINCT_RATIO_MIN_WORDS} "
+        f"OR distinct_ratio >= {lx.QUALITY_MIN_DISTINCT_RATIO}) "
+        f"AND symbol_density <= {lx.QUALITY_MAX_SYMBOL_DENSITY})")
+    return metrics, quality_ok
 
 
 def _duck_langid_scores() -> tuple[str, str, str]:
@@ -219,29 +233,20 @@ def _sql_keep_drop() -> str:
     scrub = tx.duck_scrub_sql("etext")
     toks = _DUCK_TOKS.replace("coalesce(text,'')", "etext")
     score_cols, best, _ = _duck_langid_scores()
+    metrics, quality_ok = _duck_quality("etext")
     return f"""
 WITH e AS (SELECT doc_id, {ENRICH_SQL} AS etext FROM documents),
 t AS (SELECT doc_id, etext, {toks} AS toks,
              {tx.duck_rescan_count_sql(scrub)} AS residual_pii FROM e),
 m AS (SELECT doc_id, residual_pii,
-        CAST(len(toks) AS BIGINT) AS word_cnt,
-        CASE WHEN len(toks) > 0 THEN
-          CAST(len(list_distinct(list_transform(toks, x -> lower(x)))) AS DOUBLE)
-            / len(toks) ELSE 0.0 END AS distinct_ratio,
-        CASE WHEN len(etext) > 0 THEN
-          CAST(len(regexp_replace(etext, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-            / len(etext) ELSE 0.0 END AS symbol_density,
+        {metrics},
         {score_cols}
       FROM t),
 g AS (SELECT doc_id, residual_pii,
         CASE WHEN residual_pii = 0 THEN 'PASS'
              WHEN residual_pii <= {lx.VERIFY_REVIEW_THRESHOLD} THEN 'REVIEW_REQUIRED'
              ELSE 'FAIL' END AS qa_status,
-        (word_cnt >= {lx.QUALITY_MIN_WORDS}
-         AND word_cnt <= {lx.QUALITY_MAX_WORDS}
-         AND (word_cnt < {lx.QUALITY_DISTINCT_RATIO_MIN_WORDS}
-              OR distinct_ratio >= {lx.QUALITY_MIN_DISTINCT_RATIO})
-         AND symbol_density <= {lx.QUALITY_MAX_SYMBOL_DENSITY}) AS quality_ok,
+        {quality_ok} AS quality_ok,
         {best} AS lang_conf
       FROM m)
 SELECT doc_id, residual_pii, qa_status,
@@ -768,28 +773,19 @@ def q_pipeline_grade_cols(spark, sf_dir):
 def _sql_pipeline_grade_cols() -> str:
     toks = _DUCK_TOKS.replace("coalesce(text,'')", "etext")
     score_cols, best, pick = _duck_langid_scores()
+    metrics, quality_ok = _duck_quality("etext")
     return f"""
 WITH e AS (SELECT printf('clip_%08d', doc_id) AS clip_id, {ENRICH_SQL} AS etext
            FROM documents),
 t AS (SELECT clip_id, etext, {toks} AS toks FROM e),
 m AS (SELECT clip_id,
-        CAST(len(toks) AS BIGINT) AS word_cnt,
-        CASE WHEN len(toks) > 0 THEN
-          CAST(len(list_distinct(list_transform(toks, x -> lower(x)))) AS DOUBLE)
-            / len(toks) ELSE 0.0 END AS distinct_ratio,
-        CASE WHEN len(etext) > 0 THEN
-          CAST(len(regexp_replace(etext, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-            / len(etext) ELSE 0.0 END AS symbol_density,
+        {metrics},
         {score_cols}
       FROM t)
 SELECT clip_id, word_cnt,
        round(distinct_ratio, 6) AS distinct_ratio,
        round(symbol_density, 6) AS symbol_density,
-       (word_cnt >= {lx.QUALITY_MIN_WORDS}
-        AND word_cnt <= {lx.QUALITY_MAX_WORDS}
-        AND (word_cnt < {lx.QUALITY_DISTINCT_RATIO_MIN_WORDS}
-             OR distinct_ratio >= {lx.QUALITY_MIN_DISTINCT_RATIO})
-        AND symbol_density <= {lx.QUALITY_MAX_SYMBOL_DENSITY}) AS quality_ok,
+       {quality_ok} AS quality_ok,
        {pick} AS lang_pred,
        round({best}, 6) AS lang_conf
 FROM m
@@ -835,6 +831,7 @@ def _sql_pipeline_exact_only() -> str:
     scrub = tx.duck_scrub_sql("etext")
     toks = _DUCK_TOKS.replace("coalesce(text,'')", "etext")
     score_cols, best, _ = _duck_langid_scores()
+    metrics, quality_ok = _duck_quality("etext")
     return f"""
 WITH e AS (SELECT printf('clip_%08d', doc_id) AS clip_id,
                   {EXACT_ENRICH_SQL} AS etext FROM documents),
@@ -845,13 +842,7 @@ t AS (SELECT clip_id, etext, {toks} AS toks,
       FROM e),
 m AS (SELECT clip_id, etext, scrubbed_text, n_exact, pii_count,
         {tx.duck_rescan_count_sql('scrubbed_text')} AS verify_pii_count,
-        CAST(len(toks) AS BIGINT) AS word_cnt,
-        CASE WHEN len(toks) > 0 THEN
-          CAST(len(list_distinct(list_transform(toks, x -> lower(x)))) AS DOUBLE)
-            / len(toks) ELSE 0.0 END AS distinct_ratio,
-        CASE WHEN len(etext) > 0 THEN
-          CAST(len(regexp_replace(etext, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-            / len(etext) ELSE 0.0 END AS symbol_density,
+        {metrics},
         {score_cols}
       FROM t),
 g AS (SELECT clip_id, scrubbed_text, n_exact, pii_count, verify_pii_count,
@@ -859,11 +850,7 @@ g AS (SELECT clip_id, scrubbed_text, n_exact, pii_count, verify_pii_count,
              WHEN verify_pii_count <= {lx.VERIFY_REVIEW_THRESHOLD}
                THEN 'REVIEW_REQUIRED'
              ELSE 'FAIL' END AS qa_status,
-        (word_cnt >= {lx.QUALITY_MIN_WORDS}
-         AND word_cnt <= {lx.QUALITY_MAX_WORDS}
-         AND (word_cnt < {lx.QUALITY_DISTINCT_RATIO_MIN_WORDS}
-              OR distinct_ratio >= {lx.QUALITY_MIN_DISTINCT_RATIO})
-         AND symbol_density <= {lx.QUALITY_MAX_SYMBOL_DENSITY}) AS quality_ok,
+        {quality_ok} AS quality_ok,
         {best} AS lang_conf
       FROM m)
 SELECT clip_id, scrubbed_text, n_exact, pii_count, verify_pii_count,
@@ -1008,7 +995,7 @@ FROM d
 QUERIES: dict[str, tuple] = {
     "scrub_lexicon": (q_scrub_lexicon, SQL_SCRUB_LEXICON),
     "scrub_counts": (q_scrub_counts, _sql_scrub_counts()),
-    "quality_flags": (q_quality_flags, SQL_QUALITY_FLAGS),
+    "quality_flags": (q_quality_flags, _sql_quality_flags()),
     "langid_confidence": (q_langid_confidence, _sql_langid()),
     "keep_drop_grade": (q_keep_drop_grade, _sql_keep_drop()),
     "qa_status_histogram": (q_qa_status_histogram, _sql_qa_histogram()),

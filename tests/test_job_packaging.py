@@ -284,3 +284,48 @@ def test_bench_query_filter():
         "simhash64", "simhash64_pairs_xxh"]
     with pytest.raises(SystemExit, match="nope"):
         bench.selected("simhash64,nope")
+
+
+def test_package_writes_no_session_conf():
+    """No package module calls `<x>.conf.set(...)`: a session's conf comes
+    from session.PIPELINE_CONF when it starts, never from plan building,
+    so no query depends on which plan was built before it."""
+    import ast
+
+    repo = Path(job.REPO)
+    writes = []
+    for p in sorted((repo / PKG).rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "set"
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "conf"):
+                writes.append(f"{p.relative_to(repo)}:{node.lineno}")
+    assert not writes, f"session conf written at {writes}"
+
+
+def test_job_session_applies_pipeline_conf(tmp_path, monkeypatch):
+    """job.py's spark-submit builder carries every item of
+    session.PIPELINE_CONF and leaves master and memory to spark-submit.
+    The builder is captured at getOrCreate, before any Spark work."""
+    import pytest
+    from pyspark.sql import SparkSession
+
+    from pii_redaction_pipeline_spark.session import PIPELINE_CONF
+
+    class Built(Exception):
+        pass
+
+    options = {}
+
+    def capture(builder):
+        options.update(builder._options)
+        raise Built
+
+    monkeypatch.setattr(job, "REPO", tmp_path)  # no archive: guard passes
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    with pytest.raises(Built):
+        job.main(["--input", "/nope", "--output", str(tmp_path / "o")])
+    assert PIPELINE_CONF.items() <= options.items()
+    assert not {"spark.master", "spark.driver.memory"} & set(options)

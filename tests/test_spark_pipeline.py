@@ -364,9 +364,56 @@ def test_worker_gc_tuning_applies_and_is_idempotent(monkeypatch):
 
 
 def test_udf_faulthandler_is_on(spark):
-    """A Python worker that crashes or hangs puts its Python traceback in
-    the task error: the session factory turns pyspark's UDF faulthandler
-    on (job.py's builder sets the same key)."""
-    from pii_redaction_pipeline_spark.session import FAULTHANDLER_CONF
+    """The session factory applies every item of the one conf table
+    job.py's builder applies too. Among them: a Python worker that
+    crashes or hangs puts its Python traceback in the task error
+    (pyspark's UDF faulthandler)."""
+    from pii_redaction_pipeline_spark.session import PIPELINE_CONF
 
-    assert spark.conf.get(FAULTHANDLER_CONF) == "true"
+    assert PIPELINE_CONF[
+        "spark.sql.execution.pyspark.udf.faulthandler.enabled"] == "true"
+    for key, value in PIPELINE_CONF.items():
+        assert spark.conf.get(key) == value, key
+
+
+def test_building_the_pipeline_writes_no_session_conf(spark):
+    """Building the plan leaves the session conf as it found it, with and
+    without audio, so no query's Arrow batch depends on which pipeline
+    was built last."""
+    clips = datagen.clips_df(spark, 8, seed=3, partitions=1)
+    before = dict(spark.conf.getAll)
+    apply_pipeline(clips, PipelineConfig())
+    assert dict(spark.conf.getAll) == before
+    apply_pipeline(clips.drop("bytes"), PipelineConfig())
+    assert dict(spark.conf.getAll) == before
+
+
+def test_arrow_batch_closes_at_the_bytes_bound(spark):
+    """A scalar pandas UDF over ~100 KB binary rows gets batches cut by
+    spark.sql.execution.arrow.maxBytesPerBatch, each at most one row
+    past the bound, long before maxRecordsPerBatch: the bound that keeps
+    MB-scale audio rows from filling a Python worker's memory."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    row_bytes, bound, n = 100_000, 1 << 20, 60
+
+    @F.pandas_udf("long")
+    def batch_start(ids: pd.Series, payload: pd.Series) -> pd.Series:
+        return pd.Series([ids.iloc[0]] * len(ids))
+
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(bound))
+    try:
+        df = spark.range(0, n, numPartitions=1).select(
+            "id", F.expr(f"cast(repeat('x', {row_bytes}) as binary)")
+            .alias("payload"))
+        sizes = [r["count"] for r in df.select(
+            batch_start("id", "payload").alias("batch"))
+            .groupBy("batch").count().collect()]
+    finally:
+        spark.conf.set(key, saved)
+    assert sum(sizes) == n
+    assert len(sizes) >= 3
+    assert all(s * row_bytes <= bound + row_bytes for s in sizes), sizes
