@@ -330,7 +330,7 @@ def redact_tokens(tokens: list[str], matches: list[Match]) -> str:
 # --------------------------------------------------------------------------
 
 _REGEX_SCRUB = [(cat, re.compile(pat)) for cat, pat in lx.REGEX_SCRUB_ORDER]
-_TOXIC_RE = re.compile(r"\b(" + "|".join(lx.TOXICITY_WORDS) + r")\b", re.IGNORECASE)
+_TOXIC_RE = re.compile(lx.TOXIC_PATTERN)
 _DIGIT_RE = re.compile(r"\d")
 
 
@@ -364,48 +364,65 @@ def regex_scrub(text: str) -> tuple[str, dict[str, int]]:
 # Char-offset detector (verification rescan path)
 # --------------------------------------------------------------------------
 
-_TERM_PATTERNS = [
-    (re.compile(r"\b" + re.escape(t) + r"\b"), t, c, frozenset(t.split()))
-    for t, c in lx.SORTED_TERMS
-]
+_TERMS = [(t, c, frozenset(t.split())) for t, c in lx.SORTED_TERMS]
+# Each term is indexed under its longest word. A \b-bounded occurrence of
+# a term (all are [a-z ]+) needs each of its words as a maximal [a-z] run
+# of the lowered text, so the runs of a text name every term it can hold.
+_TERM_INDEX: dict[str, list[int]] = {}
+for _k, (_term, _) in enumerate(lx.SORTED_TERMS):
+    _TERM_INDEX.setdefault(max(_term.split(), key=len), []).append(_k)
 _WORD_RUN_RE = re.compile(r"[a-z]+")
+
+
+def _is_word(c: str) -> bool:
+    """Python `re`'s \\w for one character of a str pattern's subject."""
+    return c.isalnum() or c == "_"
 
 
 def detect_in_text(text: str) -> list[dict]:
     """Char-offset longest-first detection with overlap suppression
     (reference src/pii_detector.py:355-406). Used for verification rescan.
-    Patterns whose constituent words are absent from the text's letter-run
-    token set are skipped — a pure pruning step (a \\b-bounded occurrence
-    requires each term word as a maximal letter run), same output."""
+
+    The reference searches every term, in SORTED_TERMS order, with
+    `\\bterm\\b` on the slice of the lowered text where its last search
+    left off, so the slice start counts as a boundary. Here the text's
+    letter runs pick the terms that can occur (_TERM_INDEX), visited in
+    the same order, and each is found with str.find plus the same two
+    \\b tests: same output."""
+    lower = text.lower()
+    runs = set(_WORD_RUN_RE.findall(lower))
+    terms = sorted(k for w in runs.intersection(_TERM_INDEX)
+                   for k in _TERM_INDEX[w] if _TERMS[k][2] <= runs)
+    if not terms:
+        return []
     matches: list[dict] = []
-    text_lower = text.lower()
-    token_set = frozenset(_WORD_RUN_RE.findall(text_lower))
-    matched_positions: set[int] = set()
-    for pat, term, category, term_words in _TERM_PATTERNS:
-        if not term_words.issubset(token_set):
-            continue
+    n = len(lower)
+    taken = bytearray(n)  # 1 where an earlier match lies
+    for k in terms:
+        term, category, _ = _TERMS[k]
+        tl = len(term)
         start = 0
-        while True:
-            # search on a slice (not pos offset) so \b at the slice start
-            # behaves exactly like the reference (src/pii_detector.py:372)
-            m = pat.search(text_lower[start:])
-            if not m:
-                break
-            abs_start, abs_end = start + m.start(), start + m.end()
-            if any(p in matched_positions for p in range(abs_start, abs_end)):
-                start = abs_start + 1
+        p = lower.find(term)
+        while p >= 0:
+            end = p + tl
+            if ((p > start and _is_word(lower[p - 1]))
+                    or (end < n and _is_word(lower[end]))):
+                p = lower.find(term, p + 1)
                 continue
-            if term == "may" and not is_may_month(text, abs_start, abs_end):
-                start = abs_end
-                continue
-            matched_positions.update(range(abs_start, abs_end))
-            matches.append({
-                "text": text[abs_start:abs_end],
-                "category": category,
-                "start": abs_start,
-                "end": abs_end,
-            })
-            start = abs_end
+            if taken.find(1, p, end) >= 0:
+                start = p + 1
+            elif term == "may" and not is_may_month(text, p, end):
+                start = end
+            else:
+                taken[p:end] = b"\x01" * tl
+                matches.append({
+                    "text": text[p:end],
+                    "category": category,
+                    "start": p,
+                    "end": end,
+                })
+                start = end
+            p = lower.find(term, start)
     matches.sort(key=lambda m: m["start"])
     return matches
 
@@ -414,36 +431,12 @@ def detect_in_text(text: str) -> list[dict]:
 # Verification grading
 # --------------------------------------------------------------------------
 
-# conservative prefilter for the rescan: a \b-bounded occurrence of a
-# term requires every constituent word to appear as a maximal letter run.
-# Checked per TERM (single-word membership / multi-word subset), not per
-# term-word — otherwise the scrub labels themselves ("[CITY]" → letter
-# run "city", a word of "new york city") force the slow path on almost
-# every redacted row.
-_ALL_TERM_WORDS = frozenset(w for t, _ in lx.SORTED_TERMS for w in t.split())
-_SINGLE_TERM_SET = frozenset(t for t, _ in lx.SORTED_TERMS if " " not in t)
-_MULTI_TERM_WORDSETS = tuple({frozenset(t.split())
-                              for t, _ in lx.SORTED_TERMS if " " in t})
-_LETTER_RUN_RE = re.compile(r"[a-z]+")
-
-
-def _may_have_term(token_set: frozenset[str]) -> bool:
-    if _SINGLE_TERM_SET & token_set:
-        return True
-    return any(ws <= token_set for ws in _MULTI_TERM_WORDSETS)
-
-
 def verify_counts(scrubbed_text: str) -> tuple[int, int]:
     """(total, high-confidence) residual-PII counts in scrubbed text.
     Rescan matches are exact → confidence 1.0 → high-confidence. Label
     self-matches are filtered like the reference (src/verifier.py:148-152).
-
-    Fast path: no single-word term token and no complete multi-word term
-    word-set present ⟹ zero matches, skip the full per-term scan (the
-    common case — a fully scrubbed row has no matchable terms left)."""
-    lower = scrubbed_text.lower()
-    if not _may_have_term(frozenset(_LETTER_RUN_RE.findall(lower))):
-        return 0, 0
+    A row whose letter runs complete no term (the common case: a fully
+    scrubbed row) costs one letter-run scan."""
     found = [
         p for p in detect_in_text(scrubbed_text)
         if not p["text"].startswith("[") and not p["text"].endswith("]")

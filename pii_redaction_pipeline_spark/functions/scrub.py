@@ -8,17 +8,18 @@ start and the fuzzy result, through the per-worker memos, so repeated
 vocabulary across rows costs one Levenshtein sweep total. The greedy
 scan runs in Python only from the tokens that start a longer phrase (2-3
 a row); numpy and Arrow place the one-token matches and rebuild the
-redacted texts. That pyarrow string array then gives two row masks, each
-a superset of the rows its Python pass can change:
-  - regex mask: '@' (email), an ASCII digit (ssn, phone) or a toxicity
-    word as a substring of the ASCII-lowered text;
-  - rescan mask: a single-word term, or one non-label word of each
-    multi-word term, as a maximal [a-z] run of the ASCII-lowered text —
-    what core.verify_counts' letter-run prefilter needs to pass.
-Every row that is not pure ASCII is in both masks, so Unicode digits,
-case folding and `\\b` never reach pyarrow's RE2: core.regex_scrub and
-core.verify_counts (Python `re`) make every replacement and every count,
-on the masked rows only.
+redacted texts. That pyarrow string array then goes through two passes:
+  - regex pass (regex_pass): core.regex_scrub's email → ssn → phone →
+    toxic replacements. On the ASCII rows that match one of the four
+    patterns they run as RE2 column passes, a count and then a replace
+    per pattern on the running array; on ASCII text RE2 and Python `re`
+    agree on leftmost-first matches, \\d, \\b and (?i). Every other row
+    keeps core.regex_scrub.
+  - rescan: core.verify_counts (the reference's char-offset rescan) on
+    the rows of a mask that holds every row it can count something in:
+    a single-word term, or one non-label word of each multi-word term,
+    as a maximal [a-z] run of the ASCII-lowered text, and every row that
+    is not pure ASCII.
 
 `redactions` has its own UDF (make_scrub_redactions), which repeats the
 word path. Catalyst drops an unreferenced deterministic UDF column from
@@ -52,8 +53,13 @@ from .tokens import Tokens, split_batch
 
 logger = logging.getLogger(__name__)
 
-_EXT = ("email", "ssn", "phone", "toxic")
-_REGEX_GATE = "[@0-9]|" + "|".join(map(re.escape, lx.TOXICITY_WORDS))
+# core.regex_scrub's passes, in its order
+_PASSES = [(cat, pat, lx.CATEGORY_LABELS[cat])
+           for cat, pat in [*lx.REGEX_SCRUB_ORDER, ("toxic", lx.TOXIC_PATTERN)]]
+_EXT = tuple(cat for cat, _, _ in _PASSES)
+# The passes before the first one that changes a row leave it as it was,
+# so a row some pass changes matches one of the patterns before any pass.
+_ANY_PASS = "|".join(f"(?:{pat})" for _, pat, _ in _PASSES)
 
 # A regex pass only removes letter runs or adds its label's ([EMAIL],
 # [SSN], [PHONE], [TOXIC]), none of which is a term word, so the rescan
@@ -204,26 +210,42 @@ def word_path(tok: Tokens, with_fuzzy: bool = True,
     return pc.binary_join(rows, " "), n_exact, n_fuzzy
 
 
+def regex_pass(arr: pa.Array, ascii_rows: pa.Array):
+    """core.regex_scrub on every row of `arr`: (scrubbed texts as a numpy
+    object array, {category: count per row}). The ASCII rows that match
+    a pattern go through the four passes as RE2 column passes, each a
+    count then a replace on the running array; the other rows keep
+    core.regex_scrub, since Python's \\d, \\b and (?i) read non-ASCII
+    text differently from RE2's."""
+    ext = {cat: np.zeros(len(arr), dtype=np.int64) for cat in _EXT}
+    hit = pc.and_(ascii_rows, pc.match_substring_regex(arr, _ANY_PASS))
+    rows = pc.indices_nonzero(hit).to_numpy()
+    if len(rows):
+        sub = arr.filter(hit)
+        for cat, pat, label in _PASSES:
+            ext[cat][rows] = pc.count_substring_regex(sub, pat).to_numpy()
+            sub = pc.replace_substring_regex(sub, pat, label)
+        arr = pc.replace_with_mask(arr, hit, sub)
+    scrubbed = arr.to_numpy(zero_copy_only=False)
+    for i in _rows(pc.invert(ascii_rows)):
+        scrubbed[i], counts = core.regex_scrub(scrubbed[i])
+        for cat, k in counts.items():
+            ext[cat][i] = k
+    return scrubbed, ext
+
+
 def scrub_batch(texts, with_fuzzy: bool = True,
                 lookup: dict | None = None) -> dict[str, np.ndarray]:
     """core.scrub_row on every row of `texts` (a pa.Array, a pandas
     Series or a list; None scrubs like ""), as one array per
     SCRUB_STRUCT field."""
     arr, n_exact, n_fuzzy = word_path(split_batch(texts), with_fuzzy, lookup)
-    n = len(arr)
-    low = pc.ascii_lower(arr)
-    other = pc.invert(pc.string_is_ascii(arr))
-    regex_rows = _rows(pc.or_(other, pc.match_substring_regex(low, _REGEX_GATE)))
-    rescan_rows = _rows(pc.or_(other, pc.match_substring_regex(low, _RESCAN_GATE)))
-
-    scrubbed = arr.to_numpy(zero_copy_only=False)
-    ext = {cat: np.zeros(n, dtype=np.int64) for cat in _EXT}
-    for i in regex_rows:
-        scrubbed[i], counts = core.regex_scrub(scrubbed[i])
-        for cat, k in counts.items():
-            ext[cat][i] = k
-    verify = np.zeros(n, dtype=np.int64)
-    for i in rescan_rows:
+    ascii_rows = pc.string_is_ascii(arr)
+    rescan = pc.or_(pc.invert(ascii_rows),
+                    pc.match_substring_regex(pc.ascii_lower(arr), _RESCAN_GATE))
+    scrubbed, ext = regex_pass(arr, ascii_rows)
+    verify = np.zeros(len(arr), dtype=np.int64)
+    for i in _rows(rescan):
         verify[i] = core.verify_counts(scrubbed[i])[0]
     return {"scrubbed_text": scrubbed, "n_exact": n_exact, "n_fuzzy": n_fuzzy,
             **{f"n_{cat}": ext[cat] for cat in _EXT},

@@ -47,8 +47,7 @@ def scrub_steps() -> list[tuple[str, str]]:
     steps = [(category_pattern(c), lx.CATEGORY_LABELS[c]) for c in _CATEGORY_ORDER]
     for cat, pat in lx.REGEX_SCRUB_ORDER:
         steps.append((pat, lx.CATEGORY_LABELS[cat]))
-    steps.append((r"(?i)\b(" + "|".join(lx.TOXICITY_WORDS) + r")\b",
-                  lx.CATEGORY_LABELS["toxic"]))
+    steps.append((lx.TOXIC_PATTERN, lx.CATEGORY_LABELS["toxic"]))
     return steps
 
 
@@ -60,7 +59,7 @@ COUNT_PATTERNS: dict[str, str] = {c: category_pattern(c) for c in _CATEGORY_ORDE
 COUNT_PATTERNS["email"] = lx.EMAIL_PATTERN
 COUNT_PATTERNS["ssn"] = lx.SSN_PATTERN
 COUNT_PATTERNS["phone"] = lx.PHONE_PATTERN
-COUNT_PATTERNS["toxic"] = r"(?i)\b(" + "|".join(lx.TOXICITY_WORDS) + r")\b"
+COUNT_PATTERNS["toxic"] = lx.TOXIC_PATTERN
 
 # BPE-ish tokenizer: letter runs, digit runs, single other non-space symbols
 BPE_TOKEN_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"

@@ -193,7 +193,9 @@ TOXICITY_WORDS = [
     "damn", "dammit", "hell", "crap", "jerk", "idiot", "stupid",
     "moron", "dumbass", "bastard", "screwed", "sucks", "loser", "trash",
 ]
-TOXICITY_SET = frozenset(TOXICITY_WORDS)
+# Case-insensitive and \b-bounded. Python `re`, RE2 (pyarrow, DuckDB) and
+# Java regex all compile this string, and agree on ASCII text.
+TOXIC_PATTERN = r"(?i)\b(" + "|".join(TOXICITY_WORDS) + r")\b"
 
 # Per-language stopword sets for the heuristic langid stage. Small,
 # high-frequency function words; deterministic and fully in-repo.

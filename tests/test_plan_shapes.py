@@ -199,3 +199,19 @@ def test_fuzzy_vocab_normalizes_per_distinct_token_not_per_occurrence(spark):
     # last HashAggregate is the raw-token distinct's map side + scan)
     tail = plan[plan.rfind("HashAggregate"):]
     assert "regexp_replace" not in tail
+
+
+def test_quality_columns_split_each_text_once(spark):
+    """with_quality's generated code holds one split call site. Subexpression
+    elimination shares only what every row evaluates: with distinct_ratio
+    inside a CASE WHEN word_cnt > 0 branch, its split was generated a
+    second time."""
+    from pii_redaction_pipeline_spark.functions.quality import with_quality
+
+    df = with_quality(spark.createDataFrame(
+        [("a b A",), ("",), ("  ",), (None,)], "transcript string"))
+    seq = df._jdf.queryExecution().debug().codegenToSeq()
+    code = "".join(seq.apply(i)._2() for i in range(seq.size()))
+    assert code.count(".split(") == 1
+    got = [(r.word_cnt, r.distinct_ratio) for r in df.collect()]
+    assert got == [(3, 2 / 3), (0, 0.0), (0, 0.0), (0, 0.0)]

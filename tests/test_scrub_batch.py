@@ -1,10 +1,11 @@
 """functions/scrub.scrub_batch (one tokenization per batch, the word
-path's scan from candidate tokens only, then regex and rescan passes only
-on the rows two pyarrow masks select) against the per-row oracle
+path's scan from candidate tokens only, the regex pass as RE2 column
+passes over the ASCII rows, the rescan on the rows its pyarrow mask
+selects) against the per-row oracle
 core.scrub_row, field by field (hypothesis, no Spark). The batch goes in
 as a list and as the pa.Array the UDF passes.
 
-The rows mix what each mask has to keep: lexicon terms next to
+The rows mix what each pass has to get right: lexicon terms next to
 punctuation (the rescan finds those), labels, email / SSN / phone shapes
 in ASCII and Arabic-Indic digits, toxicity words in mixed case, and the
 code points whose Python semantics RE2 does not share: `ſ` and Kelvin
@@ -74,6 +75,13 @@ def _oracle(text, with_fuzzy, lookup):
 @example(rows=["virginia beach", "west virginia beach", "long beach beach"])
 # every token a candidate
 @example(rows=["houston boston texas monday blue", "new york city new york"])
+# rows the RE2 gate admits that no pass changes, and the shapes where a
+# pattern's \b, its (?i) or its leftmost-first match decides
+@example(rows=["May 15th", "#$%@! #$%@! ok then", "_damn_", "1123-45-67890",
+               "(555)123-4567", "DAMMIT", "damn_it hell", "a@b.cc123-45-6789",
+               "call 555-123-4567-8901", "x@y and (555) 123-4567."])
+# rows of only non-ASCII text
+@example(rows=["١٢٣-٤٥-٦٧٨٩", "ſucks", "İdiot", "　", "жук"])
 def test_scrub_batch_matches_scrub_row(with_fuzzy, lookup, rows):
     for batch in (rows, pa.array(rows, pa.string())):
         got = scrub.scrub_batch(batch, with_fuzzy, lookup)
