@@ -38,11 +38,9 @@ PKG_ZIP = "pii_redaction_pipeline_spark.zip"
 # auto-enable threshold for the vocabulary-broadcast fuzzy path: inputs
 # at least this large amortize the one extra vocabulary scan (the
 # SALT_VALIDATION.md runbook conclusion — "safe to leave ON for any
-# corpus large enough to amortize one extra scan"); env-overridable for
-# tests and deploy tuning
-AUTO_FUZZY_VOCAB_MIN_BYTES = int(
-    __import__("os").environ.get("PII_SPARK_FUZZY_VOCAB_AUTO_MIN_BYTES",
-                                 1 << 30))
+# corpus large enough to amortize one extra scan"); the two
+# --[no-]fuzzy-vocab-broadcast flags force either path
+AUTO_FUZZY_VOCAB_MIN_BYTES = 1 << 30
 
 
 def fuzzy_vocab_auto(clips) -> tuple[bool, int | None]:
@@ -163,8 +161,7 @@ def main(argv: list[str] | None = None) -> None:
              "(BENCH/SALT_VALIDATION.md). Output is identical "
              "(test-pinned + oracle row pipeline_full_vocab). DEFAULT: "
              "AUTO (round 7) — enabled when the input's estimated size "
-             "is at least $PII_SPARK_FUZZY_VOCAB_AUTO_MIN_BYTES "
-             f"(default {AUTO_FUZZY_VOCAB_MIN_BYTES} = 1 GiB), i.e. "
+             f"is at least {AUTO_FUZZY_VOCAB_MIN_BYTES} bytes (1 GiB), i.e. "
              "whenever the corpus is large enough to amortize the one "
              "extra vocabulary scan (SALT_VALIDATION.md runbook: ≈free "
              "at 8M clips, one ~7 s vocab job at 32M). An input without "

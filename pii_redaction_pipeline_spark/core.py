@@ -11,7 +11,6 @@ Semantics reproduce the reference implementation behavior exactly
 (re-derived, not copied):
   - word normalization        — reference src/pii_detector.py:45-75
   - levenshtein               — reference src/pii_detector.py:24-42
-  - "may" month context       — reference src/pii_detector.py:84-108
   - exact longest-first match — reference src/pii_detector.py:173-241
   - fuzzy layer + gates       — reference src/pii_detector.py:243-353
   - label substitution        — reference src/text_redactor.py:77-170
@@ -74,16 +73,6 @@ def normalize_word(word: str) -> str:
     return word
 
 
-_MAY_PATTERNS = [re.compile(p, re.IGNORECASE) for p in lx.MAY_MONTH_PATTERNS]
-
-
-def is_may_month(text: str, match_start: int, match_end: int) -> bool:
-    """True iff this "may" occurrence is the month, judged from a ±20-char
-    context window (reference src/pii_detector.py:93-108)."""
-    context = text[max(0, match_start - 20): min(len(text), match_end + 20)].lower()
-    return any(p.search(context) for p in _MAY_PATTERNS)
-
-
 # --------------------------------------------------------------------------
 # Word-path detection (tokens = whitespace split of the transcript)
 # --------------------------------------------------------------------------
@@ -98,15 +87,15 @@ class Match:
 
 
 # Word-level phrase trie (Aho-Corasick-style automaton without failure
-# links — phrases are ≤ MAX_PHRASE_LEN words and the reference restarts
-# at i+1 on a miss, so a plain trie walk reproduces its semantics).
+# links — phrases are ≤ 4 words (reference src/pii_detector.py:184) and
+# the reference restarts at i+1 on a miss, so a plain trie walk
+# reproduces its semantics).
 # Nodes are dicts keyed by normalized word; the int sentinel key holds
 # the terminal category (ints can't collide with str word keys). Every
 # phrase matching at position i lies ON the single root walk through
-# norm[i:], so collecting terminal depths along one walk and taking the
-# deepest passing one is exactly the reference's longest-first retry
-# loop (src/pii_detector.py:173-241) — without re-joining 4/3/2-word
-# slice strings per position.
+# norm[i:], so taking the deepest terminal of one walk is exactly the
+# reference's longest-first retry loop (src/pii_detector.py:173-241) —
+# without re-joining 4/3/2-word slice strings per position.
 _TRIE_CAT = 0
 
 
@@ -129,7 +118,6 @@ def exact_match(tokens: list[str], norm: list[str], matched: set[int]) -> list[M
     as a single trie walk per start position."""
     matches: list[Match] = []
     n = len(tokens)
-    full_text: str | None = None
     root = _PHRASE_TRIE
     i = 0
     while i < n:
@@ -140,25 +128,18 @@ def exact_match(tokens: list[str], norm: list[str], matched: set[int]) -> list[M
         if node is None:
             i += 1  # fast path: no term can start here
             continue
-        # walk as deep as the tokens allow, recording terminal depths
-        terminals: list[tuple[int, str]] = (
-            [(1, node[_TRIE_CAT])] if _TRIE_CAT in node else [])
+        # walk as deep as the tokens allow; the deepest terminal wins
+        longest = (1, node[_TRIE_CAT]) if _TRIE_CAT in node else None
         j = i + 1
         while j < n:
             node = node.get(norm[j])
             if node is None:
                 break
             if _TRIE_CAT in node:
-                terminals.append((j - i + 1, node[_TRIE_CAT]))
+                longest = (j - i + 1, node[_TRIE_CAT])
             j += 1
-        for phrase_len, category in reversed(terminals):  # longest first
-            if phrase_len == 1 and norm[i] == "may":
-                if full_text is None:
-                    full_text = " ".join(tokens)
-                word_pos = sum(len(t) + 1 for t in tokens[:i])
-                # end hardcoded +3 like the reference (src/pii_detector.py:219)
-                if not is_may_month(full_text, word_pos, word_pos + 3):
-                    continue
+        if longest is not None:
+            phrase_len, category = longest
             indices = list(range(i, i + phrase_len))
             matched.update(indices)
             matches.append(Match(
@@ -168,7 +149,6 @@ def exact_match(tokens: list[str], norm: list[str], matched: set[int]) -> list[M
                 word_indices=indices,
             ))
             i += phrase_len - 1
-            break
         i += 1
     return matches
 
@@ -411,8 +391,6 @@ def detect_in_text(text: str) -> list[dict]:
                 continue
             if taken.find(1, p, end) >= 0:
                 start = p + 1
-            elif term == "may" and not is_may_month(text, p, end):
-                start = end
             else:
                 taken[p:end] = b"\x01" * tl
                 matches.append({

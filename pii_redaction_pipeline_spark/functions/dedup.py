@@ -537,7 +537,6 @@ SELECT doc_id, CAST({sim} AS BIGINT) AS simhash FROM summed
 # bit_count(a ^ b) is the true 64-bit Hamming distance.
 # ---------------------------------------------------------------------------
 
-SIMHASH64_BITS = 64
 SIMHASH64_BANDS = 4        # 4 disjoint 16-bit blocks
 SIMHASH64_BLOCK_BITS = 16
 _I64_MIN = -9223372036854775807 - 1  # two literals: −2⁶³ overflows parsers

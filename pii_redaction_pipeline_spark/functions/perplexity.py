@@ -110,5 +110,5 @@ def ppl_udf(transcript: pd.Series) -> pd.Series:
     return pd.Series(ppl_batch(transcript))
 
 
-def with_ppl(df, text_col: str = "transcript"):
-    return df.withColumn("ppl", ppl_udf(F.col(text_col)))
+def with_ppl(df):
+    return df.withColumn("ppl", ppl_udf(F.col("transcript")))

@@ -7,7 +7,8 @@ its Python work once per distinct token: normalization, the phrase-trie
 start and the fuzzy result, through the per-worker memos, so repeated
 vocabulary across rows costs one Levenshtein sweep total. The greedy
 scan runs in Python only from the tokens that start a longer phrase (2-3
-a row); numpy and Arrow place the one-token matches and rebuild the
+a row) and keeps the deepest trie terminal it reaches, so the longest
+phrase wins; numpy and Arrow place the one-token matches and rebuild the
 redacted texts. That pyarrow string array then goes through two passes:
   - regex pass (regex_pass): core.regex_scrub's email → ssn → phone →
     toxic replacements. On the ASCII rows that match one of the four
@@ -83,19 +84,11 @@ def _label(category: str) -> str:
     return lx.CATEGORY_LABELS.get(category, f"[{category.upper()}]")
 
 
-def _may_month(tok: Tokens, start: int, end: int, pos: int) -> bool:
-    """core.exact_match's context test for a lone "may" at token `pos` of
-    the row whose tokens are [start, end)."""
-    words = [tok.vocab[v] for v in tok.ids[start:end].tolist()]
-    word_pos = sum(len(w) + 1 for w in words[:pos - start])
-    return core.is_may_month(" ".join(words), word_pos, word_pos + 3)
-
-
 # what a distinct token does in the word path
 _PLAIN = 0   # nothing: it matches no term and has no fuzzy result
-_TERM = 1    # a one-word term that starts no longer phrase (not "may")
+_TERM = 1    # a one-word term that starts no longer phrase
 _FUZZY = 2   # starts no phrase, has a fuzzy result
-_WALK = 3    # starts a longer phrase, or is "may": the scan decides
+_WALK = 3    # starts a longer phrase: the scan decides
 
 
 def word_path(tok: Tokens, with_fuzzy: bool = True,
@@ -135,11 +128,11 @@ def word_path(tok: Tokens, with_fuzzy: bool = True,
 
     kind = np.zeros(len(vocab), dtype=np.uint8)
     label = np.zeros(len(vocab), dtype=ids.dtype)
-    for v, (w, node, f) in enumerate(zip(norm, nodes, fuzzy)):
+    for v, (node, f) in enumerate(zip(nodes, fuzzy)):
         if node is None:
             if f is not None:
                 kind[v], label[v] = _FUZZY, label_id(f[1])
-        elif len(node) == 1 and key in node and w != "may":
+        elif len(node) == 1 and key in node:
             kind[v], label[v] = _TERM, label_id(node[key])
         else:
             kind[v] = _WALK
@@ -155,31 +148,27 @@ def word_path(tok: Tokens, with_fuzzy: bool = True,
             continue
         node = nodes[v]
         end = int(offsets[r + 1])
-        terminals = [(1, node[key])] if key in node else []
+        longest = (1, node[key]) if key in node else None
         j = p + 1
         while j < end:
             node = node.get(norm[ids[j]])
             if node is None:
                 break
             if key in node:
-                terminals.append((j - p + 1, node[key]))
+                longest = (j - p + 1, node[key])
             j += 1
-        for plen, category in reversed(terminals):  # longest first
-            if plen == 1 and norm[v] == "may" and not _may_month(
-                    tok, int(offsets[r]), end, p):
-                continue
+        if longest is not None:
+            plen, category = longest
             at.append(p)
             at_label.append(label_id(category))
             exact_rows.append(r)
             if plen > 1:
                 upto = p + plen
                 cont.extend(range(p + 1, upto))
-            break
-        else:
-            if fuzzy[v] is not None:
-                at.append(p)
-                at_label.append(label_id(fuzzy[v][1]))
-                fuzzy_rows.append(r)
+        elif fuzzy[v] is not None:
+            at.append(p)
+            at_label.append(label_id(fuzzy[v][1]))
+            fuzzy_rows.append(r)
 
     one = np.flatnonzero((kinds == _TERM) | (kinds == _FUZZY))
     drop = None
@@ -297,14 +286,15 @@ def make_scrub_redactions(with_fuzzy: bool = True,
     return _scrub_redactions
 
 
-def with_scrub(df, text_col: str = "transcript", with_fuzzy: bool = True,
+def with_scrub(df, with_fuzzy: bool = True,
                fuzzy_map: dict | Broadcast | None = None):
-    """Attach scrub outputs as top-level columns: one scrub UDF call,
-    projected into its fields, plus the `redactions` UDF, which runs only
-    if the caller keeps that column. A plain-dict `fuzzy_map` is wrapped
-    in `sc.broadcast` here (one executor-side copy per job instead of
-    one closure pickle per task); its size is logged so an adversarially
-    large matched-vocab subset is visible in the driver log."""
+    """Attach the scrub outputs of `transcript` as top-level columns: one
+    scrub UDF call, projected into its fields, plus the `redactions` UDF,
+    which runs only if the caller keeps that column. A plain-dict
+    `fuzzy_map` is wrapped in `sc.broadcast` here (one executor-side copy
+    per job instead of one closure pickle per task); its size is logged
+    so an adversarially large matched-vocab subset is visible in the
+    driver log."""
     if fuzzy_map is not None and with_fuzzy:
         if not isinstance(fuzzy_map, Broadcast):
             import pickle
@@ -315,7 +305,7 @@ def with_scrub(df, text_col: str = "transcript", with_fuzzy: bool = True,
                         n_entries, n_kb)
     else:
         fuzzy_map = None
-    text = F.col(text_col)
+    text = F.col("transcript")
     df = df.withColumn("_scrub", make_detect_and_scrub(with_fuzzy, fuzzy_map)(text))
     s = {f.name: F.col(f"_scrub.{f.name}") for f in SCRUB_STRUCT.fields}
     pii_count = s["n_exact"] + s["n_fuzzy"]

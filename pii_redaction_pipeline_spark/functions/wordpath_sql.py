@@ -20,12 +20,12 @@ consumed set is implied by the cursor path (core.exact_match checks
 skips).
 
 Two semantics simplifications are NOT taken here but FALL OUT of the
-lexicon: (a) the "may" month gate is dead — "may" is not in
-PHRASE_TO_CATEGORY at all (bug-compat with the reference, see
-core.is_may_month docstring), so no gate appears in the SQL; (b)
-per-start longest-first needs no tie-break beyond length — a phrase is
-a unique trie key (PHRASE_TO_CATEGORY is a dict; "new york" resolves to
-one category there, same as the trie build).
+lexicon: (a) no trie terminal is ever rejected — "may" is not in
+PHRASE_TO_CATEGORY (as in the reference lexicon), so the reference's
+"may" month gate is dead there, core has none, and none appears in
+the SQL; (b) per-start longest-first needs no tie-break beyond length
+— a phrase is a unique trie key (PHRASE_TO_CATEGORY is a dict; "new
+york" resolves to one category there, same as the trie build).
 
 The fuzzy half reuses the gates proven green by the fuzzy_vocab oracle
 row (functions/fuzzy_sql.py), applied per UNMATCHED POSITION instead of

@@ -21,7 +21,7 @@ DAYS = [
     "mon", "tue", "tues", "wed", "thu", "thur", "thurs", "fri", "sat", "sun",
 ]
 
-# "may" is excluded and handled with context rules (core.is_may_month).
+# "may" is excluded (as in the reference), so no term is "may".
 MONTHS = [
     "january", "february", "march", "april", "june", "july",
     "august", "september", "october", "november", "december",
@@ -119,10 +119,9 @@ FUZZY_BLACKLIST = frozenset({
 FUZZY_MAX_DISTANCE = 2     # reference src/config.py:31
 FUZZY_MIN_CONFIDENCE = 0.7  # reference src/config.py:32
 
-# Verification thresholds (reference src/config.py:42-44).
-VERIFY_PASS_THRESHOLD = 0
+# Verification threshold (reference src/config.py:42-44): core.grade
+# passes 0 residuals, reviews up to this many and fails the rest.
 VERIFY_REVIEW_THRESHOLD = 2
-VERIFY_FAIL_THRESHOLD = 2
 
 
 def sorted_terms() -> list[tuple[str, str]]:
@@ -153,8 +152,6 @@ PHRASE_TO_CATEGORY: dict[str, str] = {}
 for _t, _c in SORTED_TERMS:
     PHRASE_TO_CATEGORY.setdefault(_t, _c)
 
-MAX_PHRASE_LEN = 4  # reference src/pii_detector.py:184
-
 # Set used by the lexicon-gated de-pluralization (src/pii_detector.py:71).
 PLURAL_GATE_TERMS = frozenset(DAYS + MONTHS + COLORS + STATES + CITIES_SINGLE)
 
@@ -163,14 +160,6 @@ PLURAL_GATE_TERMS = frozenset(DAYS + MONTHS + COLORS + STATES + CITIES_SINGLE)
 # src/pii_detector.py:294-321).
 FUZZY_CANDIDATE_TERMS: list[tuple[str, str]] = [
     (t, c) for t, c in SORTED_TERMS if " " not in t and len(t) >= 5
-]
-
-# "may" month-context patterns (reference src/pii_detector.py:85-90).
-MAY_MONTH_PATTERNS = [
-    r"\b(in|during|last|next|this|of|since|before|after|until|by)\s+may\b",
-    r"\bmay\s+\d{1,2}(st|nd|rd|th)?\b",
-    r"\bmay\s+of\s+\d{4}\b",
-    r"^may\s+\d",
 ]
 
 # --- North-star extensions (BASELINE.json north_rule) -----------------------

@@ -63,24 +63,23 @@ class PipelineConfig:
     # the 10^12-scale path, and the root fix for hot-vocabulary skew.
     # Note: makes apply_pipeline EAGER (one small Spark job up front).
     fuzzy_vocab_broadcast: bool = False
-    text_col: str = "transcript"
 
 
 def apply_pipeline(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     cfg = cfg or PipelineConfig()
     audio_on = cfg.with_audio_verify and "bytes" in df.columns
-    df = with_quality(df, cfg.text_col)   # pure Column exprs (codegen)
-    df = with_langid(df, cfg.text_col)    # pandas UDF, fused with scrub/ppl
+    df = with_quality(df)                 # pure Column exprs (codegen)
+    df = with_langid(df)                  # pandas UDF, fused with scrub/ppl
     fmap = None
     if cfg.with_fuzzy and cfg.fuzzy_vocab_broadcast:
         from .functions.fuzzy_sql import collect_fuzzy_vocab_map
-        fmap = collect_fuzzy_vocab_map(df, df.sparkSession, cfg.text_col)
-    df = with_scrub(df, cfg.text_col, cfg.with_fuzzy, fmap)  # hot-path pandas UDF
+        fmap = collect_fuzzy_vocab_map(df, df.sparkSession, "transcript")
+    df = with_scrub(df, cfg.with_fuzzy, fmap)  # hot-path pandas UDF
     if audio_on:
         df = with_decode_verify(df)       # only stage that touches `bytes`
     df = with_grade(df)                   # CASE grading; fuses decode_ok
     if cfg.with_ppl:
-        df = with_ppl(df, cfg.text_col)
+        df = with_ppl(df)
     return df
 
 

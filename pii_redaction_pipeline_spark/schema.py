@@ -59,23 +59,3 @@ WER_STRUCT = T.StructType([
     T.StructField("reference_words", T.IntegerType(), True),
     T.StructField("hypothesis_words", T.IntegerType(), True),
 ])
-
-MANIFEST_SCHEMA = T.StructType([
-    T.StructField("clip_id", T.StringType(), False),
-    T.StructField("duration_sec", T.DoubleType(), True),
-    T.StructField("sample_rate", T.IntegerType(), True),
-    T.StructField("has_pii", T.BooleanType(), True),
-    T.StructField("pii_count", T.IntegerType(), True),
-    T.StructField("deid_version", T.StringType(), True),
-    T.StructField("qa_status", T.StringType(), True),
-])
-
-LINEAGE_SCHEMA = T.StructType([
-    T.StructField("run_id", T.StringType(), False),
-    T.StructField("bucket", T.IntegerType(), False),
-    T.StructField("n_rows", T.LongType(), True),
-    T.StructField("n_kept", T.LongType(), True),
-    T.StructField("n_errors", T.LongType(), True),
-    T.StructField("elapsed_ms", T.LongType(), True),
-    T.StructField("status", T.StringType(), True),
-])

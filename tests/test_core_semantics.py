@@ -44,24 +44,6 @@ class TestNormalizeWord:
         assert core.normalize_word("") == ""
 
 
-class TestMayContext:
-    def test_modal_verb(self):
-        assert not core.is_may_month("You may proceed", 4, 7)
-        assert not core.is_may_month("avocado may actually be", 8, 11)
-        assert not core.is_may_month("It may rain tomorrow", 3, 6)
-
-    def test_month_with_preposition(self):
-        assert core.is_may_month("In May we celebrate", 3, 6)
-        assert core.is_may_month("during May the weather", 7, 10)
-        assert core.is_may_month("last May I visited", 5, 8)
-        assert core.is_may_month("next May will be", 5, 8)
-
-    def test_month_with_date(self):
-        assert core.is_may_month("May 15th is the date", 0, 3)
-        assert core.is_may_month("on May 1st we", 3, 6)
-        assert core.is_may_month("May 2024 was great", 0, 3)
-
-
 class TestLevenshtein:
     def test_exact(self):
         assert core.levenshtein("monday", "monday") == 0
@@ -179,9 +161,9 @@ class TestWordPathDetect:
 
     def test_may_never_matched_bug_compat(self):
         # "may" is excluded from the MONTHS term list in the reference
-        # lexicon (src/lexicon.py:16-21) and is_may_month is only consulted
-        # when a sorted term equals "may" — which never happens. So the
-        # month "May" is NEVER detected. Bug-compatible by design; the
+        # lexicon (src/lexicon.py:16-21), and its month-context rule only
+        # runs when a sorted term equals "may" — which never happens. So
+        # the month "May" is NEVER detected. Bug-compatible by design; the
         # reference's own test relaxes this to `>= 0` matches
         # (tests/test_pii_detector.py:164-171).
         out, _ = self.scrub("in May we celebrate")

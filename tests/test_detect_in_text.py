@@ -42,9 +42,6 @@ def _detect_in_text_re(text):
             if any(p in matched_positions for p in range(abs_start, abs_end)):
                 start = abs_start + 1
                 continue
-            if term == "may" and not core.is_may_month(text, abs_start, abs_end):
-                start = abs_end
-                continue
             matched_positions.update(range(abs_start, abs_end))
             matches.append({
                 "text": text[abs_start:abs_end],

@@ -256,6 +256,87 @@ def test_every_package_module_is_reachable_from_an_entry_point():
     assert not set(UNREACHED_KEEP) & reached, "keep-list entry is reached"
 
 
+# public top-level package names nothing outside their own definition
+# names (module.name: reason)
+UNREFERENCED_KEEP = {
+    "functions.audio.with_bleeped_audio": "reference stage 4",
+    "functions.wer.batch_wer": "the reference's WER QA",
+    "functions.wer.clean_human_transcript": "the reference's WER cleanup",
+    "report.transcript_view": "reference transcript view",
+    "sources.audio_dir.read_audio_dir": "reference S1",
+    "sources.tableio.read_metrics": "reads the metrics table back",
+    "sources.tableio.append_metrics": "writes the metrics table",
+    "streaming.pipeline.scrub_stream": "entry point: the scrub stream",
+    "datagen.clips_pandas": "test fixture generator",
+    "pipeline.deid_json_df": "reference S4/S5 redacted-JSON sink",
+    "functions.dedup.lsh_bucket_stats": "metrics row for append_metrics",
+    "functions.dedup.simhash64_bucket_stats": "metrics row for append_metrics",
+    "functions.similarity.embedding_bucket_stats":
+        "metrics row for append_metrics",
+    "functions.similarity.train_ivf_centroids":
+        "k-means centroids for the IVF top-k",
+    "functions.similarity.spark_neardup_bruteforce":
+        "exact recall oracle of the near-dup joins",
+    "functions.wordpath_sql.register_oracle_tables":
+        "loads the DuckDB oracle's tables",
+}
+
+
+def _name_scan(repo: Path):
+    """(public top-level package definitions as (module, name, where),
+    {name: every (file, top-level statement) whose code names it}).
+    Names in strings and comments do not count."""
+    import ast
+
+    def refs(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                yield n.id
+            elif (isinstance(n, ast.Attribute)
+                  and not isinstance(n.ctx, ast.Store)):
+                yield n.attr
+            elif isinstance(n, ast.ImportFrom):
+                yield from (a.name for a in n.names)
+
+    def defined(stmt):
+        if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+            return [stmt.name]
+        if isinstance(stmt, ast.Assign):
+            return [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+        if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target,
+                                                           ast.Name):
+            return [stmt.target.id]
+        return []
+
+    files = [*sorted((repo / PKG).rglob("*.py")), *sorted(repo.glob("*.py")),
+             *sorted((repo / "perfbench").glob("*.py"))]
+    defs, where = [], {}
+    for f in files:
+        mod = ".".join(f.relative_to(repo).with_suffix("").parts)
+        for i, stmt in enumerate(ast.parse(f.read_text()).body):
+            for name in refs(stmt):
+                where.setdefault(name, set()).add((f, i))
+            if mod.startswith(PKG + "."):
+                defs += [(mod.removeprefix(PKG + "."), name, (f, i))
+                         for name in defined(stmt) if not name.startswith("_")]
+    return defs, where
+
+
+def test_every_public_package_name_is_referenced():
+    """Name-level twin of the module reachability test: every public
+    top-level name a package module defines must be named in code
+    outside its own definition, in the package, the root scripts or
+    perfbench/, or sit on UNREFERENCED_KEEP with a reason. Tests do not
+    count: a name only tests use is dead weight for the job."""
+    defs, where = _name_scan(Path(job.REPO))
+    unreferenced = {f"{mod}.{name}" for mod, name, loc in defs
+                    if not where.get(name, set()) - {loc}}
+    extra = unreferenced - set(UNREFERENCED_KEEP)
+    assert not extra, f"nothing outside tests names {sorted(extra)}"
+    stale = set(UNREFERENCED_KEEP) - unreferenced
+    assert not stale, f"keep-list entry is referenced or gone: {sorted(stale)}"
+
+
 def test_cpu_default_follows_host(monkeypatch):
     """With SPARK_GRAFT_CPUS unset, bench sizes local[N] from the CPUs
     this process may run on, not a fixed 32."""

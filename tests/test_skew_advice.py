@@ -99,16 +99,20 @@ def _job_env():
     return env
 
 
-def _run_job(args_list, timeout=420, extra_env=None):
+# job.py's CLI with the AUTO fuzzy-vocab threshold lowered to 1 byte
+_JOB_AUTO_AT_1_BYTE = ("-c", "import sys, job; "
+                       "job.AUTO_FUZZY_VOCAB_MIN_BYTES = 1; "
+                       "job.main(sys.argv[1:])")
+
+
+def _run_job(args_list, timeout=420, launch=(str(REPO / "job.py"),)):
     """One job.py subprocess with the suite's one-retry guard for
     transient JVM-spawn failures under a loaded epoch."""
     def go():
-        env = _job_env()
-        env.update(extra_env or {})
         return subprocess.run(
-            [sys.executable, str(REPO / "job.py"), *args_list],
+            [sys.executable, *launch, *args_list],
             capture_output=True, text=True, timeout=timeout,
-            cwd=str(REPO), env=env)
+            cwd=str(REPO), env=_job_env())
     r = go()
     if r.returncode != 0:
         r = go()
@@ -187,8 +191,8 @@ def test_job_fuzzy_vocab_broadcast_cli(spark, tmp_path):
 def test_job_fuzzy_vocab_broadcast_auto_default(spark, tmp_path):
     """Round-7 default (round-6 verdict item 4): with NO flag given,
     job.py auto-enables the vocabulary-broadcast fuzzy path when the
-    input's estimated size clears $PII_SPARK_FUZZY_VOCAB_AUTO_MIN_BYTES
-    (forced to 1 byte here), prints the auto-decision receipt, and the
+    input's estimated size clears job.AUTO_FUZZY_VOCAB_MIN_BYTES
+    (set to 1 byte here, in the job process), prints the auto-decision receipt, and the
     output still matches the per-row fuzzy path row-for-row;
     --no-fuzzy-vocab-broadcast force-disables regardless of size."""
     from pyspark.sql import functions as F  # noqa: F811
@@ -205,7 +209,7 @@ def test_job_fuzzy_vocab_broadcast_auto_default(spark, tmp_path):
     out = tmp_path / "out_auto"
     r = _run_job(["--input", str(corpus), "--output", str(out),
                   "--buckets", "2", "--no-audio-verify", "--no-ppl"],
-                 extra_env={"PII_SPARK_FUZZY_VOCAB_AUTO_MIN_BYTES": "1"})
+                 launch=_JOB_AUTO_AT_1_BYTE)
     assert r.returncode == 0, r.stderr[-2000:]
     lines = [json.loads(x) for x in r.stdout.strip().splitlines()
              if x.startswith("{")]
@@ -235,7 +239,7 @@ def test_job_fuzzy_vocab_broadcast_auto_default(spark, tmp_path):
     r2 = _run_job(["--input", str(corpus), "--output", str(out2),
                    "--buckets", "2", "--no-audio-verify", "--no-ppl",
                    "--no-fuzzy-vocab-broadcast"],
-                  extra_env={"PII_SPARK_FUZZY_VOCAB_AUTO_MIN_BYTES": "1"})
+                  launch=_JOB_AUTO_AT_1_BYTE)
     assert r2.returncode == 0, r2.stderr[-2000:]
     assert "fuzzy_vocab_broadcast_auto" not in r2.stdout
 
