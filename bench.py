@@ -14,7 +14,7 @@ query's explain("formatted") to DIR/<name>.txt.
 Headline metric = wall seconds of the full filter+scrub pipeline over the
 clips table (clips/sec reported alongside — the north-star throughput
 number). Clips input is materialized to parquet once (cached under
-.bench_cache/) so the measurement is scan→pipeline→agg, not datagen.
+.bench_cache/) so the measurement is scan→pipeline→noop sink, not datagen.
 
 Trustworthiness (round-4 verdict item — the r3 driver epoch recorded
 walls 4-59× off the re-measured values with no way to tell):
@@ -241,12 +241,13 @@ def main(argv: list[str] | None = None) -> None:
 
     canary_start = canary_walls(spark, clips_path)
 
-    # headline: full filter+scrub pipeline (text hot path), result count
-    # forces full evaluation; noop-agg avoids collect cost skew. Task
-    # balance comes from scan splits (BENCH/BASELINE.md)
+    # headline: job.py's pipeline without audio, every result column
+    # written to the noop sink (an aggregate over a few columns would let
+    # Catalyst prune ppl_udf). Task balance comes from scan splits
+    # (BENCH/BASELINE.md)
     def run_pipeline():
-        out = apply_pipeline(clips, PipelineConfig(with_audio_verify=False))
-        out.groupBy("qa_status", "keep").count().collect()
+        apply_pipeline(clips, PipelineConfig(with_audio_verify=False)).drop(
+            "redactions").write.format("noop").mode("overwrite").save()
 
     raw["pipeline_full_text"] = bench_runs(run_pipeline)
     t_pipeline = min(raw["pipeline_full_text"])

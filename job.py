@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import sys
 import zipfile
 from pathlib import Path
@@ -34,33 +35,6 @@ sys.path.insert(0, str(REPO))
 
 
 PKG_ZIP = "pii_redaction_pipeline_spark.zip"
-
-# auto-enable threshold for the vocabulary-broadcast fuzzy path: inputs
-# at least this large amortize the one extra vocabulary scan (the
-# SALT_VALIDATION.md runbook conclusion — "safe to leave ON for any
-# corpus large enough to amortize one extra scan"); the two
-# --[no-]fuzzy-vocab-broadcast flags force either path
-AUTO_FUZZY_VOCAB_MIN_BYTES = 1 << 30
-
-
-def fuzzy_vocab_auto(clips) -> tuple[bool, int | None]:
-    """The AUTO rule for the vocabulary-broadcast fuzzy path: on when the
-    plan's size estimate is at least AUTO_FUZZY_VOCAB_MIN_BYTES. Returns
-    (decision, estimated bytes or None when unknown).
-
-    An input without size stats (an RDD-backed DataFrame, a catalog table
-    that was never analyzed) reports spark.sql.defaultSizeInBytes, which
-    is Long.MaxValue unless set. That number says nothing about the
-    input, so any estimate at or above it counts as unknown and keeps the
-    per-row path, the faster one on ordinary inputs."""
-    spark = clips.sparkSession
-    est = int(clips._jdf.queryExecution().optimizedPlan().stats()
-              .sizeInBytes())
-    if est >= int(spark._jsparkSession.sessionState().conf()
-                  .defaultSizeInBytes()):
-        return False, None
-    return est >= AUTO_FUZZY_VOCAB_MIN_BYTES, est
-
 
 def make_zip(out: str = PKG_ZIP) -> str:
     pkg = REPO / "pii_redaction_pipeline_spark"
@@ -157,15 +131,14 @@ def main(argv: list[str] | None = None) -> None:
              "candidate dim + JVM levenshtein) and broadcast the "
              "result; per-row fuzzy becomes a dict hit, making per-row "
              "cost byte-proportional — the 10^12-scale path and the "
-             "root fix for hot-vocabulary cost skew "
-             "(BENCH/SALT_VALIDATION.md). Output is identical "
+             "root fix for hot-vocabulary cost skew. Output is identical "
              "(test-pinned + oracle row pipeline_full_vocab). DEFAULT: "
-             "AUTO (round 7) — enabled when the input's estimated size "
-             f"is at least {AUTO_FUZZY_VOCAB_MIN_BYTES} bytes (1 GiB), i.e. "
-             "whenever the corpus is large enough to amortize the one "
-             "extra vocabulary scan (SALT_VALIDATION.md runbook: ≈free "
-             "at 8M clips, one ~7 s vocab job at 32M). An input without "
-             "size stats stays on the per-row path.")
+             "apply_pipeline takes this path when the input's estimated "
+             "size is at least pipeline.FUZZY_VOCAB_MIN_BYTES (1 GiB) and "
+             "logs the decision. Pass it for a smaller input with "
+             "hot-vocabulary skew, which size does not show: on the skew "
+             "fixture (about 0.65 GB) it ran in 153 s against 890 s "
+             "per-row (BENCH/SALT_VALIDATION.md).")
     ap.add_argument(
         "--no-fuzzy-vocab-broadcast", dest="fuzzy_vocab_broadcast",
         action="store_false",
@@ -234,16 +207,15 @@ def main(argv: list[str] | None = None) -> None:
         spark.stop()
         return
 
-    fuzzy_vocab = args.fuzzy_vocab_broadcast
-    if fuzzy_vocab is None:  # AUTO: plan-stats size estimate, no extra job
-        fuzzy_vocab, est_bytes = fuzzy_vocab_auto(clips)
-        print(json.dumps({"fuzzy_vocab_broadcast_auto": fuzzy_vocab,
-                          "input_est_bytes": est_bytes,
-                          "threshold_bytes": AUTO_FUZZY_VOCAB_MIN_BYTES}))
+    # the package's automatic decisions (the fuzzy path, the broadcast
+    # map's size) go to the job log on stderr
+    pkg_log = logging.getLogger("pii_redaction_pipeline_spark")
+    pkg_log.setLevel(logging.INFO)
+    pkg_log.addHandler(logging.StreamHandler())
 
     cfg = PipelineConfig(with_audio_verify=not args.no_audio_verify,
                          with_ppl=not args.no_ppl,
-                         fuzzy_vocab_broadcast=fuzzy_vocab)
+                         fuzzy_vocab_broadcast=args.fuzzy_vocab_broadcast)
 
     def process(df):
         return apply_pipeline(df, cfg).drop("redactions")

@@ -292,17 +292,13 @@ def with_scrub(df, with_fuzzy: bool = True,
     scrub UDF call, projected into its fields, plus the `redactions` UDF,
     which runs only if the caller keeps that column. A plain-dict
     `fuzzy_map` is wrapped in `sc.broadcast` here (one executor-side copy
-    per job instead of one closure pickle per task); its size is logged
-    so an adversarially large matched-vocab subset is visible in the
-    driver log."""
+    per job instead of one closure pickle per task); its entry count is
+    logged so an adversarially large matched-vocab subset is visible in
+    the driver log."""
     if fuzzy_map is not None and with_fuzzy:
         if not isinstance(fuzzy_map, Broadcast):
-            import pickle
-            n_entries = len(fuzzy_map)
-            n_kb = len(pickle.dumps(fuzzy_map)) // 1024
+            logger.info("fuzzy_map broadcast: %d entries", len(fuzzy_map))
             fuzzy_map = df.sparkSession.sparkContext.broadcast(fuzzy_map)
-            logger.info("fuzzy_map broadcast: %d entries, ~%d KB pickled",
-                        n_entries, n_kb)
     else:
         fuzzy_map = None
     text = F.col("transcript")

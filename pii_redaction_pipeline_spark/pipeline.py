@@ -27,6 +27,10 @@ Scale notes (100 TB / 1000 executors):
     mixes rows across files once. On the skew fixture the broadcast alone
     ran 3.1× faster than per-row fuzzy behind a salted exchange
     (BENCH/SALT_VALIDATION.md).
+  - apply_pipeline picks the fuzzy path from its input's size
+    (fuzzy_vocab_auto) unless PipelineConfig.fuzzy_vocab_broadcast forces
+    one, and is eager (one vocabulary job up front) only on the vocab
+    broadcast path.
   - `bytes` is projected into the decode stage only; with
     with_audio_verify=False Catalyst prunes it out of the scan entirely
     (check .explain → ReadSchema excludes bytes).
@@ -36,15 +40,25 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.audio import with_decode_verify
+from .functions.fuzzy_sql import collect_fuzzy_vocab_map
 from .functions.perplexity import with_ppl
 from .functions.quality import with_grade, with_langid, with_quality
 from .functions.scrub import with_scrub
+
+logger = logging.getLogger(__name__)
+
+# batch inputs this large amortize the vocab broadcast's extra job. Size
+# alone does not see hot-vocabulary skew, which makes the broadcast the
+# faster path on smaller inputs too (SCALE.md, Round 7); that case is
+# what PipelineConfig.fuzzy_vocab_broadcast=True is for
+FUZZY_VOCAB_MIN_BYTES = 1 << 30
 
 
 @dataclass
@@ -55,25 +69,57 @@ class PipelineConfig:
     # SQL-mirrorable pipeline subset behind the pipeline_exact_only
     # oracle row; production runs keep the default True
     with_fuzzy: bool = True
-    # fuzzy_vocab_broadcast=True precomputes the fuzzy layer ONCE over
-    # the corpus's distinct vocabulary (functions/fuzzy_sql.
-    # collect_fuzzy_vocab_map — one relational job, result broadcast in
-    # the UDF closure) instead of sweeping per row/worker. Identical
-    # output (test-pinned); per-row cost becomes byte-proportional —
-    # the 10^12-scale path, and the root fix for hot-vocabulary skew.
-    # Note: makes apply_pipeline EAGER (one small Spark job up front).
-    fuzzy_vocab_broadcast: bool = False
+    # the fuzzy path: None lets apply_pipeline pick it from the input's
+    # size (fuzzy_vocab_auto); True forces the vocabulary broadcast
+    # (functions/fuzzy_sql.collect_fuzzy_vocab_map, one relational job
+    # whose result the scrub UDF looks up), False the per-row sweep.
+    # Identical output either way (test-pinned).
+    fuzzy_vocab_broadcast: bool | None = None
+
+
+def fuzzy_vocab_auto(df: DataFrame) -> tuple[bool, int | None]:
+    """The rule that picks the vocabulary-broadcast fuzzy path: on when
+    the plan's size estimate is at least FUZZY_VOCAB_MIN_BYTES. Returns
+    (decision, estimated bytes or None when unknown).
+
+    An input without size stats (an RDD-backed DataFrame, a catalog table
+    that was never analyzed) reports spark.sql.defaultSizeInBytes, which
+    is Long.MaxValue unless set. That number says nothing about the
+    input, so any estimate at or above it counts as unknown and keeps the
+    per-row path, the faster one on ordinary inputs."""
+    spark = df.sparkSession
+    est = int(df._jdf.queryExecution().optimizedPlan().stats()
+              .sizeInBytes())
+    if est >= int(spark._jsparkSession.sessionState().conf()
+                  .defaultSizeInBytes()):
+        return False, None
+    return est >= FUZZY_VOCAB_MIN_BYTES, est
+
+
+def _fuzzy_path_name(use_vocab_map: bool) -> str:
+    return "vocab broadcast" if use_vocab_map else "per-row"
 
 
 def apply_pipeline(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     cfg = cfg or PipelineConfig()
     audio_on = cfg.with_audio_verify and "bytes" in df.columns
+    use_vocab_map = False
+    if cfg.with_fuzzy and cfg.fuzzy_vocab_broadcast is not None:
+        use_vocab_map = cfg.fuzzy_vocab_broadcast
+        logger.info("fuzzy path: %s (set by fuzzy_vocab_broadcast)",
+                    _fuzzy_path_name(use_vocab_map))
+    elif cfg.with_fuzzy:
+        # a stream never asks for plan stats: each microbatch brings new
+        # vocabulary, so it keeps the per-row path
+        use_vocab_map, est = ((False, None) if df.isStreaming
+                              else fuzzy_vocab_auto(df))
+        logger.info("fuzzy path: %s (input estimate %s bytes, threshold "
+                    "%d bytes)", _fuzzy_path_name(use_vocab_map),
+                    "unknown" if est is None else est, FUZZY_VOCAB_MIN_BYTES)
     df = with_quality(df)                 # pure Column exprs (codegen)
     df = with_langid(df)                  # pandas UDF, fused with scrub/ppl
-    fmap = None
-    if cfg.with_fuzzy and cfg.fuzzy_vocab_broadcast:
-        from .functions.fuzzy_sql import collect_fuzzy_vocab_map
-        fmap = collect_fuzzy_vocab_map(df, df.sparkSession, "transcript")
+    fmap = (collect_fuzzy_vocab_map(df, df.sparkSession, "transcript")
+            if use_vocab_map else None)
     df = with_scrub(df, cfg.with_fuzzy, fmap)  # hot-path pandas UDF
     if audio_on:
         df = with_decode_verify(df)       # only stage that touches `bytes`

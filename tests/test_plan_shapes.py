@@ -132,8 +132,9 @@ def test_scrub_pipeline_python_stages_fused(spark, tmp_path):
 
 def test_dropped_redactions_never_run(spark, tmp_path):
     """`redactions` is its own UDF column: once the caller drops it (job.py,
-    streaming, the benchmark), Catalyst prunes the UDF and the one Python
-    stage runs exactly langid, scrub and ppl; deid_json_df keeps it."""
+    streaming, perfbench, bench.py's text headline), Catalyst prunes the
+    UDF and the one Python stage runs exactly langid, scrub and ppl;
+    deid_json_df keeps it."""
     from pii_redaction_pipeline_spark.pipeline import (
         PipelineConfig,
         apply_pipeline,

@@ -42,7 +42,7 @@ _ROW = st.one_of(
 )
 _FIELDS = ("scrubbed_text", "n_exact", "n_fuzzy", "n_email", "n_ssn",
            "n_phone", "n_toxic", "verify_pii_count")
-# a precomputed fuzzy table as fuzzy_vocab_broadcast builds it, plus one
+# a precomputed fuzzy table as collect_fuzzy_vocab_map builds it, plus one
 # entry no Levenshtein sweep would produce: the kernel must read the map
 _FUZZY_MAP = {w: core._fuzzy_lookup(w) for w in ("huston", "febuary", "phenix")}
 _FUZZY_MAP["flew"] = ("ohio", "state", 2)

@@ -2,7 +2,8 @@
 (sources/tableio.cost_balanced_rewrite, `--rewrite-layout`) on a
 miniature of skew_fixture.py's workload (hot rows whose unique
 vocabulary defeats the fuzzy memo, clustered in one input file), and the
-vocabulary-broadcast fuzzy path with its AUTO rule."""
+vocabulary-broadcast fuzzy path with the input-size rule in
+pipeline.apply_pipeline that picks it."""
 
 import json
 import subprocess
@@ -12,7 +13,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-import job
+from pii_redaction_pipeline_spark import pipeline
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -99,9 +100,10 @@ def _job_env():
     return env
 
 
-# job.py's CLI with the AUTO fuzzy-vocab threshold lowered to 1 byte
+# job.py's CLI with the fuzzy-vocab size threshold lowered to 1 byte
 _JOB_AUTO_AT_1_BYTE = ("-c", "import sys, job; "
-                       "job.AUTO_FUZZY_VOCAB_MIN_BYTES = 1; "
+                       "from pii_redaction_pipeline_spark import pipeline; "
+                       "pipeline.FUZZY_VOCAB_MIN_BYTES = 1; "
                        "job.main(sys.argv[1:])")
 
 
@@ -166,6 +168,8 @@ def test_job_fuzzy_vocab_broadcast_cli(spark, tmp_path):
                   "--buckets", "4", "--no-audio-verify", "--no-ppl",
                   "--fuzzy-vocab-broadcast"])
     assert r.returncode == 0, r.stderr[-2000:]
+    assert ("fuzzy path: vocab broadcast (set by fuzzy_vocab_broadcast)"
+            in r.stderr)
     info = json.loads(r.stdout.strip().splitlines()[-1])
     assert info["processed_buckets"] == 4
     results = spark.read.parquet(str(out / "results"))
@@ -189,12 +193,12 @@ def test_job_fuzzy_vocab_broadcast_cli(spark, tmp_path):
 
 @pytest.mark.slow
 def test_job_fuzzy_vocab_broadcast_auto_default(spark, tmp_path):
-    """Round-7 default (round-6 verdict item 4): with NO flag given,
-    job.py auto-enables the vocabulary-broadcast fuzzy path when the
-    input's estimated size clears job.AUTO_FUZZY_VOCAB_MIN_BYTES
-    (set to 1 byte here, in the job process), prints the auto-decision receipt, and the
-    output still matches the per-row fuzzy path row-for-row;
-    --no-fuzzy-vocab-broadcast force-disables regardless of size."""
+    """With no fuzzy flag, job.py takes the vocabulary-broadcast fuzzy
+    path when the input's estimated size clears
+    pipeline.FUZZY_VOCAB_MIN_BYTES (set to 1 byte here, in the job
+    process), logs the decision to stderr, and the output still matches
+    the per-row fuzzy path row-for-row; --no-fuzzy-vocab-broadcast
+    forces the per-row path regardless of size."""
     from pyspark.sql import functions as F  # noqa: F811
 
     corpus = tmp_path / "corpus"
@@ -211,11 +215,11 @@ def test_job_fuzzy_vocab_broadcast_auto_default(spark, tmp_path):
                   "--buckets", "2", "--no-audio-verify", "--no-ppl"],
                  launch=_JOB_AUTO_AT_1_BYTE)
     assert r.returncode == 0, r.stderr[-2000:]
-    lines = [json.loads(x) for x in r.stdout.strip().splitlines()
-             if x.startswith("{")]
-    auto = next(x for x in lines if "fuzzy_vocab_broadcast_auto" in x)
-    assert auto["fuzzy_vocab_broadcast_auto"] is True
-    assert auto["threshold_bytes"] == 1
+    decisions = [x for x in r.stderr.splitlines() if "fuzzy path:" in x]
+    assert len(decisions) == 1, decisions
+    assert "fuzzy path: vocab broadcast" in decisions[0]
+    assert "threshold 1 bytes" in decisions[0]
+    assert "fuzzy_map broadcast:" in r.stderr  # with_scrub's map size
 
     results = spark.read.parquet(str(out / "results"))
     got = {r_["clip_id"]: (r_["scrubbed_text"], r_["n_fuzzy"])
@@ -227,38 +231,95 @@ def test_job_fuzzy_vocab_broadcast_auto_default(spark, tmp_path):
     )
     exp_df = apply_pipeline(spark.read.parquet(str(corpus)),
                             PipelineConfig(with_audio_verify=False,
-                                           with_ppl=False))
+                                           with_ppl=False,
+                                           fuzzy_vocab_broadcast=False))
     exp = {r_["clip_id"]: (r_["scrubbed_text"], r_["n_fuzzy"])
            for r_ in exp_df.select("clip_id", "scrubbed_text",
                                    "n_fuzzy").collect()}
     assert got == exp
     assert any(v[1] > 0 for v in got.values())  # fuzzy layer really fired
 
-    # force-off wins over any size threshold: no auto receipt printed
+    # force-off wins over any size threshold: no map built
     out2 = tmp_path / "out_off"
     r2 = _run_job(["--input", str(corpus), "--output", str(out2),
                    "--buckets", "2", "--no-audio-verify", "--no-ppl",
                    "--no-fuzzy-vocab-broadcast"],
                   launch=_JOB_AUTO_AT_1_BYTE)
     assert r2.returncode == 0, r2.stderr[-2000:]
-    assert "fuzzy_vocab_broadcast_auto" not in r2.stdout
+    assert "fuzzy path: per-row (set by fuzzy_vocab_broadcast)" in r2.stderr
+    assert "fuzzy_map broadcast:" not in r2.stderr
+
+
+def _spy_vocab_map(monkeypatch):
+    """Count apply_pipeline's collect_fuzzy_vocab_map calls; each call
+    still runs."""
+    calls = []
+    real = pipeline.collect_fuzzy_vocab_map
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+    monkeypatch.setattr(pipeline, "collect_fuzzy_vocab_map", spy)
+    return calls
+
+
+def test_apply_pipeline_picks_vocab_broadcast_from_input_size(
+        spark, tmp_path, monkeypatch, caplog):
+    """apply_pipeline decides the fuzzy path itself: a batch input at or
+    above pipeline.FUZZY_VOCAB_MIN_BYTES builds the vocabulary map once
+    and logs the decision; fuzzy_vocab_broadcast=False overrides the
+    size; a stream of the same files never asks for plan stats, takes
+    the per-row path and does not raise."""
+    from pii_redaction_pipeline_spark.pipeline import (
+        PipelineConfig,
+        apply_pipeline,
+    )
+    from pii_redaction_pipeline_spark.schema import CLIPS_SCHEMA
+
+    src = str(tmp_path / "clips")
+    spark.createDataFrame(
+        [("clip_000000", None, 16000, 1000, "wav", "we flew to huston")],
+        CLIPS_SCHEMA).write.parquet(src)
+    monkeypatch.setattr(pipeline, "FUZZY_VOCAB_MIN_BYTES", 1)
+    calls = _spy_vocab_map(monkeypatch)
+    caplog.set_level("INFO", logger="pii_redaction_pipeline_spark")
+    cfg = PipelineConfig(with_audio_verify=False, with_ppl=False)
+
+    out = apply_pipeline(spark.read.parquet(src), cfg)
+    assert len(calls) == 1
+    assert "fuzzy path: vocab broadcast" in caplog.text
+    assert out.where("n_fuzzy > 0").count() == 1  # huston → houston
+
+    caplog.clear()
+    apply_pipeline(spark.read.parquet(src),
+                   PipelineConfig(with_audio_verify=False, with_ppl=False,
+                                  fuzzy_vocab_broadcast=False))
+    assert len(calls) == 1
+    assert "fuzzy path: per-row (set by fuzzy_vocab_broadcast)" in caplog.text
+
+    caplog.clear()
+    stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(src)
+    out = apply_pipeline(stream, cfg)
+    assert out.isStreaming
+    assert len(calls) == 1
+    assert "fuzzy path: per-row (input estimate unknown" in caplog.text
 
 
 def test_fuzzy_vocab_auto_treats_missing_stats_as_unknown(spark, tmp_path,
                                                           monkeypatch):
     """An input without size stats reports spark.sql.defaultSizeInBytes
-    (Long.MaxValue) as its estimate. The AUTO rule must read that as
+    (Long.MaxValue) as its estimate. The size rule must read that as
     unknown and keep the per-row path, even at a 1-byte threshold; an
     input with real stats is still decided by the threshold."""
-    monkeypatch.setattr(job, "AUTO_FUZZY_VOCAB_MIN_BYTES", 1)
+    monkeypatch.setattr(pipeline, "FUZZY_VOCAB_MIN_BYTES", 1)
     rdd_backed = spark.createDataFrame(
         spark.sparkContext.parallelize([("clip_000000", "we flew home")]),
         "clip_id string, transcript string")
-    assert job.fuzzy_vocab_auto(rdd_backed) == (False, None)
+    assert pipeline.fuzzy_vocab_auto(rdd_backed) == (False, None)
 
     rdd_backed.write.parquet(str(tmp_path / "clips"))
     clips = spark.read.parquet(str(tmp_path / "clips"))
-    on, est = job.fuzzy_vocab_auto(clips)
+    on, est = pipeline.fuzzy_vocab_auto(clips)
     assert on and 0 < est < 1 << 20
-    monkeypatch.setattr(job, "AUTO_FUZZY_VOCAB_MIN_BYTES", est + 1)
-    assert job.fuzzy_vocab_auto(clips) == (False, est)
+    monkeypatch.setattr(pipeline, "FUZZY_VOCAB_MIN_BYTES", est + 1)
+    assert pipeline.fuzzy_vocab_auto(clips) == (False, est)
