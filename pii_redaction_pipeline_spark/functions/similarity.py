@@ -12,10 +12,16 @@ Three scale shapes, mirroring the minhash→jaccard two-phase design:
     candidates never shuffle, and the window input stays tiny at any
     scale. Round 1 computed dot+norms per pair with interpreted
     aggregate(zip_with(...)) HOFs: 13.4s for 2000×8 pairs at sf0.1.
-  - IVF top-k (`spark_cosine_topk_ivf`): coarse sign-pattern buckets
-    (the inverted-file cell) turn the cross join into an equi-join on
-    bucket id; exactness within the bucket. Cosine over the surviving
-    pairs runs in the vectorized numpy pair kernel.
+  - IVF top-k: every vector is tagged with its inverted-file cell, each
+    probe names the cells it searches, and one search body
+    (`_ivf_search`) turns the cross join into a broadcast equi-join on
+    cell id, runs the numpy pair-cosine kernel over the surviving pairs
+    and ranks them. Two coarse quantizers feed it: sign-pattern buckets
+    of the leading dims (`spark_cosine_topk_ivf`, and
+    `spark_cosine_topk_ivf_multiprobe`, which adds the Hamming-1
+    neighbour buckets) and the nearest of the seed centroids
+    (`spark_cosine_topk_ivf_centroid_multiprobe`, the `nprobe` nearest
+    cells; `spark_cosine_topk_ivf_centroid` is its nprobe=1 case).
   - Near-dup pairs (`spark_neardup_pairs`): candidates from L sign-bucket
     hash tables (disjoint leading-dim groups), distinct-unioned, then
     exact cosine verify ≥ threshold — candidate generation is L bucket
@@ -24,7 +30,8 @@ Three scale shapes, mirroring the minhash→jaccard two-phase design:
 
 Similarities are computed in float64 and rounded to 6 decimals on both
 engines before any ranking/thresholding, so Spark and the DuckDB oracle
-(list_dot_product) agree bit-for-bit on the hashed values.
+(list_dot_product) agree bit-for-bit on the hashed values. Every top-k
+ranks by (sim desc, n_id asc) in `_topk` and `_duck_rank_tail`.
 """
 
 from __future__ import annotations
@@ -32,12 +39,21 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.broadcast import Broadcast
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 def _stack(series: pd.Series) -> np.ndarray:
     """Arrow list column → (batch, dim) float64 matrix."""
     return np.stack(series.to_numpy()).astype(np.float64)
+
+
+def _cosine_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two (n, dim) float64 matrices, rounded to 6:
+    the one pair formula of cosine_pair_udf and of spark_neardup_pairs'
+    exact recompute."""
+    return np.round(
+        np.einsum("ij,ij->i", A, B)
+        / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)), 6)
 
 
 def cosine_pair_udf():
@@ -49,11 +65,53 @@ def cosine_pair_udf():
         init_worker()
         if len(a) == 0:
             return pd.Series([], dtype="float64")
-        A, B = _stack(a), _stack(b)
-        s = (np.einsum("ij,ij->i", A, B)
-             / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)))
-        return pd.Series(np.round(s, 6))
+        return pd.Series(_cosine_rows(_stack(a), _stack(b)))
     return _cos
+
+
+def _duck_cosine(a: str, b: str) -> str:
+    """DuckDB twin of _cosine_rows over two DOUBLE[] expressions."""
+    return (f"round(list_dot_product({a}, {b}) / "
+            f"(sqrt(list_dot_product({a}, {a})) * "
+            f"sqrt(list_dot_product({b}, {b}))), 6)")
+
+
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(q_id, n_id, sim) rows → the k best per probe by (sim desc, n_id
+    asc), with their bigint rank."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
+    return (pairs.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("q_id", "n_id", "sim",
+                    F.col("rank").cast("bigint").alias("rank")))
+
+
+def _duck_rank_tail(k: int) -> str:
+    """DuckDB twin of _topk over a `scored` CTE; closes the WITH chain."""
+    return f"""), ranked AS (
+  SELECT q_id, n_id, sim,
+         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC)
+           AS rank
+  FROM scored
+)
+SELECT q_id, n_id, sim, CAST(rank AS BIGINT) AS rank
+FROM ranked WHERE rank <= {k}
+"""
+
+
+def _with_lowest_ids(emb: DataFrame, n: int, search) -> DataFrame:
+    """Collect the vectors with vec_id < n (the probe set, or the seed
+    centroids: n rows, metadata-scale) and return search(ids, matrix),
+    ids ascending and the matrix float64. No such vector → the empty
+    top-k frame, not a numpy crash."""
+    rows = (emb.where(F.col("vec_id") < n)
+            .select("vec_id", "embedding").collect())
+    if not rows:
+        return emb.sparkSession.createDataFrame(
+            [], "q_id long, n_id long, sim double, rank long")
+    rows.sort(key=lambda r: r["vec_id"])
+    return search(np.array([r["vec_id"] for r in rows], dtype=np.int64),
+                  np.array([r["embedding"] for r in rows], dtype=np.float64))
 
 
 # ---------------------------------------------------------------------------
@@ -65,47 +123,38 @@ def spark_cosine_topk(emb: DataFrame, n_probes: int = 8, k: int = 5) -> DataFram
     (P, dim) numpy matrix (P = n_probes — small by contract; this is the
     probe-broadcast pattern, not a data collect) and candidates stream
     through one matmul + per-batch top-k per Arrow batch."""
-    rows = (emb.where(F.col("vec_id") < n_probes)
-            .select("vec_id", "embedding").collect())
-    if not rows:  # empty probe set → empty result, not a numpy crash
-        return emb.sparkSession.createDataFrame(
-            [], "q_id long, n_id long, sim double, rank long")
-    rows.sort(key=lambda r: r["vec_id"])
-    q_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    q_norm = np.linalg.norm(Q, axis=1)
+    def search(q_ids: np.ndarray, Q: np.ndarray) -> DataFrame:
+        q_norm = np.linalg.norm(Q, axis=1)
 
-    def gen(batches):
-        from .worker import init_worker
-        init_worker()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            N = _stack(pdf["embedding"])
-            n_id = pdf["vec_id"].to_numpy()
-            sims = np.round(
-                (N @ Q.T)
-                / (np.linalg.norm(N, axis=1)[:, None] * q_norm[None, :]), 6)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                mask = n_id != qid
-                sj, nj = sims[mask, j], n_id[mask]
-                # batch-local top-k by the global order (sim desc, n_id asc)
-                order = np.lexsort((nj, -sj))[:k]
-                out_q.append(np.full(len(order), qid, dtype=np.int64))
-                out_n.append(nj[order])
-                out_s.append(sj[order])
-            yield pd.DataFrame({"q_id": np.concatenate(out_q),
-                                "n_id": np.concatenate(out_n),
-                                "sim": np.concatenate(out_s)})
+        def gen(batches):
+            from .worker import init_worker
+            init_worker()
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                N = _stack(pdf["embedding"])
+                n_id = pdf["vec_id"].to_numpy()
+                sims = np.round(
+                    (N @ Q.T)
+                    / (np.linalg.norm(N, axis=1)[:, None] * q_norm[None, :]),
+                    6)
+                out_q, out_n, out_s = [], [], []
+                for j, qid in enumerate(q_ids):
+                    mask = n_id != qid
+                    sj, nj = sims[mask, j], n_id[mask]
+                    # batch-local top-k by the global order (sim desc, n_id asc)
+                    order = np.lexsort((nj, -sj))[:k]
+                    out_q.append(np.full(len(order), qid, dtype=np.int64))
+                    out_n.append(nj[order])
+                    out_s.append(sj[order])
+                yield pd.DataFrame({"q_id": np.concatenate(out_q),
+                                    "n_id": np.concatenate(out_n),
+                                    "sim": np.concatenate(out_s)})
 
-    partial = emb.select("vec_id", "embedding").mapInPandas(
-        gen, "q_id long, n_id long, sim double")
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "n_id", "sim",
-                    F.col("rank").cast("bigint").alias("rank")))
+        return _topk(emb.select("vec_id", "embedding").mapInPandas(
+            gen, "q_id long, n_id long, sim double"), k)
+
+    return _with_lowest_ids(emb, n_probes, search)
 
 
 def duck_cosine_topk_sql(n_probes: int = 8, k: int = 5) -> str:
@@ -116,25 +165,36 @@ WITH probes AS (
 ), cand AS (
   SELECT vec_id AS n_id, embedding::DOUBLE[] AS n_emb FROM embeddings
 ), scored AS (
-  SELECT q_id, n_id,
-         round(list_dot_product(q_emb, n_emb) /
-               (sqrt(list_dot_product(q_emb, q_emb)) *
-                sqrt(list_dot_product(n_emb, n_emb))), 6) AS sim
+  SELECT q_id, n_id, {_duck_cosine("q_emb", "n_emb")} AS sim
   FROM cand, probes WHERE n_id <> q_id
-), ranked AS (
-  SELECT q_id, n_id, sim,
-         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC)
-           AS rank
-  FROM scored
-)
-SELECT q_id, n_id, sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
+{_duck_rank_tail(k)}"""
 
 
 # ---------------------------------------------------------------------------
-# IVF (sign-bucket) top-k
+# IVF top-k: one search body over a cell-tagged base
 # ---------------------------------------------------------------------------
+
+def _ivf_search(base: DataFrame, probe_cells: Column, n_probes: int,
+                k: int) -> DataFrame:
+    """The IVF search every IVF operator runs. `base` is the corpus with
+    each vector's own cell in `_cell`; `probe_cells` is the array<int> of
+    cells a probe searches. Probes (vec_id < n_probes) explode to one row
+    per cell, the candidates broadcast-equi-join them on cell id — never
+    a cross join — and the surviving pairs get the numpy pair cosine and
+    the top-k window."""
+    probes = (base.where(F.col("vec_id") < n_probes)
+              .select(F.col("vec_id").alias("q_id"),
+                      F.col("embedding").alias("q_emb"),
+                      F.explode(probe_cells).alias("qc")))
+    cand = base.select(F.col("vec_id").alias("n_id"),
+                       F.col("embedding").alias("n_emb"),
+                       F.col("_cell").alias("nc"))
+    cos = cosine_pair_udf()
+    pairs = (cand.join(F.broadcast(probes), F.col("nc") == F.col("qc"))
+             .where(F.col("n_id") != F.col("q_id"))
+             .withColumn("sim", cos(F.col("q_emb"), F.col("n_emb"))))
+    return _topk(pairs, k)
+
 
 N_IVF_BITS = 4  # 16 coarse buckets from sign bits of a dim group
 
@@ -156,6 +216,19 @@ def _duck_sign_bucket(col: str, table_idx: int = 0) -> str:
         for i in range(N_IVF_BITS))
 
 
+def _sign_ivf(emb: DataFrame, n_flips: int, n_probes: int,
+              k: int) -> DataFrame:
+    """Sign-bucket IVF: a probe searches its own bucket and the buckets
+    with one of its first `n_flips` sign bits flipped."""
+    _usable_tables(emb)  # validates dim ≥ N_IVF_BITS (no NULL sign bits)
+    base = emb.withColumn(
+        "_cell", F.expr(_sign_bucket_expr("embedding")).cast("int"))
+    cells = F.array(F.col("_cell"),
+                    *[F.expr(f"_cell ^ {2 ** i}").cast("int")
+                      for i in range(n_flips)])
+    return _ivf_search(base, cells, n_probes, k)
+
+
 def spark_cosine_topk_ivf(emb: DataFrame, n_probes: int = 8,
                           k: int = 3) -> DataFrame:
     """IVF-flavored ANN: coarse-quantize vectors into sign-pattern buckets
@@ -163,25 +236,7 @@ def spark_cosine_topk_ivf(emb: DataFrame, n_probes: int = 8,
     candidate set shrinks ~|buckets|×, and the plan is a broadcast
     equi-join on bucket id instead of a cross join. Exactness within the
     bucket; cosine runs in the vectorized numpy pair kernel."""
-    _usable_tables(emb)  # validates dim ≥ N_IVF_BITS (no NULL sign bits)
-    bucket = F.expr(_sign_bucket_expr("embedding")).cast("int")
-    base = emb.withColumn("_b", bucket)
-    probes = (base.where(F.col("vec_id") < n_probes)
-              .select(F.col("vec_id").alias("q_id"),
-                      F.col("embedding").alias("q_emb"),
-                      F.col("_b").alias("qb")))
-    cand = base.select(F.col("vec_id").alias("n_id"),
-                       F.col("embedding").alias("n_emb"),
-                       F.col("_b").alias("nb"))
-    cos = cosine_pair_udf()
-    j = (cand.join(F.broadcast(probes), F.col("nb") == F.col("qb"))
-         .where(F.col("n_id") != F.col("q_id"))
-         .withColumn("sim", cos(F.col("q_emb"), F.col("n_emb"))))
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (j.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "n_id", "sim",
-                    F.col("rank").cast("bigint").alias("rank")))
+    return _sign_ivf(emb, 0, n_probes, k)
 
 
 def spark_cosine_topk_ivf_multiprobe(emb: DataFrame, n_probes: int = 8,
@@ -194,78 +249,32 @@ def spark_cosine_topk_ivf_multiprobe(emb: DataFrame, n_probes: int = 8,
     synthetic corpus (uniform random vectors — sign-LSH's worst case):
     top-3 recall 4/24 single-probe → 12/24 multi-probe; clustered real
     embeddings recall far more (tests pin multi ≥ single)."""
-    _usable_tables(emb)  # validates dim ≥ N_IVF_BITS (no NULL sign bits)
-    bucket = F.expr(_sign_bucket_expr("embedding")).cast("int")
-    base = emb.withColumn("_b", bucket)
-    probe_buckets = F.array(
-        F.col("_b"), *[F.expr(f"_b ^ {2 ** i}").cast("int")
-                       for i in range(N_IVF_BITS)])
-    probes = (base.where(F.col("vec_id") < n_probes)
-              .select(F.col("vec_id").alias("q_id"),
-                      F.col("embedding").alias("q_emb"),
-                      F.explode(probe_buckets).alias("qb")))
-    cand = base.select(F.col("vec_id").alias("n_id"),
-                       F.col("embedding").alias("n_emb"),
-                       F.col("_b").alias("nb"))
-    cos = cosine_pair_udf()
-    j = (cand.join(F.broadcast(probes), F.col("nb") == F.col("qb"))
-         .where(F.col("n_id") != F.col("q_id"))
-         .withColumn("sim", cos(F.col("q_emb"), F.col("n_emb"))))
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (j.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "n_id", "sim",
-                    F.col("rank").cast("bigint").alias("rank")))
+    return _sign_ivf(emb, N_IVF_BITS, n_probes, k)
+
+
+def _duck_sign_ivf_sql(qb: str, n_probes: int, k: int) -> str:
+    """DuckDB sign-bucket IVF; `qb` is the probe's searched-bucket
+    expression over its bucket `b`."""
+    return f"""
+WITH base AS (
+  SELECT vec_id, embedding::DOUBLE[] AS emb, ({_duck_sign_bucket("embedding")}) AS b FROM embeddings
+), probes AS (
+  SELECT vec_id AS q_id, emb AS q_emb, {qb} AS qb
+  FROM base WHERE vec_id < {n_probes}
+), scored AS (
+  SELECT q_id, vec_id AS n_id, {_duck_cosine("q_emb", "emb")} AS sim
+  FROM base JOIN probes ON base.b = probes.qb
+  WHERE vec_id <> q_id
+{_duck_rank_tail(k)}"""
 
 
 def duck_cosine_topk_ivf_multiprobe_sql(n_probes: int = 8, k: int = 3) -> str:
-    bucket = _duck_sign_bucket("embedding")
     flips = ", ".join(["b"] + [f"xor(b, {2 ** i})" for i in range(N_IVF_BITS)])
-    return f"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb, ({bucket}) AS b FROM embeddings
-), probes AS (
-  SELECT vec_id AS q_id, emb AS q_emb, unnest([{flips}]) AS qb
-  FROM base WHERE vec_id < {n_probes}
-), scored AS (
-  SELECT q_id, vec_id AS n_id,
-         round(list_dot_product(q_emb, emb) /
-               (sqrt(list_dot_product(q_emb, q_emb)) *
-                sqrt(list_dot_product(emb, emb))), 6) AS sim
-  FROM base JOIN probes ON base.b = probes.qb
-  WHERE vec_id <> q_id
-), ranked AS (
-  SELECT q_id, n_id, sim,
-         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, n_id, sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
+    return _duck_sign_ivf_sql(f"unnest([{flips}])", n_probes, k)
 
 
 def duck_cosine_topk_ivf_sql(n_probes: int = 8, k: int = 3) -> str:
-    bucket = _duck_sign_bucket("embedding")
-    return f"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb, ({bucket}) AS b FROM embeddings
-), probes AS (
-  SELECT vec_id AS q_id, emb AS q_emb, b AS qb FROM base WHERE vec_id < {n_probes}
-), scored AS (
-  SELECT q_id, vec_id AS n_id,
-         round(list_dot_product(q_emb, emb) /
-               (sqrt(list_dot_product(q_emb, q_emb)) *
-                sqrt(list_dot_product(emb, emb))), 6) AS sim
-  FROM base JOIN probes ON base.b = probes.qb
-  WHERE vec_id <> q_id
-), ranked AS (
-  SELECT q_id, n_id, sim,
-         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, n_id, sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
+    return _duck_sign_ivf_sql("b", n_probes, k)
 
 
 # ---------------------------------------------------------------------------
@@ -303,11 +312,10 @@ def _bc_centroids(df: DataFrame, C: np.ndarray,
     return df.sparkSession.sparkContext.broadcast((C, c_ids))
 
 
-def _cell_assign_udf(bc: Broadcast | tuple):
+def _cell_assign_udf(bc: Broadcast):
     """Vectorized nearest-centroid assignment: one numpy distance matrix
-    per Arrow batch; `bc` is the _bc_centroids handle (a raw (C, c_ids)
-    tuple also works, for kernel-level tests). Rounded to 6 before
-    argmin so Spark and the DuckDB oracle agree on the assignment
+    per Arrow batch; `bc` is the _bc_centroids handle. Rounded to 6
+    before argmin so Spark and the DuckDB oracle agree on the assignment
     bit-for-bit; ties break to the lowest centroid id (argmin = first
     index, c_ids ascending). Distances via the bounded-memory matmul
     kernel (_rounded_centroid_dists)."""
@@ -315,7 +323,7 @@ def _cell_assign_udf(bc: Broadcast | tuple):
     def cell(embs: pd.Series) -> pd.Series:
         from .worker import init_worker
         init_worker()
-        C, c_ids = bc.value if isinstance(bc, Broadcast) else bc
+        C, c_ids = bc.value
         if len(embs) == 0:
             return pd.Series([], dtype="int32")
         d = _rounded_centroid_dists(_stack(embs), C)
@@ -323,249 +331,110 @@ def _cell_assign_udf(bc: Broadcast | tuple):
     return cell
 
 
-def train_ivf_centroids(emb: DataFrame, k: int = N_CENTROIDS,
-                        n_iters: int = 5,
-                        sample_fraction: float | None = None,
-                        history: list | None = None) -> np.ndarray:
-    """Distributed Lloyd's k-means for the IVF coarse quantizer — the
-    production replacement for the deterministic seed-centroid rule.
-    Init = the k lowest-vec_id vectors (deterministic, same as the seed
-    rule, so results are reproducible run-to-run). Each iteration:
-      1. assign every vector to its nearest centroid — the vectorized
-         closure UDF, NO shuffle;
-      2. recompute the per-cell mean distributively: posexplode the
-         embedding to (cell, dim, value) and avg per (cell, dim) — one
-         map-side-combining hash aggregate whose output is k×d rows
-         (metadata-scale), collected to the next centroid matrix.
-    Empty cells keep their previous centroid (standard Lloyd fallback).
-    At 10^9+ vectors pass `sample_fraction` to train on a seeded sample
-    (standard IVF practice) and assign the full corpus once at the end.
-    `history` (optional) receives the per-iteration mean squared
-    assignment distance — Lloyd's monotonic descent, test-pinned."""
-    train = (emb.sample(fraction=sample_fraction, seed=42)
-             if sample_fraction else emb)
-    rows = (train.orderBy("vec_id").limit(k)
-            .select("vec_id", "embedding").collect())
-    if not rows:
-        raise ValueError("cannot train centroids on an empty table")
-    C = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    c_ids = np.arange(len(C), dtype=np.int64)
-    for _ in range(n_iters):
-        # fresh broadcast per iteration (C changed); old ones are
-        # GC-collected driver-side and the matrices are metadata-scale
-        cell = _cell_assign_udf(_bc_centroids(train, C, c_ids))
-        assigned = train.withColumn("_cell", cell("embedding"))
-        # ONE map-side-combining hash aggregate per iteration (round-5:
-        # was two separate collect-aggregations over the same posexploded
-        # frame when `history` was requested — jobs halved). sum / sum-sq
-        # / count per (cell, dim) give BOTH the new means (s/n) and the
-        # Lloyd objective Σ‖x−c‖² = Σ(s2 − 2·c·s + n·c²) from the SAME
-        # k×d metadata-scale collect.
-        stats = (assigned.select(
-            "_cell", F.posexplode("embedding").alias("pos", "v"))
-            .groupBy("_cell", "pos").agg(
-                F.sum("v").alias("s"), F.sum(F.expr("v*v")).alias("s2"),
-                F.count(F.lit(1)).alias("n")).collect())
-        if history is not None:
-            # mean squared distance to the assigned centroid (the Lloyd
-            # objective) — monotone descent is test-pinned
-            cost = 0.0
-            for r in stats:
-                c = C[r["_cell"], r["pos"]]
-                cost += r["s2"] - 2 * c * r["s"] + r["n"] * c * c
-            n_vecs = sum(r["n"] for r in stats if r["pos"] == 0)
-            history.append(cost / max(n_vecs, 1))
-        nxt = C.copy()  # empty cells keep their previous centroid
-        for r in stats:
-            nxt[r["_cell"], r["pos"]] = r["s"] / r["n"]
-        C = nxt
-    return C
+def _near_cells_udf(bc: Broadcast, nprobe: int):
+    """The `nprobe` nearest cells per vector in full (rounded dist, c_id)
+    order — the assignment's tie-break, so its first cell is the
+    vector's own."""
+    @F.pandas_udf("array<int>")
+    def near_cells(embs: pd.Series) -> pd.Series:
+        from .worker import init_worker
+        init_worker()
+        C, c_ids = bc.value
+        if len(embs) == 0:
+            return pd.Series([], dtype="object")
+        d = _rounded_centroid_dists(_stack(embs), C)
+        # lexsort's LAST key is primary
+        order = np.lexsort((np.broadcast_to(c_ids, d.shape), d), axis=1)
+        return pd.Series(list(c_ids[order[:, :nprobe]].astype(np.int32)))
+    return near_cells
 
 
 def spark_cosine_topk_ivf_centroid(emb: DataFrame, n_probes: int = 8,
-                                   k: int = 3,
-                                   centroids: np.ndarray | None = None) -> DataFrame:
+                                   k: int = 3) -> DataFrame:
     """IVF-flat ANN with centroid cells — the data-DEPENDENT counterpart
     of the sign-bucket IVF (sign patterns partition space obliviously;
     centroid cells follow the corpus distribution, the standard IVF
     design). Coarse quantizer: every vector is assigned to its nearest
     centroid (L2, rounded to 6 before argmin, ties to the lowest
     centroid id — both engines agree bit-for-bit on the rounded value);
-    probes search their own cell. Plan shape is identical to the
-    sign-bucket variant — centroids ride to executors in the UDF closure
-    (K rows, metadata-scale, the probe-broadcast pattern), assignment is
-    one vectorized numpy distance per Arrow batch with NO shuffle, then
-    a broadcast equi-join on cell id + per-probe window.
+    probes search their own cell, which is the nprobe=1 case of
+    spark_cosine_topk_ivf_centroid_multiprobe.
 
-    Default centroid rule: the K lowest-vec_id vectors. That keeps the
+    Centroid rule: the N_CENTROIDS lowest-vec_id vectors. That keeps the
     operator deterministic and fully SQL-oracle-able (the DuckDB twin
-    recomputes the same assignment relationally). Pass
-    `centroids=train_ivf_centroids(emb, ...)` for the production path —
-    distributed Lloyd's k-means (implemented above, descent test-pinned);
-    every plan property is unchanged by where the centroid matrix comes
-    from, only the oracle-able seed rule is registry-exposed."""
-    if centroids is not None:
-        C = np.asarray(centroids, dtype=np.float64)
-        c_ids = np.arange(len(C), dtype=np.int64)
-    else:
-        rows = (emb.where(F.col("vec_id") < N_CENTROIDS)
-                .select("vec_id", "embedding").collect())
-        if not rows:
-            return emb.sparkSession.createDataFrame(
-                [], "q_id long, n_id long, sim double, rank long")
-        rows.sort(key=lambda r: r["vec_id"])
-        c_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-        C = np.array([r["embedding"] for r in rows], dtype=np.float64)
-
-    bc = _bc_centroids(emb, C, c_ids)
-    base = emb.withColumn("_cell",
-                          _cell_assign_udf(bc)(F.col("embedding")))
-    probes = (base.where(F.col("vec_id") < n_probes)
-              .select(F.col("vec_id").alias("q_id"),
-                      F.col("embedding").alias("q_emb"),
-                      F.col("_cell").alias("qc")))
-    cand = base.select(F.col("vec_id").alias("n_id"),
-                       F.col("embedding").alias("n_emb"),
-                       F.col("_cell").alias("nc"))
-    cos = cosine_pair_udf()
-    j = (cand.join(F.broadcast(probes), F.col("nc") == F.col("qc"))
-         .where(F.col("n_id") != F.col("q_id"))
-         .withColumn("sim", cos(F.col("q_emb"), F.col("n_emb"))))
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (j.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "n_id", "sim",
-                    F.col("rank").cast("bigint").alias("rank")))
+    recomputes the same assignment relationally)."""
+    return spark_cosine_topk_ivf_centroid_multiprobe(emb, n_probes, k,
+                                                     nprobe=1)
 
 
 def spark_cosine_topk_ivf_centroid_multiprobe(
         emb: DataFrame, n_probes: int = 8, k: int = 3,
-        nprobe: int = 2,
-        centroids: np.ndarray | None = None) -> DataFrame:
+        nprobe: int = 2) -> DataFrame:
     """Centroid IVF with the standard `nprobe` recall dial: each probe
     searches its `nprobe` NEAREST cells (full (rounded-dist, c_id) order
-    — same tie-break as assignment), instead of only its own. The probe
-    side explodes ×nprobe; the plan stays a broadcast equi-join on cell
-    id. nprobe == n_cells degenerates to exact search — the recall/cost
-    dial production IVF deployments tune first."""
-    if centroids is not None:
-        C = np.asarray(centroids, dtype=np.float64)
-        c_ids = np.arange(len(C), dtype=np.int64)
-    else:
-        rows = (emb.where(F.col("vec_id") < N_CENTROIDS)
-                .select("vec_id", "embedding").collect())
-        if not rows:
-            return emb.sparkSession.createDataFrame(
-                [], "q_id long, n_id long, sim double, rank long")
-        rows.sort(key=lambda r: r["vec_id"])
-        c_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-        C = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    — same tie-break as assignment). The centroids ride to executors in
+    one broadcast (K rows, metadata-scale), assignment is one vectorized
+    numpy distance per Arrow batch with NO shuffle, and the probe side
+    explodes ×nprobe into a broadcast equi-join on cell id. nprobe ==
+    n_cells degenerates to exact search — the recall/cost dial
+    production IVF deployments tune first."""
+    def search(c_ids: np.ndarray, C: np.ndarray) -> DataFrame:
+        bc = _bc_centroids(emb, C, c_ids)
+        base = emb.withColumn("_cell",
+                              _cell_assign_udf(bc)(F.col("embedding")))
+        return _ivf_search(base, _near_cells_udf(bc, nprobe)(
+            F.col("embedding")), n_probes, k)
 
-    bc = _bc_centroids(emb, C, c_ids)
+    return _with_lowest_ids(emb, N_CENTROIDS, search)
 
-    @F.pandas_udf("array<int>")
-    def near_cells(embs: pd.Series) -> pd.Series:
-        bC, bc_ids = bc.value  # same broadcast as the assignment UDF
-        if len(embs) == 0:
-            return pd.Series([], dtype="object")
-        d = _rounded_centroid_dists(_stack(embs), bC)
-        # full (dist, c_id) order; lexsort's LAST key is primary
-        order = np.lexsort((np.broadcast_to(bc_ids, d.shape), d), axis=1)
-        top = bc_ids[order[:, :nprobe]].astype(np.int32)
-        return pd.Series(list(top))
 
-    base = emb.withColumn("_cell",
-                          _cell_assign_udf(bc)(F.col("embedding")))
-    probes = (base.where(F.col("vec_id") < n_probes)
-              .select(F.col("vec_id").alias("q_id"),
-                      F.col("embedding").alias("q_emb"),
-                      F.explode(near_cells(F.col("embedding"))).alias("qc")))
-    cand = base.select(F.col("vec_id").alias("n_id"),
-                       F.col("embedding").alias("n_emb"),
-                       F.col("_cell").alias("nc"))
-    cos = cosine_pair_udf()
-    j = (cand.join(F.broadcast(probes), F.col("nc") == F.col("qc"))
-         .where(F.col("n_id") != F.col("q_id"))
-         .withColumn("sim", cos(F.col("q_emb"), F.col("n_emb"))))
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (j.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "n_id", "sim",
-                    F.col("rank").cast("bigint").alias("rank")))
+def _duck_centroid_ivf_sql(cells: str, probes: str, k: int) -> str:
+    """DuckDB centroid IVF: `cells` ends in the `asg` (vec_id, cell) CTE,
+    `probes` selects (q_id, q_emb, qc)."""
+    return f"""
+WITH base AS (
+  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
+), cent AS (
+  SELECT vec_id AS c_id, emb AS c_emb FROM base WHERE vec_id < {N_CENTROIDS}
+), {cells}
+), probes AS (
+  {probes}
+), scored AS (
+  SELECT q_id, b.vec_id AS n_id, {_duck_cosine("q_emb", "b.emb")} AS sim
+  FROM base b JOIN asg a ON b.vec_id = a.vec_id
+  JOIN probes p ON a.cell = p.qc
+  WHERE b.vec_id <> p.q_id
+{_duck_rank_tail(k)}"""
+
+
+# every vector's cells in (rounded dist, c_id) order; rn = 1 is its own
+_DUCK_CELL_RANKS = """SELECT b.vec_id, c.c_id,
+         row_number() OVER (PARTITION BY b.vec_id
+           ORDER BY round(list_distance(b.emb, c.c_emb), 6) ASC,
+                    c.c_id ASC) AS rn
+  FROM base b CROSS JOIN cent c"""
 
 
 def duck_cosine_topk_ivf_centroid_multiprobe_sql(n_probes: int = 8,
                                                  k: int = 3,
                                                  nprobe: int = 2) -> str:
-    return f"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), cent AS (
-  SELECT vec_id AS c_id, emb AS c_emb FROM base WHERE vec_id < {N_CENTROIDS}
-), ranked_cells AS (
-  SELECT b.vec_id, c.c_id,
-         row_number() OVER (PARTITION BY b.vec_id
-           ORDER BY round(list_distance(b.emb, c.c_emb), 6) ASC,
-                    c.c_id ASC) AS rn
-  FROM base b CROSS JOIN cent c
+    return _duck_centroid_ivf_sql(
+        f"""ranked_cells AS (
+  {_DUCK_CELL_RANKS}
 ), asg AS (
-  SELECT vec_id, c_id AS cell FROM ranked_cells WHERE rn = 1
-), probes AS (
-  SELECT b.vec_id AS q_id, b.emb AS q_emb, r.c_id AS qc
+  SELECT vec_id, c_id AS cell FROM ranked_cells WHERE rn = 1""",
+        f"""SELECT b.vec_id AS q_id, b.emb AS q_emb, r.c_id AS qc
   FROM base b JOIN ranked_cells r USING (vec_id)
-  WHERE b.vec_id < {n_probes} AND r.rn <= {nprobe}
-), scored AS (
-  SELECT q_id, b.vec_id AS n_id,
-         round(list_dot_product(q_emb, b.emb) /
-               (sqrt(list_dot_product(q_emb, q_emb)) *
-                sqrt(list_dot_product(b.emb, b.emb))), 6) AS sim
-  FROM base b JOIN asg a ON b.vec_id = a.vec_id
-  JOIN probes p ON a.cell = p.qc
-  WHERE b.vec_id <> p.q_id
-), ranked AS (
-  SELECT q_id, n_id, sim,
-         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC)
-           AS rank
-  FROM scored
-)
-SELECT q_id, n_id, sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
+  WHERE b.vec_id < {n_probes} AND r.rn <= {nprobe}""", k)
 
 
 def duck_cosine_topk_ivf_centroid_sql(n_probes: int = 8, k: int = 3) -> str:
-    return f"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), cent AS (
-  SELECT vec_id AS c_id, emb AS c_emb FROM base WHERE vec_id < {N_CENTROIDS}
-), asg AS (
+    return _duck_centroid_ivf_sql(
+        f"""asg AS (
   SELECT vec_id, c_id AS cell FROM (
-    SELECT b.vec_id, c.c_id,
-           row_number() OVER (PARTITION BY b.vec_id
-             ORDER BY round(list_distance(b.emb, c.c_emb), 6) ASC,
-                      c.c_id ASC) AS rn
-    FROM base b CROSS JOIN cent c) WHERE rn = 1
-), probes AS (
-  SELECT b.vec_id AS q_id, b.emb AS q_emb, a.cell AS qc
-  FROM base b JOIN asg a USING (vec_id) WHERE b.vec_id < {n_probes}
-), scored AS (
-  SELECT q_id, b.vec_id AS n_id,
-         round(list_dot_product(q_emb, b.emb) /
-               (sqrt(list_dot_product(q_emb, q_emb)) *
-                sqrt(list_dot_product(b.emb, b.emb))), 6) AS sim
-  FROM base b JOIN asg a ON b.vec_id = a.vec_id
-  JOIN probes p ON a.cell = p.qc
-  WHERE b.vec_id <> p.q_id
-), ranked AS (
-  SELECT q_id, n_id, sim,
-         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC)
-           AS rank
-  FROM scored
-)
-SELECT q_id, n_id, sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
+    {_DUCK_CELL_RANKS}) WHERE rn = 1""",
+        f"""SELECT b.vec_id AS q_id, b.emb AS q_emb, a.cell AS qc
+  FROM base b JOIN asg a USING (vec_id) WHERE b.vec_id < {n_probes}""", k)
 
 
 # ---------------------------------------------------------------------------
@@ -609,15 +478,15 @@ def _usable_tables(emb: DataFrame, col: str = "embedding") -> int:
 
 
 def _melt_tables(emb: DataFrame, n_tables: int) -> DataFrame:
-    """(vec_id, t, b) — one row per (vector, sign-hash table)."""
+    """(vec_id, embedding, t, b) — one row per (vector, sign-hash table)."""
     return emb.select(
-        "vec_id",
+        "vec_id", "embedding",
         F.explode(F.array(*[
             F.struct(F.lit(t).alias("t"),
                      F.expr(_sign_bucket_expr("embedding", t))
                      .cast("int").alias("b"))
             for t in range(n_tables)])).alias("tb")
-    ).select("vec_id", "tb.t", "tb.b")
+    ).select("vec_id", "embedding", "tb.t", "tb.b")
 
 
 def embedding_bucket_stats(emb: DataFrame) -> DataFrame:
@@ -651,29 +520,17 @@ def spark_neardup_pairs(emb: DataFrame,
     shuffle/join machinery on Θ(Σ c²) candidate ROWS before the verify
     could drop them: 76 s at 20k vectors / 16 buckets (≈50M candidate
     pairs through an exchange + distinct + 2 joins) vs ~2 s for the
-    same flops as BLAS inside the bucket. Dedup across tables now
-    happens AFTER thresholding (each surviving pair is recomputed with
-    the exact einsum kernel, so duplicate rows are bit-identical and
-    distinct() collapses them); sims are bit-for-bit the old kernel's
-    (same float64 stack → einsum → norm-product → round chain).
+    same flops as BLAS inside the bucket. Dedup across tables happens
+    AFTER thresholding: each surviving pair is recomputed with
+    _cosine_rows, the formula of cosine_pair_udf, so duplicate rows are
+    bit-identical and distinct() collapses them.
 
     Memory: the kernel tiles the (c × c) similarity matrix in row blocks
     of ≤ 8M doubles, so a hot bucket streams instead of materializing
     c² floats. At production scale the bucket count (2^N_IVF_BITS × L)
     bounds parallelism — raise N_IVF_BITS with corpus size (SCALE.md)
     exactly as for the IVF operators."""
-    import pandas as pd
-
     n_tables = _usable_tables(emb)  # never read dims the vectors lack
-    base = emb.select("vec_id", "embedding")
-    melted = base.select(
-        "vec_id", "embedding",
-        F.explode(F.array(*[
-            F.struct(F.lit(t).alias("t"),
-                     F.expr(_sign_bucket_expr("embedding", t))
-                     .cast("int").alias("b"))
-            for t in range(n_tables)])).alias("tb")
-    ).select("vec_id", "embedding", "tb.t", "tb.b")
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
         from .worker import init_worker
@@ -686,7 +543,7 @@ def spark_neardup_pairs(emb: DataFrame,
             return empty
         order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
         ids = pdf["vec_id"].to_numpy()[order]
-        G = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
+        G = _stack(pdf["embedding"])[order]
         norms = np.linalg.norm(G, axis=1)
         blk = max(1, 8_000_000 // c)
         out_a, out_b, out_s = [], [], []
@@ -700,12 +557,7 @@ def spark_neardup_pairs(emb: DataFrame,
             ii, jj = ii[keep] + i0, jj[keep]
             if len(ii) == 0:
                 continue
-            # exact recompute on survivors — the bit-identical twin of
-            # cosine_pair_udf's einsum/norm/round chain
-            A, B = G[ii], G[jj]
-            s = np.round(
-                np.einsum("ij,ij->i", A, B)
-                / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)), 6)
+            s = _cosine_rows(G[ii], G[jj])  # exact recompute on survivors
             m = s >= threshold
             out_a.append(ids[ii[m]])
             out_b.append(ids[jj[m]])
@@ -716,7 +568,7 @@ def spark_neardup_pairs(emb: DataFrame,
                              "id_b": np.concatenate(out_b),
                              "sim": np.concatenate(out_s)})
 
-    return (melted.groupBy("t", "b")
+    return (_melt_tables(emb, n_tables).groupBy("t", "b")
             .applyInPandas(verify, "id_a long, id_b long, sim double")
             .distinct())
 
@@ -735,10 +587,7 @@ WITH base AS (
   FROM melted x JOIN melted y USING (t, b)
   WHERE x.vec_id < y.vec_id
 ), j AS (
-  SELECT id_a, id_b,
-         round(list_dot_product(ea.emb, eb.emb) /
-               (sqrt(list_dot_product(ea.emb, ea.emb)) *
-                sqrt(list_dot_product(eb.emb, eb.emb))), 6) AS sim
+  SELECT id_a, id_b, {_duck_cosine("ea.emb", "eb.emb")} AS sim
   FROM cand
   JOIN base ea ON cand.id_a = ea.vec_id
   JOIN base eb ON cand.id_b = eb.vec_id
@@ -751,10 +600,11 @@ def spark_neardup_bruteforce(emb: DataFrame, limit_ids: int = 300,
                              threshold: float = 0.35) -> DataFrame:
     """Capped all-pairs near-dup — the recall oracle for tests ONLY (the
     cartesian join is exactly what the LSH path exists to avoid)."""
-    a = (emb.where(F.col("vec_id") < limit_ids)
-         .select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a")))
-    b = (emb.where(F.col("vec_id") < limit_ids)
-         .select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b")))
+    capped = emb.where(F.col("vec_id") < limit_ids)
+    a = capped.select(F.col("vec_id").alias("id_a"),
+                      F.col("embedding").alias("e_a"))
+    b = capped.select(F.col("vec_id").alias("id_b"),
+                      F.col("embedding").alias("e_b"))
     cos = cosine_pair_udf()
     j = (a.join(b).where(F.col("id_a") < F.col("id_b"))
          .withColumn("sim", cos(F.col("e_a"), F.col("e_b"))))

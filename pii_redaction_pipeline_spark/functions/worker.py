@@ -49,9 +49,6 @@ holds its first Arrow batch, so that batch's live objects are frozen
 too. Those freed by refcounting are still freed; any caught in a
 reference cycle (pandas/pyarrow internals) stay until the worker exits.
 The cost is bounded: one batch per worker.
-
-Opt out of the GC part with PII_SPARK_NO_WORKER_GC_TUNE=1 (e.g. when
-hunting a real leak with gc debugging).
 """
 
 from __future__ import annotations
@@ -67,10 +64,8 @@ def init_worker() -> None:
     global _INITIALISED
     if _INITIALISED:
         return
-    _INITIALISED = True  # checked before the env read: both paths are one-shot
+    _INITIALISED = True
     _guard_zip_caches()
-    if os.environ.get("PII_SPARK_NO_WORKER_GC_TUNE") == "1":
-        return
     import gc
 
     gc.collect()

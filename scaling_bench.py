@@ -78,6 +78,17 @@ MAX_PARTITION_BYTES = os.environ.get("SCALE_MAX_PARTITION_BYTES", "")
 FUZZY_BROADCAST = os.environ.get("SCALE_FUZZY_BROADCAST", "0") == "1"
 
 
+def job_plan(clips):
+    """The timed job: the pipeline with every result column but
+    `redactions`, as job.py and perfbench write it (an aggregate over a
+    few columns would let Catalyst prune the ppl UDF)."""
+    from pii_redaction_pipeline_spark.pipeline import PipelineConfig, apply_pipeline
+
+    return apply_pipeline(clips, PipelineConfig(
+        with_audio_verify=False,
+        fuzzy_vocab_broadcast=FUZZY_BROADCAST)).drop("redactions")
+
+
 def _cluster_session(workers: int):
     from pii_redaction_pipeline_spark.session import get_spark
 
@@ -109,16 +120,11 @@ def run_once(workers: int, clips_path: str) -> float:
     inflating the result. Parquet bytes come from the OS page cache,
     which both levels share symmetrically, and a scan-included wall is
     what a real cluster job pays anyway."""
-    from pii_redaction_pipeline_spark.pipeline import PipelineConfig, apply_pipeline
-
     spark = _cluster_session(workers)
 
     def job(path=clips_path):
         clips = spark.read.parquet(path)  # fresh plan per run
-        out = apply_pipeline(clips, PipelineConfig(
-            with_audio_verify=False,
-            fuzzy_vocab_broadcast=FUZZY_BROADCAST))
-        out.groupBy("qa_status", "keep").count().collect()
+        job_plan(clips).write.format("noop").mode("overwrite").save()
 
     for _ in range(WARMUPS):
         job(WARMUP_INPUT or clips_path)
@@ -207,7 +213,7 @@ Generated {stamp} by `python scaling_bench.py` on `{SF_DIR}`
 
 Job: the full filter+scrub pipeline — {_job_head}quality Column
 expressions → fused langid+detect_and_scrub+ppl ArrowEvalPython stage →
-grade CASE → keep/status aggregation.
+grade CASE → every result column but `redactions` to the noop sink.
 
 Cluster realization: `local-cluster[W,{CORES_PER_WORKER},3072]` — W
 REAL executor JVMs of {CORES_PER_WORKER} cores each, every executor
@@ -243,7 +249,7 @@ Raw: `{json.dumps(results)}`
   they do on a real cluster — nothing is shared except the driver
   (which only schedules) and the box's memory bus.
 - The plan has no serial coordination: row-local pipeline over
-  scan-split-balanced input, one final tiny aggregation; AQE handles
+  scan-split-balanced input, written straight to the sink; AQE handles
   residual skew.
 - Residual sub-1.0 efficiency on this box is memory-bandwidth sharing:
   all {hi['cores']} cores sit on one physical socket pair, whereas 4N

@@ -360,33 +360,6 @@ def test_centroid_ivf_finds_planted_dups(planted):
     assert hits >= 0.9 * N_DUPS, f"{hits}/{N_DUPS}"
 
 
-def test_train_ivf_centroids_descends_and_improves_recall(planted):
-    """Distributed Lloyd's: the per-iteration mean squared assignment
-    distance must be non-increasing (textbook monotone descent), and the
-    trained quantizer must retrieve planted near-dups at least as well
-    as the seed-centroid rule."""
-    import numpy as np
-
-    from pii_redaction_pipeline_spark.functions.similarity import (
-        spark_cosine_topk_ivf_centroid,
-        train_ivf_centroids,
-    )
-
-    hist: list = []
-    C = train_ivf_centroids(planted, k=8, n_iters=4, history=hist)
-    assert C.shape == (8, DIM)
-    assert len(hist) == 4
-    assert all(b <= a + 1e-9 for a, b in zip(hist, hist[1:])), hist
-
-    def hits(centroids):
-        out = spark_cosine_topk_ivf_centroid(
-            planted, n_probes=N_DUPS, k=3, centroids=centroids)
-        top1 = {r.q_id: r.n_id for r in out.where("rank = 1").collect()}
-        return sum(1 for i in range(N_DUPS) if top1.get(i) == N_BASE + i)
-
-    assert hits(C) >= hits(None) >= 0.9 * N_DUPS
-
-
 def test_simhash64_pairs_banding_recall_is_exact(spark):
     """Production-width pigeonhole guarantee (xxhash64 mode): 4×16-bit
     block banding must find EVERY pair with 64-bit Hamming ≤ 3, vs
@@ -546,38 +519,6 @@ def test_centroid_dist_kernel_matmul_parity_and_bounded_memory():
         f"peak {peak / 2**20:.0f} MiB — (B,K,D) tensor is back?")
 
 
-def test_train_ivf_centroids_one_collect_per_iteration(planted):
-    """Round-5: `history` used to cost a SECOND collect-aggregation over
-    the same posexploded frame per Lloyd iteration. Pin: n_iters
-    iterations with history on = exactly n_iters + 1 DataFrame.collect
-    calls (the +1 is the deterministic init read), and the folded stats
-    still produce the same centroids as a history-off run."""
-    from pii_redaction_pipeline_spark.functions.similarity import (
-        train_ivf_centroids,
-    )
-
-    # patch the CONCRETE DataFrame class (pyspark.sql.DataFrame is the
-    # abstract base in pyspark 4.x; classic instances override collect)
-    cls = type(planted)
-    calls = {"n": 0}
-    orig = cls.collect
-
-    def counting(self):
-        calls["n"] += 1
-        return orig(self)
-
-    hist: list = []
-    try:
-        cls.collect = counting
-        C_hist = train_ivf_centroids(planted, k=4, n_iters=3, history=hist)
-    finally:
-        cls.collect = orig
-    assert calls["n"] == 3 + 1, calls["n"]
-    assert len(hist) == 3
-    C_plain = train_ivf_centroids(planted, k=4, n_iters=3)
-    assert np.allclose(C_hist, C_plain)
-
-
 def test_centroid_multiprobe_recall_geq_single(planted):
     """The nprobe dial must only ADD candidates: multiprobe (nprobe=2)
     recall of planted dups ≥ single-probe recall, and every top-k sim is
@@ -598,6 +539,39 @@ def test_centroid_multiprobe_recall_geq_single(planted):
     for key, s_sim in single.items():
         assert key in multi
         assert multi[key] >= s_sim - 1e-9
+
+
+def test_centroid_single_probe_is_multiprobe_at_nprobe_1(spark, planted):
+    """Centroid single-probe searches its own cell; nprobe=1 searches the
+    one nearest cell in (rounded dist, c_id) order. Both break a rounded
+    tie to the lower centroid id, so the two return the same rows. Tie
+    fixture: seeds 0-7 are 10·e_i and vec 8 sits at 5·e_2 + (5+1e-8)·e_5,
+    1.4e-8 nearer seed 5 before rounding to 6 and equidistant after, so
+    both paths must put it in cell 2."""
+    from pii_redaction_pipeline_spark.functions.similarity import (
+        spark_cosine_topk_ivf_centroid,
+        spark_cosine_topk_ivf_centroid_multiprobe,
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    single = rows(spark_cosine_topk_ivf_centroid(planted, n_probes=N_DUPS,
+                                                 k=3))
+    assert single == rows(spark_cosine_topk_ivf_centroid_multiprobe(
+        planted, n_probes=N_DUPS, k=3, nprobe=1))
+    assert len(single) == 3 * N_DUPS
+
+    vecs = 10.0 * np.eye(8)
+    tie = np.zeros(8)
+    tie[2], tie[5] = 5.0, 5.0 + 1e-8
+    tied = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate([*vecs, tie])],
+        "vec_id long, embedding array<double>")
+    for out in (spark_cosine_topk_ivf_centroid(tied, n_probes=9, k=3),
+                spark_cosine_topk_ivf_centroid_multiprobe(
+                    tied, n_probes=9, k=3, nprobe=1)):
+        assert {(r.q_id, r.n_id) for r in out.collect()} == {(2, 8), (8, 2)}
 
 
 def test_shingle_rows_regex_equals_token_windows(spark):

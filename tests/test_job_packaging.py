@@ -273,8 +273,6 @@ UNREFERENCED_KEEP = {
     "functions.dedup.simhash64_bucket_stats": "metrics row for append_metrics",
     "functions.similarity.embedding_bucket_stats":
         "metrics row for append_metrics",
-    "functions.similarity.train_ivf_centroids":
-        "k-means centroids for the IVF top-k",
     "functions.similarity.spark_neardup_bruteforce":
         "exact recall oracle of the near-dup joins",
     "functions.wordpath_sql.register_oracle_tables":

@@ -132,19 +132,21 @@ def test_scrub_pipeline_python_stages_fused(spark, tmp_path):
 
 def test_dropped_redactions_never_run(spark, tmp_path):
     """`redactions` is its own UDF column: once the caller drops it (job.py,
-    streaming, perfbench, bench.py's text headline), Catalyst prunes the
-    UDF and the one Python stage runs exactly langid, scrub and ppl;
-    deid_json_df keeps it."""
+    streaming, perfbench, bench.py's text headline, scaling_bench.py's
+    timed job), Catalyst prunes the UDF and the one Python stage runs
+    exactly langid, scrub and ppl; deid_json_df keeps it."""
+    import scaling_bench
     from pii_redaction_pipeline_spark.pipeline import (
         PipelineConfig,
         apply_pipeline,
         deid_json_df,
     )
 
-    out = apply_pipeline(_clips_parquet(spark, tmp_path),
-                         PipelineConfig(with_audio_verify=False))
-    assert _python_udfs(plan_of(out.drop("redactions"))) == [
-        ["langid_udf", "_detect_and_scrub", "ppl_udf"]]
+    clips = _clips_parquet(spark, tmp_path)
+    out = apply_pipeline(clips, PipelineConfig(with_audio_verify=False))
+    for job in (out.drop("redactions"), scaling_bench.job_plan(clips)):
+        assert _python_udfs(plan_of(job)) == [
+            ["langid_udf", "_detect_and_scrub", "ppl_udf"]]
     deid = [u for node in _python_udfs(plan_of(deid_json_df(out)))
             for u in node]
     assert "_scrub_redactions" in deid

@@ -2,6 +2,8 @@
 sf0.001, compare row count, column names, and order-insensitive values —
 the same comparison shape the real driver applies at sf0.01."""
 
+import hashlib
+import json
 import math
 import os
 
@@ -70,6 +72,21 @@ def _compare(name, fn, sql, spark, duck):
 def test_query_matches_oracle(name, spark, duck):
     fn, sql = QUERIES[name]
     _compare(name, fn, sql, spark, duck)
+
+
+# Changes only in a change whose CHANGES.md entry names the oracle SQL
+# change: a refactor of the SQL builders must leave every string the same
+# up to whitespace.
+ORACLE_SQL_SHA256 = (
+    "64b3c6f544fe7b3438d8fd5115665c1a5136d9c9c03d218f77580151f94483d7")
+
+
+def test_oracle_sql_fingerprint():
+    collapsed = {name: " ".join(sql.split())
+                 for name, (_, sql) in QUERIES.items() if sql is not None}
+    digest = hashlib.sha256(
+        json.dumps(collapsed, sort_keys=True).encode()).hexdigest()
+    assert digest == ORACLE_SQL_SHA256
 
 
 def test_pipeline_exact_sql_equals_udf_path(spark):

@@ -335,11 +335,10 @@ def test_fuzzy_map_and_centroids_ship_via_broadcast(spark):
     assert sz_cell < 50_000, sz_cell  # 4096x64 float64 alone is 2 MB
 
 
-def test_worker_gc_tuning_applies_and_is_idempotent(monkeypatch):
+def test_worker_gc_tuning_applies_and_is_idempotent():
     """Round-7 worker GC tuning (functions/worker.py): first call
-    collects+freezes+raises thresholds, repeat calls are no-ops, and the
-    env opt-out really opts out. Runs driver-side against the same gc
-    module the workers use."""
+    collects+freezes+raises thresholds, and repeat calls are no-ops.
+    Runs driver-side against the same gc module the workers use."""
     import gc
     import importlib
 
@@ -348,12 +347,6 @@ def test_worker_gc_tuning_applies_and_is_idempotent(monkeypatch):
     saved = gc.get_threshold()
     try:
         importlib.reload(w)
-        monkeypatch.setenv("PII_SPARK_NO_WORKER_GC_TUNE", "1")
-        w.init_worker()
-        assert gc.get_threshold() == saved  # opted out
-
-        importlib.reload(w)
-        monkeypatch.delenv("PII_SPARK_NO_WORKER_GC_TUNE", raising=False)
         w.init_worker()
         assert gc.get_threshold() == (500_000, 100, 100)
         assert gc.get_freeze_count() > 0

@@ -2,6 +2,7 @@
 Python, no Spark. An unchanged archive on sys.path is not re-read by
 importlib.invalidate_caches(); a rewritten one is."""
 
+import gc
 import importlib
 import sys
 import zipfile
@@ -34,8 +35,7 @@ def test_invalidate_caches_skips_unchanged_zip(tmp_path, monkeypatch):
 
     monkeypatch.setattr(zipimport, "_read_directory", counting_read)
     monkeypatch.syspath_prepend(archive)
-    # the guard is installed whatever the GC opt-out says
-    monkeypatch.setenv("PII_SPARK_NO_WORKER_GC_TUNE", "1")
+    saved = gc.get_threshold()  # init_worker also tunes this process's GC
     try:
         # two zipimporters on one archive: its root and the package dir
         assert importlib.import_module(f"{pkg}.a").X == 1
@@ -55,6 +55,8 @@ def test_invalidate_caches_skips_unchanged_zip(tmp_path, monkeypatch):
         assert archive in reads
         assert importlib.import_module(f"{pkg}.b").Y == 2
     finally:
+        gc.set_threshold(*saved)
+        gc.unfreeze()
         for key in [k for k in sys.path_importer_cache if k.startswith(archive)]:
             del sys.path_importer_cache[key]
         for name in [m for m in sys.modules if m.split(".")[0] == pkg]:
